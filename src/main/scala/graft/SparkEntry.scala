@@ -19,6 +19,16 @@ object SparkEntry {
 
   private def t(dir: String, name: String) = s"$dir/$name.parquet"
 
+  /** Joins two per-`l_returnflag` aggregates back into one row per flag.
+    * NULL-safe (`<=>`): GROUP BY keeps a NULL flag as a group of its own on
+    * each side, and a plain equi-join would drop it. One flag column is
+    * kept, as a USING join would.
+    */
+  private def joinOnFlag(a: DataFrame, b: DataFrame): DataFrame =
+    a.as("a")
+      .join(b.as("b"), col("a.l_returnflag") <=> col("b.l_returnflag"))
+      .drop(col("b.l_returnflag"))
+
   /** Scan-parallelism guard for CPU-heavy row-local pipelines (guide §2.5
     * "input skew — one huge unsplittable file": repartition immediately
     * after the read). A small parquet table arrives as ONE scan split
@@ -166,20 +176,17 @@ object SparkEntry {
       // distinct columns in one agg still Expand-triple the input before
       // the exchange; one single-distinct agg per column partial-aggregates
       // map-side with no row multiplication (same values, same rows)
-      val exact = li
-        .groupBy(col("l_returnflag"))
-        .agg(countDistinct(col("l_orderkey")).as("exact_orders"))
-        .join(
-          li.groupBy(col("l_returnflag"))
-            .agg(countDistinct(col("l_partkey")).as("exact_parts")),
-          Seq("l_returnflag"))
+      val exact = joinOnFlag(
+        li.groupBy(col("l_returnflag"))
+          .agg(countDistinct(col("l_orderkey")).as("exact_orders")),
+        li.groupBy(col("l_returnflag"))
+          .agg(countDistinct(col("l_partkey")).as("exact_parts")))
       val sketch = li
         .groupBy(col("l_returnflag"))
         .agg(
           approx_count_distinct(col("l_orderkey"), 0.02).as("a_o"),
           approx_count_distinct(col("l_partkey"), 0.02).as("a_p"))
-      exact
-        .join(sketch, Seq("l_returnflag"))
+      joinOnFlag(exact, sketch)
         .select(
           col("l_returnflag"),
           col("exact_orders"),
@@ -232,8 +239,7 @@ object SparkEntry {
       val parts = li
         .groupBy(col("l_returnflag"))
         .agg(countDistinct(col("l_partkey")).as("n_parts"))
-      orders
-        .join(parts, Seq("l_returnflag"))
+      joinOnFlag(orders, parts)
         .select(col("l_returnflag"), col("n_orders"), col("n_parts"), col("n_rows"))
     }),
     "q_explode_tokens" -> ((s, dir) => {
@@ -1316,7 +1322,10 @@ object SparkEntry {
     // never binds on this corpus, max df 6 vs cap 128); if the corpus ever
     // grows a >128-df boilerplate shingle, a pair diff here is the
     // documented cap, amplified through the component merge — not a code
-    // regression
+    // regression. The diff can go either way: a pair that shares the
+    // dropped boilerplate scores BELOW its true Jaccard and goes missing
+    // (shared shingles leave the numerator and the denominator), while a
+    // pair whose dropped shingles are not shared scores above it
     "q_contamination" ->
       """WITH tok AS (
            SELECT doc_id, string_split(text, ' ') AS w FROM documents),

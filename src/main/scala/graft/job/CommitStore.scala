@@ -37,6 +37,24 @@ trait CommitStore {
   )(implicit spark: SparkSession): Unit
 }
 
+object CommitStore {
+
+  /** One batch's results shaped for its write: hash-partitioned on
+    * commit_group, so each group lands in exactly one write task and every
+    * commit_group=N directory gets one file. The task count is
+    * min(groups in batch, default parallelism): more tasks than cores only
+    * adds waves of tiny tasks, each paying its own attempt-directory setup
+    * and commit.
+    */
+  def shapeForWrite(
+      results: Dataset[ExtractionJob.ResultRow],
+      batch: Seq[Int]
+  )(implicit spark: SparkSession): Dataset[ExtractionJob.ResultRow] = {
+    val tasks = math.min(batch.size, spark.sparkContext.defaultParallelism)
+    results.repartition(math.max(tasks, 1), col("commit_group"))
+  }
+}
+
 /** Parquet stand-in for the production table format (the only format
   * available in this sandbox). Idempotence without table transactions:
   *
@@ -64,9 +82,8 @@ final class ParquetCommitStore(outputDir: String) extends CommitStore {
   )(implicit spark: SparkSession): Unit = {
     import spark.implicits._
     // One shuffle of the (payload-free) results into commit groups: bounds
-    // output file count to ~1 per group instead of numPartitions x groups.
-    results
-      .repartition(math.max(batch.size, 1), col("commit_group"))
+    // output file count to 1 per group instead of numPartitions x groups.
+    CommitStore.shapeForWrite(results, batch)
       .write
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")
@@ -113,7 +130,7 @@ final class IcebergCommitStore(resultsTable: String, lineageTable: String)
       batch: Seq[Int]
   )(implicit spark: SparkSession): Unit = {
     import spark.implicits._
-    val shaped = results.repartition(math.max(batch.size, 1), col("commit_group"))
+    val shaped = CommitStore.shapeForWrite(results, batch)
     if (!spark.catalog.tableExists(resultsTable))
       shaped.writeTo(resultsTable).partitionedBy(col("commit_group")).create()
     else shaped.writeTo(resultsTable).overwritePartitions()

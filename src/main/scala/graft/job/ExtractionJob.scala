@@ -373,6 +373,11 @@ object ExtractionJob {
     * the still-uncommitted groups. On the production Iceberg table the
     * url-hash bucket layout additionally turns the remaining-groups filter
     * into partition pruning.
+    *
+    * Lineage is aggregated ONCE per run, by the job that fills the cache,
+    * and split per batch on the driver (a few rows per commit group), so the
+    * batch loop runs only the stores' writes — not one aggregation over the
+    * whole cache per batch.
     */
   def runCheckpointed(
       pages: DataFrame,
@@ -383,11 +388,14 @@ object ExtractionJob {
 
   /** Store-injected form: the commit/resume protocol is identical for the
     * parquet stand-in and a production Iceberg catalog ([[CommitStore]]).
+    * `phaseSecs` receives the wall seconds of the two phases: `extract`
+    * (the cache-filling lineage job) and `commit` (the batch loop).
     */
   def runCheckpointed(
       pages: DataFrame,
       cfg: JobConfig,
-      store: CommitStore
+      store: CommitStore,
+      phaseSecs: (String, Double) => Unit = (_, _) => ()
   )(implicit spark: SparkSession): Seq[Lineage] = {
     val committed: Set[Int] = store.committedGroups()
 
@@ -407,19 +415,22 @@ object ExtractionJob {
 
     val all = Seq.newBuilder[Lineage]
     try {
+      val t0 = System.nanoTime()
+      val byGroup = lineage(persisted).collect().toSeq.groupBy(_.commit_group)
+      val t1 = System.nanoTime()
+      phaseSecs("extract", (t1 - t0) / 1e9)
       remaining.grouped(cfg.groupsPerCommit).foreach { batch =>
         val subset = persisted.filter(col("commit_group").isInCollection(batch))
-        val computed = lineage(subset).collect().toSeq
         // groups with zero rows still need a commit record, else every
         // resume re-scans them forever (found by CLI resume verification)
-        val empties = batch.toSet -- computed.map(_.commit_group)
-        val lin = computed ++ empties.toSeq.sorted.map(Lineage(_, -1, 0L, 0L, 0L))
+        val lin = batch.flatMap(g => byGroup.getOrElse(g, Seq(Lineage(g, -1, 0L, 0L, 0L))))
         // results first, lineage second (the store contract): a crash
         // between the two leaves replaceable orphans, never a committed
         // group without data
         store.commitBatch(subset, lin, batch)
         all ++= lin
       }
+      phaseSecs("commit", (System.nanoTime() - t1) / 1e9)
     } finally caches.foreach(_.unpersist())
     all.result()
   }

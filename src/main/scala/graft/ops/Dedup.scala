@@ -189,16 +189,23 @@ object Dedup {
     * near-dup structure — default 128 is ~20x the max df of the test corpus.
     * When the cap binds, the computed value is the Jaccard of the
     * LOW-DF shingle sets: numerator AND denominator both count only kept
-    * shingles (the same universe), so a pair that shares ANY low-df content
-    * keeps its full score (an identical pair with some unique shingles stays
-    * at 1.0 however much boilerplate was dropped). The flip side: when the
-    * cap binds, the score can OVERSTATE true Jaccard — two documents that
-    * share a few low-df shingles but are otherwise dominated by dropped
-    * boilerplate lose mass from numerator AND denominator, so the kept-
-    * universe ratio upper-bounds the true one and pairs below the true-
-    * Jaccard threshold can be emitted. Callers needing the uninflated score
-    * must re-verify emitted pairs against full shingle sets (as
-    * [[minhashPairs]] does). The one regime the cap
+    * shingles (the same universe). An identical pair with some low-df
+    * shingles stays at 1.0 however much boilerplate was dropped; any other
+    * pair's score moves, in either direction:
+    *   - it UNDERSTATES true Jaccard when the dropped shingles are shared
+    *     by both documents (common boilerplate, e.g. a site footer): each
+    *     leaves the numerator and the denominator alike, and
+    *     (c-d)/(u-d) < c/u for c < u. True near-dup pairs then fall below the threshold and
+    *     are MISSED. The benchmark's corpus_dedup workload (seed 1, a footer
+    *     above the cap) misses 61 of its 2,000 documents per call this way.
+    *   - it OVERSTATES true Jaccard when the dropped shingles belong to
+    *     only one document of the pair: they leave the denominator only, so
+    *     pairs below the true-Jaccard threshold can be emitted.
+    * Callers needing the true score must re-verify emitted pairs against
+    * full shingle sets (as [[minhashPairs]] does); pairs the cap pushed
+    * below the threshold are not recoverable from the output.
+    *
+    * The one regime the cap
     * excludes ON PURPOSE is a duplicate cluster larger than `maxShingleDf`
     * itself — there EVERY shingle is corpus-common, all postings drop, and
     * no pairs are emitted. That is the mass-duplication regime where k^2

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.Expand
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-contract sanity: the queries/oracle maps must stay consistent —
@@ -36,5 +37,30 @@ class SparkEntrySpec extends AnyFunSuite {
       "q_approx_distinct" // sketch estimates engine-specific
     )
     assert(rowsOnly == expected, s"unexpected rows-only set: ${rowsOnly -- expected} / missing: ${expected -- rowsOnly}")
+  }
+
+  test("split countDistinct joins keep a NULL l_returnflag group, with no Expand") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-nullflag").toString
+    Seq[(Option[String], Long, Long)](
+      (Some("A"), 1L, 10L), (Some("A"), 1L, 11L), (Some("A"), 2L, 10L),
+      (Some("R"), 3L, 12L),
+      (None, 4L, 13L), (None, 5L, 13L), (None, 5L, 14L))
+      .toDF("l_returnflag", "l_orderkey", "l_partkey")
+      .write.parquet(s"$dir/lineitem.parquet")
+    def rows(q: String) = {
+      val df = SparkEntry.queries(q)(spark, dir)
+      val expands = df.queryExecution.optimizedPlan.collect { case e: Expand => e }
+      assert(expands.isEmpty, s"$q plans an Expand")
+      (df.columns.toSeq, df.collect().map(_.toSeq).toSet)
+    }
+    assert(rows("q_distinct_count") == (
+      Seq("l_returnflag", "n_orders", "n_parts", "n_rows"),
+      Set(Seq("A", 2L, 2L, 3L), Seq("R", 1L, 1L, 1L), Seq(null, 2L, 2L, 3L))))
+    assert(rows("q_approx_distinct_gate") == (
+      Seq("l_returnflag", "exact_orders", "exact_parts", "orders_within_tol", "parts_within_tol"),
+      Set(Seq("A", 2L, 2L, true, true), Seq("R", 1L, 1L, true, true),
+        Seq(null, 2L, 2L, true, true))))
   }
 }

@@ -2,11 +2,14 @@ package graft.job
 
 import java.nio.file.Files
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
 import graft.corpus.CorpusGen
-import graft.model.Engines
+import graft.model.{Engines, Lineage}
 
 class CorpusGenSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -281,6 +284,89 @@ class ExtractionJobSpec extends AnyFunSuite {
     assert(acc.value <= 2 * n,
       s"input rows read ${acc.value} must not scale with the 4 commit batches")
     assert(spark.read.parquet(s"$out/results").count() == n)
+  }
+
+  test("write tasks are bounded by cores and every commit group keeps one file") {
+    val out = Files.createTempDirectory("graft-onefile").toString
+    val pages = CorpusGen.pages(spark, 200).toDF()
+    // one batch of 8 groups on a 4-core session: 4 write tasks, 2 groups each
+    val c = cfg.copy(numGroups = 8, groupsPerCommit = 8)
+    val cores = spark.sparkContext.defaultParallelism
+    assert(cores < c.groupsPerCommit)
+    def writeTasks(batch: Seq[Int]) =
+      CommitStore.shapeForWrite(ExtractionJob.extract(pages, c), batch)
+        .queryExecution.logical.collectFirst { case r: RepartitionByExpression => r.optNumPartitions }
+    assert(writeTasks(0 until 8) == Some(Some(cores)))
+    assert(writeTasks(Seq(3)) == Some(Some(1)))
+
+    ExtractionJob.runCheckpointed(pages, c, out)
+    val dirs = new java.io.File(s"$out/results").listFiles()
+      .filter(_.getName.startsWith("commit_group=")).sortBy(_.getName)
+    assert(dirs.length == 8)
+    dirs.foreach { d =>
+      val files = d.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+      assert(files.length == 1, s"${d.getName}: ${files.toSeq}")
+    }
+    assert(spark.read.parquet(s"$out/results").count() == 200)
+  }
+
+  test("a 4-batch run commits exactly the lineage of one aggregation over extract") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-lineage-once").toString
+    val pages = CorpusGen.pages(spark, 200).toDF()
+    val c = cfg.copy(groupsPerCommit = 2) // 8 groups -> 4 commit batches
+    val returned = ExtractionJob.runCheckpointed(pages, c, out)
+    val committed = spark.read.parquet(s"$out/lineage").as[Lineage].collect().toSeq
+    val expected = ExtractionJob.lineage(ExtractionJob.extract(pages, c)).collect().toSeq
+    def multiset(xs: Seq[Lineage]) = xs.groupBy(identity).view.mapValues(_.size).toMap
+    assert(expected.map(_.commit_group).toSet == (0 until 8).toSet)
+    assert(multiset(committed) == multiset(expected))
+    assert(multiset(returned) == multiset(expected))
+  }
+
+  /** Spark jobs started by `f`, counted by job group. A marker job started
+    * after `f` returns drains the listener bus: its start event is handled
+    * only after every event `f`'s jobs posted.
+    */
+  private def jobsStarted(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
+          case `group` => started.incrementAndGet()
+          case `marker` => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus not drained")
+      started.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("lineage is aggregated once per run, not once per commit batch") {
+    val pages = CorpusGen.pages(spark, 120).toDF()
+    // a store that writes nothing: every job the run starts is the run's own
+    val store = new CommitStore {
+      override def committedGroups()(implicit s: SparkSession): Set[Int] = Set.empty
+      override def commitBatch(
+          results: Dataset[ExtractionJob.ResultRow],
+          lineageRows: Seq[Lineage],
+          batch: Seq[Int])(implicit s: SparkSession): Unit = ()
+    }
+    val oneBatch = jobsStarted(ExtractionJob.runCheckpointed(pages, cfg.copy(groupsPerCommit = 8), store))
+    val fourBatches = jobsStarted(ExtractionJob.runCheckpointed(pages, cfg.copy(groupsPerCommit = 2), store))
+    assert(oneBatch > 0)
+    assert(fourBatches == oneBatch, s"4 batches started $fourBatches jobs, 1 batch $oneBatch")
   }
 
   test("forceHeavy routes every successful row through the heavy engine") {
