@@ -15,7 +15,7 @@ import graft.job.{ExtractionJob, ParquetCommitStore}
   *   --output <dir> \
   *   [--threshold 0.85] [--diagnostics] [--force-heavy]
   *   [--max-bytes 524288] [--groups 64] [--groups-per-commit 16]
-  *   [--repartition-input] [--batched-heavy]
+  *   [--repartition-input]
   * graft.Main --status --output <dir>   # resume/status probe (the
   *   reference's ocr_status job table, mcp_server.py:106-254, as a
   *   lineage-table read)
@@ -39,7 +39,6 @@ object Main {
       groups: Int = 64,
       groupsPerCommit: Int = 16,
       repartitionInput: Boolean = false,
-      batchedHeavy: Boolean = false,
       status: Boolean = false,
       prepare: Boolean = false
   )
@@ -55,7 +54,6 @@ object Main {
     case "--groups" :: v :: rest => parse(rest, acc.copy(groups = v.toInt))
     case "--groups-per-commit" :: v :: rest => parse(rest, acc.copy(groupsPerCommit = v.toInt))
     case "--repartition-input" :: rest => parse(rest, acc.copy(repartitionInput = true))
-    case "--batched-heavy" :: rest => parse(rest, acc.copy(batchedHeavy = true))
     case "--status" :: rest => parse(rest, acc.copy(status = true))
     case "--prepare" :: rest => parse(rest, acc.copy(prepare = true))
     case other :: _ => throw new IllegalArgumentException(s"unknown arg: $other")
@@ -76,30 +74,16 @@ object Main {
     spark.sparkContext.setLogLevel("WARN")
 
     if (args.status) {
-      // status probe: committed groups + counters from the lineage table.
-      // Same read policy as runCheckpointed (ExtractionJob.readCommittedGroups):
-      // missing table or data-file-less directory (first-write crash) reads
-      // as fresh; a corrupted table with real data files still surfaces
-      val lin =
-        try spark.read.parquet(s"${args.output}/lineage")
-        catch {
-          case e: org.apache.spark.sql.AnalysisException
-              if e.getErrorClass == "PATH_NOT_FOUND" =>
-            spark.emptyDataFrame
-          case e: org.apache.spark.sql.AnalysisException
-              if e.getErrorClass == "UNABLE_TO_INFER_SCHEMA" &&
-                !graft.job.ExtractionJob.hasDataFiles(s"${args.output}/lineage") =>
-            spark.emptyDataFrame
-        }
-      if (lin.isEmpty) println(s"""{"committed_groups":0,"docs":0,"failures":0}""")
-      else {
+      // status probe: committed groups + counters from the lineage table,
+      // read under the same policy as resume (ExtractionJob.readLineage)
+      val (g, d, f) = ExtractionJob.readLineage(s"${args.output}/lineage").fold((0L, 0L, 0L)) { lin =>
         val row = lin.agg(
-          countDistinct(col("commit_group")).as("g"),
-          sum(col("doc_count")).as("d"),
-          sum(col("failure_count")).as("f")).first()
-        println(
-          s"""{"committed_groups":${row.getLong(0)},"docs":${row.getLong(1)},"failures":${row.getLong(2)}}""")
+          countDistinct(col("commit_group")),
+          coalesce(sum(col("doc_count")), lit(0L)),
+          coalesce(sum(col("failure_count")), lit(0L))).first()
+        (row.getLong(0), row.getLong(1), row.getLong(2))
       }
+      println(s"""{"committed_groups":$g,"docs":$d,"failures":$f}""")
       spark.stop()
       return
     }
@@ -135,8 +119,7 @@ object Main {
       maxBytes = args.maxBytes,
       numGroups = args.groups,
       groupsPerCommit = args.groupsPerCommit,
-      repartitionInput = args.repartitionInput,
-      batchedHeavy = args.batchedHeavy)
+      repartitionInput = args.repartitionInput)
 
     // phase timings (reference: phase_timings map, pipeline.py:86-98)
     val phases = scala.collection.mutable.LinkedHashMap("extract" -> 0.0, "commit" -> 0.0)

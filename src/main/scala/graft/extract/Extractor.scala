@@ -102,16 +102,15 @@ object Extractor {
       Engines.None_, success = false, error = error, diagnostics = None)
 
   /** Whether a fast result must fall through to the heavy engine — THE
-    * heavy-gating predicate, shared by every surface (inline job, batched
-    * job stage split, streaming) so the condition can never diverge.
+    * heavy-gating predicate. Every surface reaches it through
+    * [[extractWithFallback]]; the benchmark's layer metrics call it directly.
     */
   def needsHeavy(doc: DocResult, cfg: Config): Boolean =
     doc.success && (doc.quality.flagged || cfg.forceHeavy)
 
   /** The full per-row flow: fast extraction with inline heavy fallback.
-    * Single definition used by the inline job mode and all streaming
-    * surfaces (the batched job mode splits the same two calls across its
-    * stage barrier via [[needsHeavy]]).
+    * Single definition used by the batch job (its one physical path) and
+    * all streaming surfaces.
     */
   def extractWithFallback(row: RawPage, cfg: Config): DocResult = {
     val fast = fastExtract(row, cfg)

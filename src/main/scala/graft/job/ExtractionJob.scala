@@ -10,27 +10,27 @@ import org.apache.spark.storage.StorageLevel
 import graft.extract.Extractor
 import graft.model._
 
-/** The extraction job: Iceberg/parquet scan -> NARROW mapPartitions fast
-  * extraction on the scan partitions (payloads never shuffle) -> flagged-row
-  * heavy stage over a url-hash rebatch of the small flagged subset ->
-  * union -> results + per-partition lineage, committed in resumable
-  * url-hash checkpoint groups.
+/** The extraction job: Iceberg/parquet scan -> ONE narrow mapPartitions
+  * stage on the scan partitions (fast extraction, flagged rows fall through
+  * to the heavy kernel in place; payloads never shuffle) -> results +
+  * per-partition lineage, committed in resumable url-hash checkpoint groups.
   *
   * Spark re-expression of the reference's two-phase pipeline
-  * (reference: pipeline.py:299-835): Phase-1 worker pool = stage-1 tasks;
-  * the cross-file GPU batch gather (pipeline.py:450-533, batch.py:299-395)
-  * = the flagged-row repartition + mapPartitions stage (batch amortization
-  * via JVM-singleton parser state); the phase barrier = the Spark stage
-  * boundary; per-file error containment (pipeline.py:284-296) = failure
-  * rows + lineage failure counts.
+  * (reference: pipeline.py:299-835): Phase-1 worker pool = stage tasks;
+  * per-file error containment (pipeline.py:284-296) = failure rows +
+  * lineage failure counts. The reference's cross-file Phase-2 batch gather
+  * (pipeline.py:450-533, batch.py:299-395) exists to pay a GPU model load
+  * once; the heavy engine here is a CPU kernel whose state is already
+  * JVM-singleton, so it runs inline and there is one physical path. A
+  * separate rebatched heavy stage comes back only with a batch-served model
+  * engine and a workload where it wins.
   *
   * Shuffle discipline at 10^12 rows: the only full-width data movement is
   * the OPTIONAL input repartition (`repartitionInput`), for scans whose
   * file layout clusters by host (WARC-by-host crawls) — that path salts
-  * skewed hosts explicitly. The default path moves (a) the flagged ~5%
-  * (with payloads) into uniform url-hash batches for the heavy stage and
-  * (b) the extracted results (payload-free) into commit groups at write
-  * time. Everything else is narrow.
+  * skewed hosts explicitly. The default path moves only the extracted
+  * results (payload-free) into commit groups at write time. Everything
+  * else is narrow.
   */
 object ExtractionJob {
 
@@ -43,17 +43,16 @@ object ExtractionJob {
       groupsPerCommit: Int = 16, // commit-batch size
       numPartitions: Int = 0, // 0 -> spark default parallelism
       repartitionInput: Boolean = false, // host-salted input shuffle (skewed scans only)
-      batchedHeavy: Boolean = false, // separate rebatched heavy stage (model-served engines)
-      // B6 memory-aware sub-batching (reference: batch.py split_into_batches):
-      // the batched heavy stage feeds the engine sub-batches whose summed
-      // payload bytes stay under this budget, so one partition of oversized
-      // flagged payloads can never be materialized as a single engine call
-      maxHeavyBatchBytes: Long = 64L * 1024 * 1024,
       skewSalts: Int = 16, // salt fan-out for skewed hosts
       skewSampleFraction: Double = 0.01, // host-frequency detection sample
       skewHostShare: Double = 0.05, // host is "skewed" above this row share
       maxKernelSteps: Long = 64L * 1024 * 1024 // B3 per-row work budget
   ) {
+    // an empty commit layout would commit nothing (numGroups) or fail only
+    // after the whole extract job ran (groupsPerCommit): reject it up front
+    require(numGroups >= 1, s"numGroups must be >= 1, got $numGroups")
+    require(groupsPerCommit >= 1, s"groupsPerCommit must be >= 1, got $groupsPerCommit")
+
     def extractorConfig: Extractor.Config = Extractor.Config(
       threshold = threshold,
       diagnostics = diagnostics,
@@ -62,22 +61,6 @@ object ExtractionJob {
       maxKernelSteps = maxKernelSteps
     )
   }
-
-  /** Stage-1 output row. `html` is retained ONLY for rows that need the
-    * heavy stage (reference keeps flagged pages for Phase 2,
-    * batch.py:299-342) — the unflagged majority sheds its payload before any
-    * shuffle, which is what keeps the heavy stage's input small at scale.
-    */
-  final case class FastRow(
-      doc: DocResult,
-      commit_group: Int,
-      partition_id: Int,
-      needsHeavy: Boolean,
-      html: Array[Byte],
-      text: String,
-      lang: String,
-      warc_ts: Timestamp
-  )
 
   final case class KeyedPage(
       url: String,
@@ -101,32 +84,28 @@ object ExtractionJob {
       partition_id: Int
   )
 
-  /** Committed commit groups from the lineage table. ONLY two states read
-    * as "fresh run": the table is missing (PATH_NOT_FOUND), or the
-    * directory exists with NO data files — a crash during the very first
-    * lineage write leaves `_temporary`/marker entries only, and treating
-    * the resulting UNABLE_TO_INFER_SCHEMA as fatal would make that crash
-    * permanently unrecoverable (the results write is idempotent, so redoing
-    * is safe). Any OTHER read failure — a corrupted table with real data
-    * files — still surfaces: silently redoing committed work would append
-    * duplicate lineage rows.
+  /** The lineage table, or None for a fresh run. ONLY two states read as
+    * "fresh": the table is missing, or the directory exists with NO data
+    * files — a crash during the very first lineage write leaves
+    * `_temporary`/marker entries only, and treating that as fatal would make
+    * the crash permanently unrecoverable (the results write is idempotent,
+    * so redoing is safe). A table with real data files that fails to read —
+    * corruption — still surfaces: silently redoing committed work would
+    * append duplicate lineage rows. The one read policy for every lineage
+    * reader (resume, `Main --status`, `PrepareJob`).
     */
+  def readLineage(lineagePath: String)(implicit spark: SparkSession): Option[DataFrame] =
+    if (hasDataFiles(lineagePath)) Some(spark.read.parquet(lineagePath)) else None
+
+  /** Committed commit groups from the lineage table ([[readLineage]]). */
   def readCommittedGroups(lineagePath: String)(implicit spark: SparkSession): Set[Int] =
-    try spark.read.parquet(lineagePath).select("commit_group").distinct()
-      .collect().map(_.getInt(0)).toSet
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getErrorClass == "PATH_NOT_FOUND" =>
-        Set.empty
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getErrorClass == "UNABLE_TO_INFER_SCHEMA" && !hasDataFiles(lineagePath) =>
-        Set.empty
-    }
+    readLineage(lineagePath).fold(Set.empty[Int])(
+      _.select("commit_group").distinct().collect().map(_.getInt(0)).toSet)
 
   /** True if the directory holds at least one non-hidden data file
     * (Hadoop FS — works for local and distributed paths alike).
     */
-  private[graft] def hasDataFiles(path: String)(implicit spark: SparkSession): Boolean = {
+  private def hasDataFiles(path: String)(implicit spark: SparkSession): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def visible(n: String) = !n.startsWith("_") && !n.startsWith(".")
@@ -210,131 +189,25 @@ object ExtractionJob {
     if (cfg.numPartitions > 0) cfg.numPartitions else spark.sparkContext.defaultParallelism
 
   /** Fast extraction + heavy fallback over (a batch of) the input. Pure
-    * transformation — no writes.
-    *
-    * Two physical modes, identical results:
-    *   - inline (default): ONE narrow mapPartitions stage — fast extract,
-    *     and flagged rows fall through to the heavy kernel in place. Right
-    *     whenever the heavy engine is a CPU kernel whose state is already
-    *     JVM-singleton: zero shuffles, zero caching, scales linearly.
-    *   - batchedHeavy: the reference's phase structure (pipeline.py:441-533)
-    *     — flagged rows (payloads kept) are REBATCHED by url-hash into
-    *     uniform partitions and run through a separate mapPartitions stage.
-    *     Right when the heavy engine has expensive per-process state (a
-    *     served model) whose loads must be amortized over large uniform
-    *     batches, or when flag-rate skew would starve inline tasks.
+    * transformation — no writes. ONE narrow mapPartitions stage: fast
+    * extract, and flagged rows fall through to the heavy kernel in place
+    * ([[Extractor.extractWithFallback]]) — zero shuffles, zero caching,
+    * payloads never leave their scan partition.
     */
   def extract(
       pages: DataFrame,
       cfg: JobConfig,
       skewedHosts: Set[String] = Set.empty,
-      groups: Option[Seq[Int]] = None,
-      cacheRegistry: scala.collection.mutable.Buffer[Dataset[_]] = null
+      groups: Option[Seq[Int]] = None
   )(implicit spark: SparkSession): Dataset[ResultRow] = {
     import spark.implicits._
     val exCfg = cfg.extractorConfig
-    val input = keyed(pages, cfg, skewedHosts, groups)
-
-    if (!cfg.batchedHeavy) {
-      // Inline mode: single narrow stage, payloads never leave their
-      // scan/generation partition.
-      return input.mapPartitions { it =>
-        val pid = TaskContext.getPartitionId()
-        it.map { p =>
-          val raw = RawPage(p.url, p.warc_ts, p.html, p.text, p.lang)
-          toResult(Extractor.extractWithFallback(raw, exCfg), p.commit_group, pid)
-        }
-      }
-    }
-
-    // Batched mode below.
-    // Stage 1: fast path. Parser/wordlist state is JVM-singleton (object
-    // initializers + lazy vals), instantiated once per executor and amortized
-    // across every row of every partition (reference: model_cache.py:25-179
-    // TTL cache -> executor-lifetime cache).
-    val fast: Dataset[FastRow] = input.mapPartitions { it =>
+    keyed(pages, cfg, skewedHosts, groups).mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
       it.map { p =>
         val raw = RawPage(p.url, p.warc_ts, p.html, p.text, p.lang)
-        val doc = Extractor.fastExtract(raw, exCfg)
-        val needsHeavy = Extractor.needsHeavy(doc, exCfg)
-        FastRow(
-          doc, p.commit_group, pid, needsHeavy,
-          if (needsHeavy) p.html else null,
-          if (needsHeavy) p.text else null,
-          p.lang, p.warc_ts)
+        toResult(Extractor.extractWithFallback(raw, exCfg), p.commit_group, pid)
       }
-    }
-
-    // Phase barrier analogue: persist so the good/heavy split doesn't
-    // recompute extraction. Serialized, spills to disk; unflagged rows have
-    // already dropped their payload so the cached footprint ~= output size.
-    // The handle is registered so the caller can unpersist it once the
-    // returned (lazy) result has been materialized.
-    val persisted = fast.persist(StorageLevel.MEMORY_AND_DISK_SER)
-    if (cacheRegistry != null) cacheRegistry += persisted
-
-    val good = persisted
-      .filter(!_.needsHeavy)
-      .map(r => toResult(r.doc, r.commit_group, r.partition_id))
-
-    // Stage 2: heavy re-segmentation of still-flagged rows only (selective
-    // reprocessing, pipeline.py:451). The flagged subset (~5-10% of rows,
-    // still carrying payloads) is REBATCHED by url-hash into uniform
-    // partitions before the expensive kernel — the Spark form of the
-    // reference's cross-file batch gather (batch.py:299-395): flagged work
-    // is redistributed so stragglers from uneven flag rates can't pin tasks.
-    val heavy = persisted
-      .filter(_.needsHeavy)
-      .repartition(partitions(cfg), xxhash64(col("doc.url")))
-      .mapPartitions { it =>
-        val pid = TaskContext.getPartitionId()
-        // B6: byte-budgeted sub-batches — the unit a batch-served engine
-        // (the reference's GPU model, batch.py:299-395) receives per call.
-        // The CPU kernel applies per row within the chunk; chunk boundaries
-        // never affect results (mode-equivalence tested).
-        byteBatches[FastRow](
-          it,
-          r => (if (r.html == null) 0L else r.html.length.toLong) +
-            (if (r.text == null) 0L else 2L * r.text.length),
-          cfg.maxHeavyBatchBytes
-        ).flatMap { chunk =>
-          chunk.iterator.map { r =>
-            val raw = RawPage(r.doc.url, r.warc_ts, r.html, r.text, r.lang)
-            val doc = Extractor.heavyExtract(raw, r.doc, exCfg)
-            toResult(doc, r.commit_group, pid)
-          }
-        }
-      }
-
-    good.union(heavy)
-  }
-
-  /** Greedy byte-budgeted chunking of a row iterator: each chunk holds at
-    * least one row and otherwise stops before its summed `bytesOf` exceeds
-    * `maxBytes`. Order-preserving; never buffers more than one chunk.
-    */
-  private[job] def byteBatches[T](
-      it: Iterator[T],
-      bytesOf: T => Long,
-      maxBytes: Long
-  ): Iterator[Seq[T]] = new Iterator[Seq[T]] {
-    private val in = it.buffered
-    override def hasNext: Boolean = in.hasNext
-    override def next(): Seq[T] = {
-      val chunk = Seq.newBuilder[T]
-      var used = 0L
-      var n = 0
-      var done = false
-      while (!done && in.hasNext) {
-        val size = bytesOf(in.head)
-        if (n == 0 || used + size <= maxBytes) {
-          chunk += in.next()
-          used += size
-          n += 1
-        } else done = true
-      }
-      chunk.result()
     }
   }
 
@@ -366,8 +239,7 @@ object ExtractionJob {
     * idempotency, pipeline.py:801-812).
     *
     * The input is scanned ONCE for all remaining groups: extraction results
-    * (payload-free — unflagged rows shed payloads inside the extract stage)
-    * are persisted, and each commit batch filters the CACHE, so input scans
+    * (payload-free) are persisted, and each commit batch filters the CACHE, so input scans
     * do not grow with batch count (O(corpus), not O(batches x corpus)). A
     * crash mid-run loses only the cache; the resumed run re-scans once for
     * the still-uncommitted groups. On the production Iceberg table the
@@ -404,14 +276,10 @@ object ExtractionJob {
     val skewed =
       if (cfg.repartitionInput) detectSkewedHosts(pages, cfg) else Set.empty[String]
 
-    // every dataset the run caches (incl. the batched-heavy mode's internal
-    // FastRow persist) is registered and released at the end via its Dataset
-    // handle — raw-RDD unpersist would leak CacheManager entries and turn
-    // same-plan re-persists into no-ops
-    val caches = scala.collection.mutable.Buffer.empty[Dataset[_]]
-    val results = extract(pages, cfg, skewed, Some(remaining), caches)
-    val persisted = results.persist(StorageLevel.MEMORY_AND_DISK_SER)
-    caches += persisted
+    // released through its Dataset handle: raw-RDD unpersist would leak the
+    // CacheManager entry and turn a same-plan re-persist into a no-op
+    val persisted = extract(pages, cfg, skewed, Some(remaining))
+      .persist(StorageLevel.MEMORY_AND_DISK_SER)
 
     val all = Seq.newBuilder[Lineage]
     try {
@@ -431,7 +299,7 @@ object ExtractionJob {
         all ++= lin
       }
       phaseSecs("commit", (System.nanoTime() - t1) / 1e9)
-    } finally caches.foreach(_.unpersist())
+    } finally persisted.unpersist()
     all.result()
   }
 

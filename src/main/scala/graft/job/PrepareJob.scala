@@ -42,18 +42,13 @@ object PrepareJob {
     }
   }
 
-  /** The committed lineage, or None when absent. Existence is probed on the
-    * filesystem first (missing dir, empty dir and marker-only dir all read
-    * as "no commit" — the first-write-crash shapes); a lineage dir with
-    * real data files that fails to READ stays loud, surfacing corruption
-    * instead of silently redoing and overwriting the previous run.
+  /** The committed lineage, or None when absent or empty — the extraction
+    * job's read policy ([[ExtractionJob.readLineage]]): a corrupted lineage
+    * dir stays loud instead of silently redoing and overwriting the
+    * previous run.
     */
   private def readLineage(path: String)(implicit spark: SparkSession): Option[DataFrame] =
-    if (!ExtractionJob.hasDataFiles(path)) None
-    else {
-      val df = spark.read.parquet(path)
-      if (df.isEmpty) None else Some(df)
-    }
+    ExtractionJob.readLineage(path).filterNot(_.isEmpty)
 
   /** Lineage rollup-row marker (never a real split name). */
   private val AllRow = "__all__"

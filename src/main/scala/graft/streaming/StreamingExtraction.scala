@@ -18,12 +18,14 @@ import graft.model.{DocResult, RawPage}
   * stateless per-row kernel, so the batch and streaming paths share ALL
   * logic — a streaming micro-batch produces byte-identical rows to the batch
   * job on the same input (tested), and exactly-once delivery comes from the
-  * sink checkpoint instead of the batch lineage table.
+  * sink checkpoint instead of the batch lineage table. The batch job has one
+  * physical path — inline heavy fallback — and every streaming surface runs
+  * exactly that path ([[Extractor.extractWithFallback]]).
   */
 object StreamingExtraction {
 
-  /** Stateless streaming transformation: RawPage stream -> DocResult stream.
-    * Inline heavy fallback only (a shuffle barrier has no place mid-stream).
+  /** Stateless streaming transformation: RawPage stream -> DocResult stream,
+    * with the batch job's inline heavy fallback.
     */
   def extract(pages: DataFrame, cfg: ExtractionJob.JobConfig)(
       implicit spark: SparkSession): Dataset[DocResult] = {
@@ -158,38 +160,6 @@ object StreamingExtraction {
           }
         })
   }
-
-  /** Streaming form of the batched-heavy phase structure (VERDICT r3 #9).
-    *
-    * The inline streaming path ([[extract]]) deliberately avoids a shuffle
-    * barrier mid-stream — but the batch engine's two-stage mode
-    * (`ExtractionJob.extract` with `batchedHeavy = true`: fast pass →
-    * persist → rebatch flagged payloads by url-hash → heavy stage) is still
-    * reachable from a stream, because the MICRO-BATCH IS THE PHASE BARRIER:
-    * `foreachBatch` hands each trigger's data over as a plain DataFrame,
-    * and the unmodified batch operator runs inside it, shuffles and all.
-    * Use this when the heavy engine is batch-served (amortized model loads)
-    * and the ingestion is continuous; use [[extract]] when the heavy kernel
-    * is a cheap CPU fallback. Results are byte-identical to the batch job
-    * on the same input (tested) — the kernels are row-local, so batch
-    * boundaries can't affect them.
-    *
-    * The caller provides the per-micro-batch sink (idempotent by `batchId`
-    * for exactly-once, as usual with `foreachBatch`); internal caches from
-    * the batched-heavy persist are released after each sink call.
-    */
-  def batchedExtractWriter(
-      pages: DataFrame,
-      cfg: ExtractionJob.JobConfig,
-      sink: (Dataset[ExtractionJob.ResultRow], Long) => Unit
-  )(implicit spark: SparkSession): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    pages.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      val caches = scala.collection.mutable.Buffer.empty[Dataset[_]]
-      val results = ExtractionJob.extract(
-        batch.toDF(), cfg.copy(batchedHeavy = true), cacheRegistry = caches)(spark)
-      try sink(results, batchId)
-      finally caches.foreach(_.unpersist())
-    }
 
   private def md5Hex(md: java.security.MessageDigest, s: String): String = {
     md.reset()

@@ -5,6 +5,9 @@ import java.nio.file.Files
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -188,7 +191,7 @@ class ExtractionJobSpec extends AnyFunSuite {
     assert(skewed == Set("skew.example.com"), s"got $skewed")
   }
 
-  test("results are independent of parallelism, salting and heavy mode (plan-only knobs)") {
+  test("results are independent of parallelism and salting (plan-only knobs)") {
     val pages = CorpusGen.pages(spark, 100).toDF()
     def run(c: ExtractionJob.JobConfig, hosts: Set[String]) =
       ExtractionJob.extract(pages, c, hosts)
@@ -198,9 +201,7 @@ class ExtractionJobSpec extends AnyFunSuite {
     val r2 = run(
       cfg.copy(numPartitions = 7, skewSalts = 3, repartitionInput = true),
       Set("host0.example"))
-    val r3 = run(cfg.copy(numPartitions = 5, batchedHeavy = true), Set.empty)
     assert(r1 == r2)
-    assert(r1 == r3, "inline and batched heavy modes must produce identical results")
   }
 
   test("diagnostics survive the parquet sink roundtrip") {
@@ -228,10 +229,13 @@ class ExtractionJobSpec extends AnyFunSuite {
 
   test("a lineage dir with no data files (first-write crash) reads as fresh") {
     val out = Files.createTempDirectory("graft-emptylineage")
+    // the one read policy: a missing table reads as fresh
+    assert(ExtractionJob.readLineage(s"$out/lineage").isEmpty)
     // simulate a crash during the FIRST lineage write: directory exists,
     // only hidden/marker entries inside (no data files)
     Files.createDirectories(out.resolve("lineage"))
     Files.write(out.resolve("lineage/_started"), Array[Byte](1))
+    assert(ExtractionJob.readLineage(s"$out/lineage").isEmpty)
     val pages = CorpusGen.pages(spark, 60).toDF()
     val c = cfg.copy(numGroups = 4, groupsPerCommit = 4)
     val lin = ExtractionJob.runCheckpointed(pages, c, out.toString)
@@ -242,33 +246,11 @@ class ExtractionJobSpec extends AnyFunSuite {
     Files.createDirectories(out2.resolve("lineage"))
     Files.write(out2.resolve("lineage/part-00000.parquet"), "not parquet".getBytes)
     intercept[Exception] {
+      ExtractionJob.readLineage(s"$out2/lineage").foreach(_.collect())
+    }
+    intercept[Exception] {
       ExtractionJob.runCheckpointed(pages, c, out2.toString)
     }
-  }
-
-  test("B6: byte-budgeted sub-batching bounds chunks and never changes results") {
-    // chunker unit behavior: order kept, >=1 row per chunk, budget respected
-    val rows = Seq(10L, 20L, 5L, 100L, 1L, 1L, 50L)
-    val chunks = ExtractionJob.byteBatches[Long](rows.iterator, identity, 30L).toSeq
-    assert(chunks.flatten == rows, "order must be preserved")
-    assert(chunks.forall(_.nonEmpty))
-    chunks.foreach { c =>
-      assert(c.map(identity[Long]).sum <= 30L || c.size == 1,
-        s"chunk over budget with >1 row: $c")
-    }
-    assert(chunks.exists(_.size > 1), "budget should coalesce small rows")
-    // an oversized single row still travels (alone)
-    assert(chunks.exists(c => c == Seq(100L)))
-
-    // end-to-end: a 1-byte budget (every chunk = one row) and the default
-    // budget produce identical batched-heavy results
-    val pages = CorpusGen.pages(spark, 100).toDF()
-    def run(c: ExtractionJob.JobConfig) =
-      ExtractionJob.extract(pages, c).collect()
-        .map(r => (r.url, r.extracted_text, r.engine)).sortBy(_._1).toSeq
-    val tiny = run(cfg.copy(batchedHeavy = true, maxHeavyBatchBytes = 1L))
-    val big = run(cfg.copy(batchedHeavy = true))
-    assert(tiny == big)
   }
 
   test("input is scanned once across commit batches, not once per batch") {
@@ -367,6 +349,37 @@ class ExtractionJobSpec extends AnyFunSuite {
     val fourBatches = jobsStarted(ExtractionJob.runCheckpointed(pages, cfg.copy(groupsPerCommit = 2), store))
     assert(oneBatch > 0)
     assert(fourBatches == oneBatch, s"4 batches started $fourBatches jobs, 1 batch $oneBatch")
+  }
+
+  test("an empty commit layout is rejected before any Spark job starts") {
+    val jobs = jobsStarted {
+      intercept[IllegalArgumentException](ExtractionJob.JobConfig(numGroups = 0))
+      intercept[IllegalArgumentException](cfg.copy(groupsPerCommit = 0))
+    }
+    assert(jobs == 0)
+  }
+
+  test("the default extract plan is one narrow stage: no Exchange, no cache") {
+    val results = ExtractionJob.extract(CorpusGen.pages(spark, 60).toDF(), ExtractionJob.JobConfig())
+    assert(results.collect().length == 60)
+    val plan = results.queryExecution.executedPlan
+    // the helper walks into adaptive query stages, where a shuffle or a
+    // cache scan (an InMemoryRelation) sits after execution
+    object Stages extends AdaptiveSparkPlanHelper
+    val offending = Stages.collectWithSubqueries(plan) {
+      case p: Exchange => p.nodeName
+      case p: InMemoryTableScanExec => p.nodeName
+    }
+    assert(offending.isEmpty, s"executed plan:\n$plan")
+  }
+
+  test("a 4-batch checkpointed run leaves nothing cached") {
+    // start from an empty cache so only this run's entries can show
+    spark.catalog.clearCache()
+    val out = Files.createTempDirectory("graft-uncached").toString
+    ExtractionJob.runCheckpointed(CorpusGen.pages(spark, 120).toDF(), cfg.copy(groupsPerCommit = 2), out)
+    assert(spark.read.parquet(s"$out/results").count() == 120)
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("forceHeavy routes every successful row through the heavy engine") {

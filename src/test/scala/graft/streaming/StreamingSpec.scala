@@ -211,45 +211,4 @@ class StreamingSpec extends AnyFunSuite {
     // failure classes 15-18 = 4/20 of rows
     assert(out.map(_.getAs[Long]("failures")).sum == 40)
   }
-
-  test("foreachBatch batched-heavy stream is byte-identical to the batch job") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    // two micro-batches: the phase barrier (fast -> persist -> rebatch ->
-    // heavy) runs per micro-batch inside foreachBatch; content parity with
-    // one batched-heavy batch run over the union proves the barrier
-    // placement is result-neutral
-    val rows = (0L until 80L).map(CorpusGen.genRow(42L, _))
-    val stream = MemoryStream[RawPage]
-    stream.addData(rows.take(40))
-    stream.addData(rows.drop(40))
-
-    val acc = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, String, Boolean, Double)]()
-    val q = StreamingExtraction
-      .batchedExtractWriter(
-        stream.toDF(),
-        cfg,
-        (res, _) =>
-          res.collect().foreach(r =>
-            acc.add((r.url, r.extracted_text, r.engine, r.success, r.quality.score))))
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    val streamed = {
-      import scala.jdk.CollectionConverters._
-      acc.iterator().asScala.toSeq.sortBy(_._1)
-    }
-    val batch = ExtractionJob
-      .extract(CorpusGen.pages(spark, 80).toDF(), cfg.copy(batchedHeavy = true))
-      .collect().map(r => (r.url, r.extracted_text, r.engine, r.success, r.quality.score))
-      .sortBy(_._1).toSeq
-
-    assert(streamed.size == 80)
-    assert(streamed == batch)
-    // the heavy stage must actually have fired in-stream for the parity to
-    // mean anything: the corpus plants classes that flag
-    assert(streamed.exists(r => r._3 == graft.model.Engines.Heavy || r._3 == graft.model.Engines.Mixed))
-  }
 }
