@@ -3,10 +3,9 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.corpus.CorpusGen
 import graft.job.ExtractionJob
+import graft.tools.LocalSession
 
 /** Two-cluster-size scaling evidence (BASELINE.json north rule: throughput
   * scaling efficiency >= 0.8 from N to 4N executors).
@@ -35,12 +34,7 @@ object ScalingBench {
       rows: Long,
       salted: Boolean = false,
       mixedCase: Boolean = false): Double = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try {
       import org.apache.spark.sql.functions._
@@ -68,7 +62,6 @@ object ScalingBench {
       val n = ExtractionJob.extract(pages, cfg, skewed)(spark).count()
       val secs = (System.nanoTime() - t0) / 1e9
       require(n == rows, s"row count $n != $rows")
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
       secs
     } finally spark.stop()
   }
@@ -83,11 +76,7 @@ object ScalingBench {
     * Returns (tableSecs, warcSecs, archiveCount, archiveBytes).
     */
   private def warcIngestOnce(cpus: Int, rows: Long): (Double, Double, Int, Long) = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = LocalSession.builder(cpus)
       // scan-parallelism equalization: at 100 TB a parquet scan yields
       // thousands of tasks, but the default 128 MB maxPartitionBytes
       // packs this probe's ~300 MB table into ~6 read tasks (measured:
@@ -126,7 +115,7 @@ object ScalingBench {
         val pqDir = dir.resolve("table.parquet")
         CorpusGen.pages(spark, rows, partitions = cpus * 4).toDF()
           .write.mode("overwrite").parquet(pqDir.toString)
-        val cfg = ExtractionJob.JobConfig(numGroups = 64, numPartitions = cpus * 4)
+        val cfg = ExtractionJob.JobConfig(numGroups = 64)
         def timed(pages: org.apache.spark.sql.DataFrame): Double = {
           val t0 = System.nanoTime()
           val n = ExtractionJob.extract(pages, cfg)(spark).count()

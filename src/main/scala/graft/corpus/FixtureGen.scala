@@ -6,6 +6,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
 import graft.job.ExtractionJob
+import graft.tools.LocalSession
 
 /** One-shot golden-fixture generator (the reference's corpus-baseline
   * discipline, tests/corpus/baselines/: outputs are generated once, hand
@@ -41,11 +42,7 @@ object FixtureGen {
   def main(args: Array[String]): Unit = {
     val out = Paths.get(
       if (args.nonEmpty) args(0) else "src/test/resources/fixtures")
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    implicit val spark: SparkSession = LocalSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val pages = CorpusGen.pages(spark, Rows).toDF()

@@ -41,7 +41,7 @@ object ExtractionJob {
       maxBytes: Int = 512 * 1024,
       numGroups: Int = 64, // commit groups (url-hash buckets); resume unit
       groupsPerCommit: Int = 16, // commit-batch size
-      numPartitions: Int = 0, // 0 -> spark default parallelism
+      numPartitions: Int = 0, // salted-shuffle width (repartitionInput only); 0 -> default
       repartitionInput: Boolean = false, // host-salted input shuffle (skewed scans only)
       skewSalts: Int = 16, // salt fan-out for skewed hosts
       skewSampleFraction: Double = 0.01, // host-frequency detection sample

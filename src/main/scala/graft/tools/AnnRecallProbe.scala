@@ -13,9 +13,7 @@ object AnnRecallProbe {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
     else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master("local[8]").config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    implicit val spark: SparkSession = LocalSession.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     for (dir <- dirs) {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")

@@ -1,26 +1,19 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Isolated per-query benchmark (guide §1.4 noop-sink isolation) — the
-  * round-7 optimization loop's measurement harness. Times ONLY the named
-  * queries (args), `SPARK_GRAFT_REPS` reps each (default 3), same session
-  * configuration as `graft.Bench` (which stays frozen as the driver's
-  * harness), and prints one JSON line with every raw sample so min/median
-  * and spread are both visible. Not part of the driver contract.
+/** Isolated per-query benchmark (guide §1.4 noop-sink isolation). Times
+  * ONLY the named queries (args), `SPARK_GRAFT_REPS` reps each (default 3),
+  * same session configuration as `graft.Bench` (which stays frozen as the
+  * driver's harness), and prints one JSON line with every raw sample so
+  * min/median and spread are both visible. A cross-build A/B runs this main
+  * on two builds in alternating pairs, so both sides share the host's
+  * throttle windows. Not part of the driver contract.
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def run(df: org.apache.spark.sql.DataFrame): Unit =

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.corpus.CorpusGen
 import graft.job.ExtractionJob
 
@@ -22,15 +20,10 @@ import graft.job.ExtractionJob
 object ContentionProbe {
 
   private def once(cpus: Int, rows: Long): (Double, Double, Double) = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try {
-      val cfg = ExtractionJob.JobConfig(numGroups = 64, numPartitions = cpus * 4)
+      val cfg = ExtractionJob.JobConfig(numGroups = 64)
       val pages = CorpusGen.pages(spark, rows, partitions = cpus * 4).toDF()
       val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .asInstanceOf[com.sun.management.OperatingSystemMXBean]

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints the flagship digest-gate rows (`q_extract_pipeline_gate` /
   * `q_extract_summary_gate`). The digests are constants of the seeded
   * CorpusGen corpus; when a kernel change intentionally shifts extraction
@@ -11,9 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 object GateDigest {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Seq("q_extract_pipeline_gate", "q_extract_summary_gate").foreach { q =>
       val row = graft.SparkEntry.queries(q)(spark, "unused").head()

@@ -271,13 +271,7 @@ object ParityExport {
     val wordlistPath =
       if (args.length > 3) args(3)
       else "/root/reference/src/scholardoc_ocr/data/wordlist.txt"
-    val spark = SparkSession
-      .builder()
-      .master("local[8]")
-      .appName("graft-parity-export")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
       val ds = export(spark, sfDir, nSynthetic, wordlistPath)

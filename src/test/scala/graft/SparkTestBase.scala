@@ -2,16 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.tools.LocalSession
+
 /** One shared local SparkSession for the whole forked test JVM. */
 object SparkTestBase {
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession.builder(4).getOrCreate()
   spark.sparkContext.setLogLevel("WARN")
 }

@@ -3,7 +3,7 @@ package graft.job
 import java.nio.file.Files
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -193,8 +193,8 @@ class ExtractionJobSpec extends AnyFunSuite {
 
   test("results are independent of parallelism and salting (plan-only knobs)") {
     val pages = CorpusGen.pages(spark, 100).toDF()
-    def run(c: ExtractionJob.JobConfig, hosts: Set[String]) =
-      ExtractionJob.extract(pages, c, hosts)
+    def run(c: ExtractionJob.JobConfig, hosts: Set[String], in: DataFrame = pages) =
+      ExtractionJob.extract(in, c, hosts)
         .collect().map(r => (r.url, r.extracted_text, r.engine, r.quality.score))
         .sortBy(_._1).toSeq
     val r1 = run(cfg.copy(numPartitions = 1), Set.empty)
@@ -202,6 +202,13 @@ class ExtractionJobSpec extends AnyFunSuite {
       cfg.copy(numPartitions = 7, skewSalts = 3, repartitionInput = true),
       Set("host0.example"))
     assert(r1 == r2)
+    // the default (narrow) path keeps the input's partitioning, so vary it
+    assert(ExtractionJob.extract(pages.repartition(7), cfg).rdd.getNumPartitions == 7)
+    val narrow1 = run(cfg, Set.empty, pages.repartition(1))
+    val narrow7 = run(cfg, Set.empty, pages.repartition(7))
+    assert(narrow1.size == 100)
+    assert(narrow1 == narrow7)
+    assert(narrow1 == r1)
   }
 
   test("diagnostics survive the parquet sink roundtrip") {
