@@ -14,8 +14,9 @@ import graft.job.{ExtractionJob, ParquetCommitStore}
   *   --input <parquet/iceberg path | synth:<rows> | warc:<path-glob>> \
   *   --output <dir> \
   *   [--threshold 0.85] [--diagnostics] [--force-heavy]
-  *   [--max-bytes 524288] [--groups 64] [--groups-per-commit 16]
-  *   [--repartition-input]
+  *   [--max-bytes 524288]
+  *   [--groups N (default: sized to input, 64 if unknown)]
+  *   [--groups-per-commit 16] [--repartition-input]
   * graft.Main --status --output <dir>   # resume/status probe (the
   *   reference's ocr_status job table, mcp_server.py:106-254, as a
   *   lineage-table read)
@@ -24,6 +25,13 @@ import graft.job.{ExtractionJob, ParquetCommitStore}
   *   # train/val/test split (graft.job.PrepareJob), survivors written
   *   # partitionBy(split) with a write-then-commit lineage table
   * }}}
+  *
+  * The commit layout (`num_groups`, the url-hash group count) is sized to
+  * the input: one group per 512 MB of scanned files
+  * (`ExtractionJob.numGroupsFor`), 64 when the input's size is unknown
+  * (`synth:`, `warc:`). The run records it in its lineage; a resumed run
+  * and `--status` read it back, and a `--groups` that contradicts it fails
+  * before anything is extracted or written.
   *
   * Exit code 0 iff no failure rows (cli.py:404 contract).
   */
@@ -36,7 +44,7 @@ object Main {
       diagnostics: Boolean = false,
       forceHeavy: Boolean = false,
       maxBytes: Int = 512 * 1024,
-      groups: Int = 64,
+      groups: Option[Int] = None,
       groupsPerCommit: Int = 16,
       repartitionInput: Boolean = false,
       status: Boolean = false,
@@ -51,7 +59,7 @@ object Main {
     case "--diagnostics" :: rest => parse(rest, acc.copy(diagnostics = true))
     case "--force-heavy" :: rest => parse(rest, acc.copy(forceHeavy = true))
     case "--max-bytes" :: v :: rest => parse(rest, acc.copy(maxBytes = v.toInt))
-    case "--groups" :: v :: rest => parse(rest, acc.copy(groups = v.toInt))
+    case "--groups" :: v :: rest => parse(rest, acc.copy(groups = Some(v.toInt)))
     case "--groups-per-commit" :: v :: rest => parse(rest, acc.copy(groupsPerCommit = v.toInt))
     case "--repartition-input" :: rest => parse(rest, acc.copy(repartitionInput = true))
     case "--status" :: rest => parse(rest, acc.copy(status = true))
@@ -74,16 +82,21 @@ object Main {
     spark.sparkContext.setLogLevel("WARN")
 
     if (args.status) {
-      // status probe: committed groups + counters from the lineage table,
-      // read under the same policy as resume (ExtractionJob.readLineage)
-      val (g, d, f) = ExtractionJob.readLineage(s"${args.output}/lineage").fold((0L, 0L, 0L)) { lin =>
-        val row = lin.agg(
-          countDistinct(col("commit_group")),
-          coalesce(sum(col("doc_count")), lit(0L)),
-          coalesce(sum(col("failure_count")), lit(0L))).first()
-        (row.getLong(0), row.getLong(1), row.getLong(2))
-      }
-      println(s"""{"committed_groups":$g,"docs":$d,"failures":$f}""")
+      // status probe: committed groups, counters and the recorded layout
+      // from the lineage table in one job, read under the same policy as
+      // resume (ExtractionJob.readLineage); num_groups is null until a run
+      // records one
+      val (g, d, f, n) = ExtractionJob.readLineage(s"${args.output}/lineage")
+        .fold((0L, 0L, 0L, "null")) { lin =>
+          val row = lin.agg(
+            countDistinct(col("commit_group")),
+            coalesce(sum(col("doc_count")), lit(0L)),
+            coalesce(sum(col("failure_count")), lit(0L)),
+            max(ExtractionJob.layoutColumn(lin))).first()
+          (row.getLong(0), row.getLong(1), row.getLong(2),
+            if (row.isNullAt(3)) "null" else row.getInt(3).toString)
+        }
+      println(s"""{"committed_groups":$g,"docs":$d,"failures":$f,"num_groups":$n}""")
       spark.stop()
       return
     }
@@ -112,28 +125,31 @@ object Main {
         graft.sources.Warc.toTable(spark, args.input.stripPrefix("warc:"))
       else spark.read.parquet(args.input)
 
+    // -1 is JobConfig's sized-to-input marker, not a group count
+    require(args.groups.forall(_ >= 1), s"--groups must be >= 1, got ${args.groups.get}")
     val cfg = ExtractionJob.JobConfig(
       threshold = args.threshold,
       diagnostics = args.diagnostics,
       forceHeavy = args.forceHeavy,
       maxBytes = args.maxBytes,
-      numGroups = args.groups,
+      numGroups = args.groups.getOrElse(ExtractionJob.JobConfig.SizedToInput),
       groupsPerCommit = args.groupsPerCommit,
       repartitionInput = args.repartitionInput)
 
-    // phase timings (reference: phase_timings map, pipeline.py:86-98)
-    val phases = scala.collection.mutable.LinkedHashMap("extract" -> 0.0, "commit" -> 0.0)
+    // layout + phase timings (reference: phase_timings map, pipeline.py:86-98)
+    var info = ExtractionJob.RunInfo(cfg.numGroups, 0.0, 0.0)
     val t0 = System.nanoTime()
     val lineage = ExtractionJob.runCheckpointed(
-      pages, cfg, new ParquetCommitStore(args.output), phases.update)
+      pages, cfg, new ParquetCommitStore(args.output), info = _)
     val runSecs = (System.nanoTime() - t0) / 1e9
     val failures = lineage.map(_.failure_count).sum
     val docs = lineage.map(_.doc_count).sum
     val docsPerSec = if (runSecs > 0) docs / runSecs else 0.0
-    val timings = phases.map { case (k, v) => f""""$k":$v%.3f""" }.mkString(",")
     println(
       s"""{"committed_groups":${lineage.map(_.commit_group).distinct.size},"docs":$docs,"failures":$failures,""" +
-        s""""phase_timings":{$timings},"docs_per_sec":${f"$docsPerSec%.1f"}}""")
+        s""""num_groups":${info.numGroups},""" +
+        f""""phase_timings":{"extract":${info.extractSecs}%.3f,"commit":${info.commitSecs}%.3f},""" +
+        s""""docs_per_sec":${f"$docsPerSec%.1f"}}""")
     spark.stop()
     if (failures > 0) sys.exit(1) // error_count!=0 -> nonzero exit (cli.py:404)
   }

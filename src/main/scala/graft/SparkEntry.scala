@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -53,7 +56,35 @@ object SparkEntry {
     */
   private def spread(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+    if (scanSplits(df) < target) df.repartition(target) else df
+  }
+
+  /** Partitions of `df`'s file scan, packed the way the scan packs them
+    * (`FilePartition.maxSplitBytes`, then `getFilePartitions` over the
+    * splits sorted by size), from file-index metadata alone: no physical
+    * planning, unlike `df.rdd.getNumPartitions`, which plans the query on
+    * every build. Any plan other than projections over one unbucketed file
+    * relation falls back to the RDD's count.
+    */
+  private[graft] def scanSplits(df: DataFrame): Int = {
+    def fileScan(p: LogicalPlan): Option[HadoopFsRelation] = p match {
+      case Project(_, child) => fileScan(child)
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation if fs.bucketSpec.isEmpty => Some(fs)
+        case _ => None
+      }
+      case _ => None
+    }
+    val s = df.sparkSession
+    fileScan(df.queryExecution.analyzed).fold(df.rdd.getNumPartitions) { fs =>
+      val dirs = fs.location.listFiles(Nil, Nil)
+      val maxSplit = FilePartition.maxSplitBytes(s, dirs)
+      val splits = dirs.flatMap(d => d.files.flatMap { f =>
+        val splittable = fs.fileFormat.isSplitable(s, fs.options, f.getPath)
+        PartitionedFileUtil.splitFiles(f, f.getPath, splittable, maxSplit, d.values)
+      })
+      FilePartition.getFilePartitions(s, splits.sortBy(-_.length), maxSplit).size
+    }
   }
 
   /** [[spread]] applied to the documents table — the shared entry of the

@@ -35,9 +35,23 @@ trait CommitStore {
       lineageRows: Seq[Lineage],
       batch: Seq[Int]
   )(implicit spark: SparkSession): Unit
+
+  /** Committed groups together with the layout they were hashed with
+    * (`Lineage.num_groups`, written by `commitBatch` with every lineage
+    * row). Stores that keep lineage rows override this to read both in one
+    * pass; the default reports no recorded layout, so a resume onto it
+    * needs an explicit `numGroups`.
+    */
+  def recorded()(implicit spark: SparkSession): CommitStore.Recorded =
+    CommitStore.Recorded(committedGroups(), None)
 }
 
 object CommitStore {
+
+  /** A store's commit state: the committed groups and, when recorded, the
+    * `numGroups` every one of them was hashed with.
+    */
+  final case class Recorded(groups: Set[Int], numGroups: Option[Int])
 
   /** One batch's results shaped for its write: hash-partitioned on
     * commit_group, so each group lands in exactly one write task and every
@@ -72,8 +86,10 @@ final class ParquetCommitStore(outputDir: String) extends CommitStore {
   private val resultsPath = s"$outputDir/results"
   private val lineagePath = s"$outputDir/lineage"
 
-  override def committedGroups()(implicit spark: SparkSession): Set[Int] =
-    ExtractionJob.readCommittedGroups(lineagePath)
+  override def committedGroups()(implicit spark: SparkSession): Set[Int] = recorded().groups
+
+  override def recorded()(implicit spark: SparkSession): CommitStore.Recorded =
+    ExtractionJob.readRecorded(lineagePath)
 
   override def commitBatch(
       results: Dataset[ExtractionJob.ResultRow],
@@ -118,11 +134,11 @@ final class ParquetCommitStore(outputDir: String) extends CommitStore {
 final class IcebergCommitStore(resultsTable: String, lineageTable: String)
     extends CommitStore {
 
-  override def committedGroups()(implicit spark: SparkSession): Set[Int] =
-    if (!spark.catalog.tableExists(lineageTable)) Set.empty
-    else
-      spark.read.table(lineageTable).select("commit_group").distinct()
-        .collect().map(_.getInt(0)).toSet
+  override def committedGroups()(implicit spark: SparkSession): Set[Int] = recorded().groups
+
+  override def recorded()(implicit spark: SparkSession): CommitStore.Recorded =
+    if (!spark.catalog.tableExists(lineageTable)) CommitStore.Recorded(Set.empty, None)
+    else ExtractionJob.recordedOf(spark.read.table(lineageTable))
 
   override def commitBatch(
       results: Dataset[ExtractionJob.ResultRow],

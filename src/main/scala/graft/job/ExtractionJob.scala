@@ -3,7 +3,9 @@ package graft.job
 import java.sql.Timestamp
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -34,12 +36,20 @@ import graft.model._
   */
 object ExtractionJob {
 
+  /** One extraction run's settings. `numGroups` is the commit layout: the
+    * url-hash group count, which is also the resume unit. Left at its
+    * default ([[JobConfig.SizedToInput]]) a fresh run sizes it to the input,
+    * one group per [[JobConfig.TargetGroupBytes]] of scanned files
+    * ([[numGroupsFor]]), and a resumed run reuses the layout its lineage
+    * recorded. An explicit value (>= 1) overrides the sizing and must match
+    * any recorded layout. `groupsPerCommit` groups make one commit batch.
+    */
   final case class JobConfig(
       threshold: Double = 0.85,
       diagnostics: Boolean = false,
       forceHeavy: Boolean = false,
       maxBytes: Int = 512 * 1024,
-      numGroups: Int = 64, // commit groups (url-hash buckets); resume unit
+      numGroups: Int = JobConfig.SizedToInput, // commit groups (url-hash buckets); resume unit
       groupsPerCommit: Int = 16, // commit-batch size
       numPartitions: Int = 0, // salted-shuffle width (repartitionInput only); 0 -> default
       repartitionInput: Boolean = false, // host-salted input shuffle (skewed scans only)
@@ -50,7 +60,8 @@ object ExtractionJob {
   ) {
     // an empty commit layout would commit nothing (numGroups) or fail only
     // after the whole extract job ran (groupsPerCommit): reject it up front
-    require(numGroups >= 1, s"numGroups must be >= 1, got $numGroups")
+    require(numGroups >= 1 || numGroups == JobConfig.SizedToInput,
+      s"numGroups must be >= 1, got $numGroups")
     require(groupsPerCommit >= 1, s"groupsPerCommit must be >= 1, got $groupsPerCommit")
 
     def extractorConfig: Extractor.Config = Extractor.Config(
@@ -61,6 +72,83 @@ object ExtractionJob {
       maxKernelSteps = maxKernelSteps
     )
   }
+
+  object JobConfig {
+
+    /** `numGroups` default: size the layout to the input on a fresh run,
+      * reuse the recorded one (`Lineage.num_groups`) on resume, so the
+      * url-hash never shifts when the input grows between runs.
+      */
+    val SizedToInput: Int = -1
+
+    /** Input bytes per commit group: Iceberg's default
+      * `write.target-file-size-bytes`, the table format's own write unit.
+      */
+    val TargetGroupBytes: Long = 512L * 1024 * 1024
+
+    /** Groups when the input's size is unknown (a non-file scan such as
+      * `synth:`, or a scan without real statistics).
+      */
+    val UnknownSizeGroups: Int = 64
+  }
+
+  /** Commit groups for `bytes` of input: ceil(bytes / TargetGroupBytes),
+    * at least 1.
+    */
+  private[job] def groupsForBytes(bytes: BigInt): Int = {
+    val target = BigInt(JobConfig.TargetGroupBytes)
+    ((bytes + target - 1) / target).max(1).min(Int.MaxValue).toInt
+  }
+
+  /** The input's size from its optimized plan's statistics, when every leaf
+    * is a file or V2 scan and the estimate is real (below
+    * `spark.sql.defaultSizeInBytes`, which marks a source without stats).
+    * Reads file-index metadata only: starts no Spark job.
+    */
+  private[job] def inputBytes(pages: DataFrame): Option[BigInt] = {
+    val plan = pages.queryExecution.optimizedPlan
+    val fileScans = plan.collectLeaves().forall {
+      case l: LogicalRelation => l.relation.isInstanceOf[HadoopFsRelation]
+      case _: DataSourceV2Relation | _: DataSourceV2ScanRelation => true
+      case _ => false
+    }
+    val size = plan.stats.sizeInBytes
+    if (fileScans && size < pages.sparkSession.sessionState.conf.defaultSizeInBytes) Some(size)
+    else None
+  }
+
+  /** Commit groups for a fresh run over `pages`: the explicit
+    * `cfg.numGroups`, else [[groupsForBytes]] of [[inputBytes]], else
+    * [[JobConfig.UnknownSizeGroups]]. Starts no Spark job.
+    */
+  def numGroupsFor(pages: DataFrame, cfg: JobConfig): Int =
+    if (cfg.numGroups != JobConfig.SizedToInput) cfg.numGroups
+    else inputBytes(pages).fold(JobConfig.UnknownSizeGroups)(groupsForBytes)
+
+  /** The layout a checkpointed run uses: the recorded one on resume (an
+    * explicit `cfg.numGroups` must agree with it), else [[numGroupsFor]].
+    * Committed groups without a recorded layout (a store that does not
+    * record one, or lineage written before layouts were recorded) resume
+    * only under an explicit `cfg.numGroups`: a derived count could differ
+    * from the one the groups were hashed with.
+    */
+  private def layoutFor(pages: DataFrame, cfg: JobConfig, recorded: CommitStore.Recorded): Int =
+    recorded.numGroups match {
+      case Some(n) =>
+        require(cfg.numGroups == JobConfig.SizedToInput || cfg.numGroups == n,
+          s"numGroups ${cfg.numGroups} contradicts the recorded layout of $n groups")
+        n
+      case None =>
+        require(recorded.groups.isEmpty || cfg.numGroups != JobConfig.SizedToInput,
+          "committed groups record no layout: set numGroups to the count they were written with")
+        numGroupsFor(pages, cfg)
+    }
+
+  /** What a checkpointed run reports besides its lineage rows: the commit
+    * layout it used and the wall seconds of its two phases, `extract` (the
+    * cache-filling lineage job) and `commit` (the batch loop).
+    */
+  final case class RunInfo(numGroups: Int, extractSecs: Double, commitSecs: Double)
 
   final case class KeyedPage(
       url: String,
@@ -97,10 +185,27 @@ object ExtractionJob {
   def readLineage(lineagePath: String)(implicit spark: SparkSession): Option[DataFrame] =
     if (hasDataFiles(lineagePath)) Some(spark.read.parquet(lineagePath)) else None
 
-  /** Committed commit groups from the lineage table ([[readLineage]]). */
-  def readCommittedGroups(lineagePath: String)(implicit spark: SparkSession): Set[Int] =
-    readLineage(lineagePath).fold(Set.empty[Int])(
-      _.select("commit_group").distinct().collect().map(_.getInt(0)).toSet)
+  /** Committed groups and recorded layout of the lineage table
+    * ([[readLineage]]).
+    */
+  def readRecorded(lineagePath: String)(implicit spark: SparkSession): CommitStore.Recorded =
+    readLineage(lineagePath).fold(CommitStore.Recorded(Set.empty, None))(recordedOf)
+
+  /** `num_groups` of a lineage table, null where none is recorded: 0 (rows
+    * built outside a checkpointed run) or a table written before layouts
+    * were recorded, which has no such column.
+    */
+  def layoutColumn(lin: DataFrame): Column =
+    if (lin.columns.contains("num_groups")) nullif(col("num_groups"), lit(0))
+    else lit(null).cast("int")
+
+  /** Committed groups and their one recorded layout, in one Spark job. */
+  def recordedOf(lin: DataFrame): CommitStore.Recorded = {
+    val rows = lin.select(col("commit_group"), layoutColumn(lin)).distinct().collect()
+    val layouts = rows.filterNot(_.isNullAt(1)).map(_.getInt(1)).distinct
+    require(layouts.length <= 1, s"lineage records more than one layout: ${layouts.sorted.mkString(", ")}")
+    CommitStore.Recorded(rows.map(_.getInt(0)).toSet, layouts.headOption)
+  }
 
   /** True if the directory holds at least one non-hidden data file
     * (Hadoop FS — works for local and distributed paths alike).
@@ -150,8 +255,9 @@ object ExtractionJob {
   }
 
   /** Keyed input for one commit batch. The commit group is pure url-hash
-    * (`pmod(xxhash64(url), numGroups)`), deterministic and independent of
-    * physical partitioning, so resume keys never shift.
+    * (`pmod(xxhash64(url), numGroups)`, numGroups from [[numGroupsFor]]),
+    * deterministic and independent of physical partitioning, so resume keys
+    * never shift.
     *
     * By default the input is consumed on its scan partitions — no shuffle,
     * payloads never move. With `repartitionInput` (for scans whose file
@@ -167,7 +273,7 @@ object ExtractionJob {
   )(implicit spark: SparkSession): Dataset[KeyedPage] = {
     import spark.implicits._
     var df = pages
-      .withColumn("commit_group", pmod(xxhash64(col("url")), lit(cfg.numGroups)).cast("int"))
+      .withColumn("commit_group", pmod(xxhash64(col("url")), lit(numGroupsFor(pages, cfg))).cast("int"))
     groups.foreach(g => df = df.filter(col("commit_group").isInCollection(g)))
     if (cfg.repartitionInput) {
       df = df
@@ -217,9 +323,9 @@ object ExtractionJob {
 
   /** Per-partition lineage aggregation (north rule: partition id, doc count,
     * byte count, failure count; reference analogue: BatchResult counters,
-    * types.py:201-214).
+    * types.py:201-214), each row recording the run's `numGroups` layout.
     */
-  def lineage(results: Dataset[ResultRow])(implicit spark: SparkSession): Dataset[Lineage] = {
+  def lineage(results: Dataset[ResultRow], numGroups: Int)(implicit spark: SparkSession): Dataset[Lineage] = {
     import spark.implicits._
     results
       .groupBy(col("commit_group"), col("partition_id"))
@@ -228,6 +334,7 @@ object ExtractionJob {
         sum(octet_length(col("extracted_text"))).as("byte_count"),
         sum(when(!col("success"), 1L).otherwise(0L)).as("failure_count")
       )
+      .withColumn("num_groups", lit(numGroups))
       .as[Lineage]
   }
 
@@ -260,45 +367,51 @@ object ExtractionJob {
 
   /** Store-injected form: the commit/resume protocol is identical for the
     * parquet stand-in and a production Iceberg catalog ([[CommitStore]]).
-    * `phaseSecs` receives the wall seconds of the two phases: `extract`
-    * (the cache-filling lineage job) and `commit` (the batch loop).
+    * The layout comes from [[layoutFor]]: a contradicting explicit
+    * `numGroups` fails right after the store's one layout read, before any
+    * extraction or write. `info` receives the layout and phase timings.
     */
   def runCheckpointed(
       pages: DataFrame,
       cfg: JobConfig,
       store: CommitStore,
-      phaseSecs: (String, Double) => Unit = (_, _) => ()
+      info: RunInfo => Unit = _ => ()
   )(implicit spark: SparkSession): Seq[Lineage] = {
-    val committed: Set[Int] = store.committedGroups()
+    val recorded = store.recorded()
+    val numGroups = layoutFor(pages, cfg, recorded)
+    val runCfg = cfg.copy(numGroups = numGroups)
 
-    val remaining = (0 until cfg.numGroups).filterNot(committed)
-    if (remaining.isEmpty) return Seq.empty
+    val remaining = (0 until numGroups).filterNot(recorded.groups)
+    if (remaining.isEmpty) {
+      info(RunInfo(numGroups, 0.0, 0.0))
+      return Seq.empty
+    }
     val skewed =
       if (cfg.repartitionInput) detectSkewedHosts(pages, cfg) else Set.empty[String]
 
     // released through its Dataset handle: raw-RDD unpersist would leak the
     // CacheManager entry and turn a same-plan re-persist into a no-op
-    val persisted = extract(pages, cfg, skewed, Some(remaining))
+    val persisted = extract(pages, runCfg, skewed, Some(remaining))
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
 
     val all = Seq.newBuilder[Lineage]
     try {
       val t0 = System.nanoTime()
-      val byGroup = lineage(persisted).collect().toSeq.groupBy(_.commit_group)
+      val byGroup = lineage(persisted, numGroups).collect().toSeq.groupBy(_.commit_group)
       val t1 = System.nanoTime()
-      phaseSecs("extract", (t1 - t0) / 1e9)
       remaining.grouped(cfg.groupsPerCommit).foreach { batch =>
         val subset = persisted.filter(col("commit_group").isInCollection(batch))
         // groups with zero rows still need a commit record, else every
         // resume re-scans them forever (found by CLI resume verification)
-        val lin = batch.flatMap(g => byGroup.getOrElse(g, Seq(Lineage(g, -1, 0L, 0L, 0L))))
+        val lin = batch.flatMap(g =>
+          byGroup.getOrElse(g, Seq(Lineage(g, -1, 0L, 0L, 0L, numGroups))))
         // results first, lineage second (the store contract): a crash
         // between the two leaves replaceable orphans, never a committed
         // group without data
         store.commitBatch(subset, lin, batch)
         all ++= lin
       }
-      phaseSecs("commit", (System.nanoTime() - t1) / 1e9)
+      info(RunInfo(numGroups, (t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9))
     } finally persisted.unpersist()
     all.result()
   }

@@ -83,14 +83,18 @@ final case class DocResult(
 
 /** Per-partition lineage row (the north rule's
   * "(partition id, doc count, byte count, failure count)" plus the commit
-  * group used for checkpoint/resume).
+  * group used for checkpoint/resume, and `num_groups`, the commit layout
+  * that group was hashed with: `pmod(xxhash64(url), num_groups)`. A run
+  * records its layout here so a resumed run reuses it. Rows built outside
+  * a checkpointed run carry 0: no layout recorded.
   */
 final case class Lineage(
     commit_group: Int,
     partition_id: Int,
     doc_count: Long,
     byte_count: Long,
-    failure_count: Long
+    failure_count: Long,
+    num_groups: Int = 0
 )
 
 /** Engine names (reference enum OCREngine, types.py:55-66, renamed to the

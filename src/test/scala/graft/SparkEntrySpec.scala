@@ -39,6 +39,22 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(rowsOnly == expected, s"unexpected rows-only set: ${rowsOnly -- expected} / missing: ${expected -- rowsOnly}")
   }
 
+  test("spread's scan split count matches the planned scan on 1-, 4- and 32-file tables") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    val cores = spark.sparkContext.defaultParallelism
+    val decisions = Seq(1, 4, 32).map { files =>
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-splits-$files").toString
+      spark.range(0, 20000, 1, files).map(i => (i, s"document $i " * 20)).toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(dir)
+      val scans = Seq(spark.read.parquet(dir), spark.read.parquet(dir).select($"doc_id"))
+      scans.foreach(df => assert(SparkEntry.scanSplits(df) == df.rdd.getNumPartitions, s"$files files"))
+      SparkEntry.scanSplits(scans.head) < cores
+    }
+    // the three tables land on both sides of spread's threshold
+    assert(decisions.contains(true) && decisions.contains(false), decisions)
+  }
+
   test("split countDistinct joins keep a NULL l_returnflag group, with no Expand") {
     val spark = SparkTestBase.spark
     import spark.implicits._

@@ -80,7 +80,7 @@ class ExtractionJobSpec extends AnyFunSuite {
   test("lineage counts add up") {
     val pages = CorpusGen.pages(spark, 200).toDF()
     val results = ExtractionJob.extract(pages, cfg)
-    val lin = ExtractionJob.lineage(results).collect()
+    val lin = ExtractionJob.lineage(results, cfg.numGroups).collect()
     assert(lin.map(_.doc_count).sum == 200)
     assert(lin.map(_.failure_count).sum == 40)
     assert(lin.forall(l => l.commit_group >= 0 && l.commit_group < cfg.numGroups))
@@ -99,7 +99,7 @@ class ExtractionJobSpec extends AnyFunSuite {
     import spark.implicits._
     val firstResults = ExtractionJob.extract(pages, firstBatchCfg, skewed, firstGroups)
     firstResults.write.mode("append").partitionBy("commit_group").parquet(s"$out/results")
-    ExtractionJob.lineage(firstResults).coalesce(1)
+    ExtractionJob.lineage(firstResults, partial.numGroups).coalesce(1)
       .write.mode("append").parquet(s"$out/lineage")
 
     // resume: must process only the remaining groups
@@ -306,7 +306,7 @@ class ExtractionJobSpec extends AnyFunSuite {
     val c = cfg.copy(groupsPerCommit = 2) // 8 groups -> 4 commit batches
     val returned = ExtractionJob.runCheckpointed(pages, c, out)
     val committed = spark.read.parquet(s"$out/lineage").as[Lineage].collect().toSeq
-    val expected = ExtractionJob.lineage(ExtractionJob.extract(pages, c)).collect().toSeq
+    val expected = ExtractionJob.lineage(ExtractionJob.extract(pages, c), c.numGroups).collect().toSeq
     def multiset(xs: Seq[Lineage]) = xs.groupBy(identity).view.mapValues(_.size).toMap
     assert(expected.map(_.commit_group).toSet == (0 until 8).toSet)
     assert(multiset(committed) == multiset(expected))
@@ -401,6 +401,128 @@ class ExtractionJobSpec extends AnyFunSuite {
     assert(payloadCapable.nonEmpty)
     assert(payloadCapable.forall(_.engine == Engines.Heavy),
       s"payload rows must be heavy under forceHeavy: ${payloadCapable.map(r => r.url -> r.engine).toSeq}")
+  }
+
+  /** Runs `f` with the SQL settings `kv`, then unsets them. */
+  private def withConf[T](kv: (String, String)*)(f: => T): T = {
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally kv.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
+  test("commit groups are sized to the input's bytes without starting a Spark job") {
+    import ExtractionJob.{groupsForBytes, inputBytes, numGroupsFor}
+    val target = BigInt(ExtractionJob.JobConfig.TargetGroupBytes)
+    assert(groupsForBytes(0) == 1)
+    assert(groupsForBytes(1) == 1)
+    assert(groupsForBytes(target) == 1)
+    assert(groupsForBytes(target + 1) == 2)
+    assert(groupsForBytes(target * 3) == 3)
+
+    val dir = Files.createTempDirectory("graft-sized").toString
+    CorpusGen.pages(spark, 200, partitions = 4).write.mode("overwrite").parquet(dir)
+    val fileBytes = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    val sized = ExtractionJob.JobConfig()
+    val parquet = spark.read.parquet(dir)
+    val synth = CorpusGen.pages(spark, 200).toDF()
+    // the plan-statistics read must not run the scan or any other job
+    var got = Seq.empty[Any]
+    val jobs = jobsStarted {
+      got = Seq(inputBytes(parquet), numGroupsFor(parquet, sized), numGroupsFor(synth, sized),
+        numGroupsFor(parquet, sized.copy(numGroups = 5)))
+    }
+    assert(jobs == 0)
+    assert(got == Seq(Some(BigInt(fileBytes)), 1, 64, 5))
+    // the scan's statistics scale the count: 2.5 targets of input -> 3 groups
+    withConf("spark.sql.sources.fileCompressionFactor" -> (2.5 * target.toDouble / fileBytes).toString) {
+      assert(numGroupsFor(spark.read.parquet(dir), sized) == 3)
+    }
+    // statistics at the no-stats default read as unknown
+    withConf("spark.sql.defaultSizeInBytes" -> "1") {
+      assert(inputBytes(spark.read.parquet(dir)).isEmpty)
+      assert(numGroupsFor(spark.read.parquet(dir), sized) == 64)
+    }
+  }
+
+  test("a crash between batches resumes onto the recorded layout, not a re-derived one") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    val in = Files.createTempDirectory("graft-grow").toString
+    val out = Files.createTempDirectory("graft-crash").toString
+    CorpusGen.pages(spark, 120, partitions = 2).write.mode("overwrite").parquet(in)
+    val parquet = new ParquetCommitStore(out)
+    // run 1: explicit 8 groups, 2 batches; the store dies after its first
+    val crashing = new CommitStore {
+      private var batches = 0
+      override def committedGroups()(implicit s: SparkSession): Set[Int] = parquet.committedGroups()(s)
+      override def commitBatch(
+          results: Dataset[ExtractionJob.ResultRow],
+          lineageRows: Seq[Lineage],
+          batch: Seq[Int])(implicit s: SparkSession): Unit = {
+        if (batches == 1) throw new IllegalStateException("crash after the first batch")
+        parquet.commitBatch(results, lineageRows, batch)(s)
+        batches += 1
+      }
+    }
+    val run1 = ExtractionJob.JobConfig(numGroups = 8, groupsPerCommit = 4)
+    intercept[IllegalStateException](ExtractionJob.runCheckpointed(spark.read.parquet(in), run1, crashing))
+    assert(parquet.recorded() == CommitStore.Recorded(Set(0, 1, 2, 3), Some(8)))
+
+    // the input grows: a fresh run would now derive another layout
+    spark.range(120, 180, 1, 1).map(i => CorpusGen.genRow(CorpusGen.DefaultSeed, i))
+      .write.mode("append").parquet(in)
+    val grown = spark.read.parquet(in)
+    val sized = ExtractionJob.JobConfig(groupsPerCommit = 4)
+    assert(ExtractionJob.numGroupsFor(grown, sized) != 8)
+
+    // a contradicting explicit layout fails after the layout read alone
+    val readJobs = jobsStarted(parquet.recorded())
+    val conflictJobs = jobsStarted {
+      val e = intercept[IllegalArgumentException](
+        ExtractionJob.runCheckpointed(grown, sized.copy(numGroups = 4), out))
+      assert(e.getMessage.contains("recorded layout of 8"))
+    }
+    assert(conflictJobs == readJobs)
+    // a store that records no layout cannot be resumed onto a derived one
+    val noLayout = new CommitStore {
+      override def committedGroups()(implicit s: SparkSession): Set[Int] = parquet.committedGroups()(s)
+      override def commitBatch(
+          results: Dataset[ExtractionJob.ResultRow],
+          lineageRows: Seq[Lineage],
+          batch: Seq[Int])(implicit s: SparkSession): Unit = fail("must not commit")
+    }
+    intercept[IllegalArgumentException](ExtractionJob.runCheckpointed(grown, sized, noLayout))
+
+    // resume with the default (sized) config: the recorded 8 groups win
+    var info: Option[ExtractionJob.RunInfo] = None
+    val lin = ExtractionJob.runCheckpointed(grown, sized, parquet, i => info = Some(i))
+    assert(info.map(_.numGroups).contains(8))
+    assert(lin.map(_.commit_group).toSet == Set(4, 5, 6, 7))
+    val committed = spark.read.parquet(s"$out/lineage").as[Lineage].collect()
+    assert(committed.map(_.commit_group).toSet == (0 until 8).toSet)
+    assert(committed.forall(_.num_groups == 8), committed.toSeq)
+
+    // exactly once: the original rows of groups 0-3 (run 1) plus every row
+    // of groups 4-7 of the grown input, each url in one row
+    def groupOf(df: DataFrame) = df.select(col("url"), pmod(xxhash64(col("url")), lit(8)).as("g"))
+    val original = groupOf((0L until 120L).map(CorpusGen.url(CorpusGen.DefaultSeed, _)).toDF("url"))
+    val expected = (original.filter(col("g") < 4).select("url").as[String].collect() ++
+      groupOf(grown).filter(col("g") >= 4).select("url").as[String].collect()).sorted.toSeq
+    val urls = spark.read.parquet(s"$out/results").select("url").as[String].collect().sorted.toSeq
+    assert(urls.distinct.size == urls.size)
+    assert(urls == expected)
+    assert(ExtractionJob.runCheckpointed(grown, sized, out).isEmpty)
+  }
+
+  test("the Iceberg store reads committed groups and the recorded layout through the catalog") {
+    import spark.implicits._
+    val table = s"graft_lineage_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val store = new IcebergCommitStore(s"${table}_results", table)
+    assert(store.recorded() == CommitStore.Recorded(Set.empty, None))
+    Seq(Lineage(0, 0, 3L, 30L, 0L, 8), Lineage(5, -1, 0L, 0L, 0L, 8)).toDS().write.saveAsTable(table)
+    try {
+      assert(store.recorded() == CommitStore.Recorded(Set(0, 5), Some(8)))
+      assert(store.committedGroups() == Set(0, 5))
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
   test("summarize produces the batch rollup") {
