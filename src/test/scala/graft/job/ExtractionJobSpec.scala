@@ -513,6 +513,20 @@ class ExtractionJobSpec extends AnyFunSuite {
     assert(ExtractionJob.runCheckpointed(grown, sized, out).isEmpty)
   }
 
+  test("lineage without a recorded layout resumes only under an explicit count") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-legacy").toString
+    // a lineage table written before layouts were recorded: no num_groups
+    Seq((0, 0, 15L, 100L, 3L)).toDF("commit_group", "partition_id", "doc_count", "byte_count", "failure_count")
+      .write.parquet(s"$out/lineage")
+    assert(ExtractionJob.readRecorded(s"$out/lineage") == CommitStore.Recorded(Set(0), None))
+    val pages = CorpusGen.pages(spark, 60).toDF()
+    intercept[IllegalArgumentException](ExtractionJob.runCheckpointed(pages, ExtractionJob.JobConfig(), out))
+    val lin = ExtractionJob.runCheckpointed(pages, ExtractionJob.JobConfig(numGroups = 4), out)
+    assert(lin.map(_.commit_group).toSet == Set(1, 2, 3))
+    assert(lin.forall(_.num_groups == 4))
+  }
+
   test("the Iceberg store reads committed groups and the recorded layout through the catalog") {
     import spark.implicits._
     val table = s"graft_lineage_${java.util.UUID.randomUUID().toString.replace("-", "")}"
