@@ -176,106 +176,89 @@ object Dedup {
         (col(idCol) =!= col("canonical_id")).as("is_duplicate"))
   }
 
-  /** Exact all-pairs n-gram Jaccard >= threshold via shingle postings:
-    * explode (shingle, doc) -> self-join on shingle -> per-pair common count
-    * -> |A|+|B|-common denominator. Only docs sharing a shingle ever meet,
-    * so cost tracks true similarity structure, not corpus size squared.
-    * Shingle hashes are 8-byte longs, not strings — smaller shuffle.
+  /** Exact all-pairs n-gram Jaccard >= threshold: every pair of documents
+    * that shares a shingle and whose true Jaccard, rounded to 4 places,
+    * reaches `threshold` — nothing capped, nothing dropped. A prefix-filtered
+    * set-similarity join (Bayardo et al., "Scaling Up All Pairs Similarity
+    * Search", WWW 2007; Vernica, Carey & Li, SIGMOD 2010): order every
+    * document's shingles by ascending corpus df (ties by hash, one global
+    * order) and index only its first |s| - ceil(t*|s|) + 1. Two sets with
+    * Jaccard >= t share at least ceil(t*|s|) shingles, so their prefixes
+    * meet; candidates are then verified against the full sets. Corpus-common
+    * boilerplate sorts last and falls out of the prefixes on its own, so the
+    * self-join stays proportional to rare-shingle overlap. t is taken one
+    * rounding unit below `threshold`: a pair at true Jaccard t - 5e-5 still
+    * rounds up to t, and the margin absorbs floating-point error in the
+    * ceiling (a longer prefix only adds candidates).
     *
-    * Shingles whose document frequency exceeds `maxShingleDf` are dropped
-    * before the self-join: a shingle shared by k docs yields k^2 join rows,
-    * and at web scale boilerplate 4-grams have k in the millions while
-    * contributing ~0 Jaccard discrimination. The cap must not bind on honest
-    * near-dup structure — default 128 is ~20x the max df of the test corpus.
-    * When the cap binds, the computed value is the Jaccard of the
-    * LOW-DF shingle sets: numerator AND denominator both count only kept
-    * shingles (the same universe). An identical pair with some low-df
-    * shingles stays at 1.0 however much boilerplate was dropped; any other
-    * pair's score moves, in either direction:
-    *   - it UNDERSTATES true Jaccard when the dropped shingles are shared
-    *     by both documents (common boilerplate, e.g. a site footer): each
-    *     leaves the numerator and the denominator alike, and
-    *     (c-d)/(u-d) < c/u for c < u. True near-dup pairs then fall below the threshold and
-    *     are MISSED. The benchmark's corpus_dedup workload (seed 1, a footer
-    *     above the cap) misses 61 of its 2,000 documents per call this way.
-    *   - it OVERSTATES true Jaccard when the dropped shingles belong to
-    *     only one document of the pair: they leave the denominator only, so
-    *     pairs below the true-Jaccard threshold can be emitted.
-    * Callers needing the true score must re-verify emitted pairs against
-    * full shingle sets (as [[minhashPairs]] does); pairs the cap pushed
-    * below the threshold are not recoverable from the output.
-    *
-    * The one regime the cap
-    * excludes ON PURPOSE is a duplicate cluster larger than `maxShingleDf`
-    * itself — there EVERY shingle is corpus-common, all postings drop, and
-    * no pairs are emitted. That is the mass-duplication regime where k^2
-    * pairwise rows are the wrong output shape anyway: route it through
-    * [[exact]]/[[markDuplicates]] (one hash aggregation), the same escape
-    * [[simhashPairs]] documents for its bucket cap.
-    *
-    * `logDropped = true` eagerly counts and logs the dropped shingles — a
-    * diagnostic (extra job), not for the hot path.
+    * The output is every true pair, so a cluster of k identical documents
+    * yields k(k-1)/2 rows. Collapse mass exact copies through
+    * [[markDuplicates]] first (as `PrepareJob` does) — one hash aggregation.
     */
   def ngramJaccardPairs(
       docs: DataFrame,
       n: Int = 4,
-      threshold: Double = 0.8,
-      maxShingleDf: Int = 128,
-      logDropped: Boolean = false
+      threshold: Double = 0.8
   )(implicit spark: SparkSession): DataFrame = {
     // native codegen expression (bit-identical to the Scala kernel,
     // property-tested): no typed-map object boundary — pruning and
     // whole-stage codegen run through the shingling
     graft.expressions.GraftFunctions.register(docs.sparkSession)
-    val shingled = docs.select(
+    // The sorted distinct shingle sets are MATERIALIZED once (reliable
+    // checkpoint when a dir is set, eager localCheckpoint otherwise — see
+    // [[truncateLineage]]): the df pass, the prefix postings and both sides
+    // of the verification read them, and without the checkpoint each would
+    // re-scan and re-shingle the corpus. Construction is therefore EAGER,
+    // under the truncateLineage storage contract (see minhashPairs).
+    val sets = truncateLineage(docs.select(
       col("doc_id"),
-      graft.expressions.GraftFunctions.shingleHashes64(col("text"), n).as("shingles"))
-    val posts0 = shingled.select(col("doc_id"), explode(col("shingles")).as("sh"))
+      graft.expressions.GraftFunctions.shingleHashes64(col("text"), n).as("shingles")))
     // Document frequency per shingle: a partial-aggregated groupBy joined
-    // back, NOT a window. A window partition runs on ONE task, so a
-    // corpus-common boilerplate shingle (df 10^7-10^8 at web scale) would
-    // land its whole posting list on a single spilling task BEFORE the df
-    // cap could drop it; under partial aggregation the hot shingle shrinks
-    // to one row per map task. The inner join against the pre-filtered
-    // low-df table both annotates and drops capped shingles in one step
-    // (hot probe partitions are AQE-skew-splittable: one build row per key).
-    val dfTab = posts0.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-    // The kept postings are MATERIALIZED once (reliable checkpoint when a
-    // dir is set, eager localCheckpoint otherwise — see [[truncateLineage]]):
-    // without this the a-side, b-side and both docSizes joins below each
-    // re-plan the whole explode+df subtree, scanning the corpus up to 8x
-    // and re-shingling it 4x (r5 PLANS.md evidence), and cluster builders
-    // ([[dupClusters]]/[[dupClustersStar]]) pay the subtree AGAIN for their
-    // pair set. At 100 TB eight corpus scans was the single largest
-    // avoidable cost left; after the checkpoint every consumer reads the
-    // one materialized (sh, doc_id) posting set and `documents` is scanned
-    // in exactly one job. Construction is therefore EAGER, and reliable
-    // checkpoints (dir set) persist until cleanCheckpoints=true or the dir
-    // is removed — the truncateLineage storage contract, see minhashPairs'
-    // scaladoc.
-    val kept = truncateLineage(posts0
-      .join(dfTab.filter(col("df") <= maxShingleDf).select(col("sh")), Seq("sh")))
-    if (logDropped) {
-      val dropped = dfTab.filter(col("df") > maxShingleDf).count()
-      println(s"ngramJaccardPairs: dropped $dropped shingles with df > $maxShingleDf")
-    }
-    // per-doc set size over the SAME kept universe as the intersection —
-    // numerator and denominator must agree or dropped boilerplate would
-    // depress the Jaccard of genuinely identical pairs. Joined onto the
-    // AGGREGATED pair table (one row per candidate pair), not carried
-    // through the wide self-join.
-    val docSizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val a = kept.select(col("sh"), col("doc_id").as("a_id"))
-    val b = kept.select(col("sh"), col("doc_id").as("b_id"))
-    a.join(b, Seq("sh"))
+    // back, NOT a window — a window partition runs on ONE task, so a
+    // corpus-common shingle (df 10^7-10^8 at web scale) would land its whole
+    // posting list on a single spilling task; under partial aggregation it
+    // shrinks to one row per map task.
+    val posts = sets.select(col("doc_id"), explode(col("shingles")).as("sh"))
+    val dfTab = posts.groupBy(col("sh")).agg(count(lit(1)).as("df"))
+    // A df-1 shingle is in no other document and can never make a
+    // candidate, so only shared shingles are collected per doc (by a per-doc
+    // aggregate, bounded by the document's own size — not a window;
+    // collect_list skips the nulls). They sort after the doc's df-1
+    // shingles, so of its |s| - ceil(t*|s|) + 1 prefix places they fill the
+    // last size(o) - ceil(t*|s|) + 1, if any.
+    val ordered = posts.join(dfTab, Seq("sh"))
+      .groupBy(col("doc_id"))
+      .agg(
+        count(lit(1)).as("len"),
+        sort_array(collect_list(when(col("df") > 1, struct(col("df"), col("sh"))))).as("o"))
+    val sharedLen = size(col("o")) - ceil(lit(threshold - 1e-4) * col("len")) + 1
+    val prefixes = ordered.select(col("doc_id"),
+      explode(slice(col("o"), lit(1), greatest(lit(0), sharedLen).cast("int")).getField("sh")).as("sh"))
+    val candidates = prefixes.select(col("sh"), col("doc_id").as("a_id"))
+      .join(prefixes.select(col("sh"), col("doc_id").as("b_id")), Seq("sh"))
       .filter(col("a_id") < col("b_id"))
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(count(lit(1)).as("common"))
-      .join(docSizes.select(col("doc_id").as("a_id"), col("n_sh").as("a_n")), Seq("a_id"))
-      .join(docSizes.select(col("doc_id").as("b_id"), col("n_sh").as("b_n")), Seq("b_id"))
+      .select(col("a_id"), col("b_id"))
+      .distinct()
+    verifiedPairs(candidates, sets, threshold)
+  }
+
+  /** Exact Jaccard verification of candidate `(a_id, b_id)` pairs against
+    * the full `(doc_id, shingles)` sets: one row per pair whose Jaccard,
+    * rounded to 4 places (HALF_UP, the oracle's rounding), reaches
+    * `threshold` — the one verifier of [[ngramJaccardPairs]] and
+    * [[minhashPairs]].
+    */
+  private def verifiedPairs(candidates: DataFrame, sets: DataFrame, threshold: Double): DataFrame = {
+    def side(p: String) = sets.select(col("doc_id").as(s"${p}_id"), col("shingles").as(s"${p}_sh"))
+    candidates
+      .join(side("a"), "a_id")
+      .join(side("b"), "b_id")
+      .withColumn("common", size(array_intersect(col("a_sh"), col("b_sh"))))
       .withColumn(
         "jaccard",
-        round(col("common").cast("double") / (col("a_n") + col("b_n") - col("common")), 4))
+        round(
+          col("common").cast("double") /
+            (size(col("a_sh")) + size(col("b_sh")) - col("common")), 4))
       .filter(col("jaccard") >= threshold)
       .select(col("a_id"), col("b_id"), col("jaccard"))
   }
@@ -341,20 +324,7 @@ object Dedup {
       .select(col("a_id"), col("b_id"))
       .distinct()
 
-    // exact verification against the shingle sets
-    val sets = shingled.select(col("doc_id"), col("shingles"))
-    val verified = candidates
-      .join(sets.withColumnRenamed("doc_id", "a_id").withColumnRenamed("shingles", "a_sh"), "a_id")
-      .join(sets.withColumnRenamed("doc_id", "b_id").withColumnRenamed("shingles", "b_sh"), "b_id")
-      .withColumn("common", size(array_intersect(col("a_sh"), col("b_sh"))))
-      .withColumn(
-        "jaccard",
-        round(
-          col("common").cast("double") /
-            (size(col("a_sh")) + size(col("b_sh")) - col("common")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a_id"), col("b_id"), col("jaccard"))
-    verified
+    verifiedPairs(candidates, shingled, threshold)
   }
 
   /** Per-doc 64-bit SimHash (near-dup = small hamming distance; identical
@@ -873,7 +843,7 @@ object Dedup {
     * Shared by the listing, rollup, and cut forms.
     */
   private def dupSpanRows(docs: DataFrame, n: Int, minDocs: Int): DataFrame = {
-    // materialized once (same discipline as ngramJaccardPairs' postings):
+    // materialized once (same discipline as ngramJaccardPairs' shingle sets):
     // the window subtree feeds BOTH the df aggregation and the span join —
     // without the truncation the corpus is tokenized and hashed twice
     val wins = truncateLineage(windowHashes(docs, n))

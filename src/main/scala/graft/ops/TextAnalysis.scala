@@ -446,7 +446,7 @@ object TextAnalysis {
   def tokenRarity(docs: DataFrame, rareMax: Long = 1L): DataFrame = {
     // materialized once: the vocab build and the join-back both consume
     // it — without truncation the corpus is exploded and pre-aggregated
-    // TWICE (same discipline as the shingle postings in ngramJaccardPairs)
+    // TWICE (same discipline as the shingle sets in ngramJaccardPairs)
     val docTok = Dedup.truncateLineage(docTokenCounts(docs))
     val vocab = docTok.groupBy(col("tok")).agg(
       sum(col("k")).as("c"),

@@ -28,9 +28,8 @@ object DictionarySignal {
 
   private val RepeatPattern = Pattern.compile("(.)\\1{3,}")
   private val AlternatingPattern = Pattern.compile("(..)\\1{2,}")
-  // Python-parity tokenizer: (?U)\s is Unicode White_Space, which excludes
-  // U+001C-U+001F; Python str.split() treats them as whitespace (isPyWhitespace)
-  private val Whitespace = Pattern.compile("(?U)[\\s\\x1c-\\x1f]+")
+  // Python str.split() parity, precompiled once (see Hashing.PyWhitespaceRun)
+  private val Whitespace = graft.util.Hashing.PyWhitespaceRun
 
   val DefaultFloor = 0.5
 

@@ -124,10 +124,8 @@ object GarbledSignal {
 
   private val StripChars: Set[Char] = ".,;:!?()[]{}\"'-–—".toSet
 
-  // String.split(regex) recompiles the pattern per call — precompile once.
-  // Python str.split() parity: Unicode ws incl. NBSP AND U+001C-U+001F
-  // (which (?U)\s alone excludes — see Hashing.isPyWhitespace)
-  private val Whitespace = Pattern.compile("(?U)[\\s\\x1c-\\x1f]+")
+  // Python str.split() parity, precompiled once (see Hashing.PyWhitespaceRun)
+  private val Whitespace = graft.util.Hashing.PyWhitespaceRun
 
   /** First characters that can possibly begin a ValidPatterns match (all 16
     * patterns anchor on a digit, an uppercase letter, '(', '[', '§', a roman

@@ -16,8 +16,8 @@ object WordDiff {
   )
 
   private val MaxWords = 2000 // cap row cost; diffs beyond this are truncated
-  // Python-parity tokenizer incl. U+001C-U+001F (see Hashing.isPyWhitespace)
-  private val Whitespace = java.util.regex.Pattern.compile("(?U)[\\s\\x1c-\\x1f]+")
+  // Python str.split() parity, precompiled once (see Hashing.PyWhitespaceRun)
+  private val Whitespace = graft.util.Hashing.PyWhitespaceRun
 
   def diff(fastText: String, heavyText: String): Diff = {
     // NO StepBudget tick here: WordDiff only runs for diagnostics, and a

@@ -42,4 +42,12 @@ object Hashing {
   def isPyWhitespace(c: Char): Boolean =
     Character.isWhitespace(c) ||
       Character.getType(c) == Character.SPACE_SEPARATOR || c == 0x85.toChar
+
+  /** A run of Python `str.split()` separators, for `Pattern.split`: Unicode
+    * White_Space (`(?U)\s`, NBSP included) plus U+001C-U+001F, which
+    * `(?U)\s` alone excludes but Python and [[isPyWhitespace]] count. The
+    * one compiled copy shared by the tokenizing text kernels.
+    */
+  val PyWhitespaceRun: java.util.regex.Pattern =
+    java.util.regex.Pattern.compile("(?U)[\\s\\x1c-\\x1f]+")
 }

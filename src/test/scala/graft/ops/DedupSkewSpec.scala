@@ -12,7 +12,7 @@ import graft.SparkTestBase
   * be partial-aggregated groupBy + join-back, never an unordered window — a
   * window partition runs on ONE task, so a mass-duplicate content hash or a
   * corpus-common shingle (df 10^7+ at web scale) would pin its entire
-  * posting list on a single spilling task before any cap could drop it.
+  * posting list on a single spilling task.
   * Partial aggregation shrinks the hot key to one row per map task.
   */
 class DedupSkewSpec extends AnyFunSuite {
@@ -113,12 +113,16 @@ class DedupSkewSpec extends AnyFunSuite {
   }
 
   test("ngramJaccardPairs: shingle df is a partial-aggregated groupBy, not a window") {
-    val pairs = Dedup.ngramJaccardPairs(skewed, n = 4, threshold = 0.8, maxShingleDf = 64)
+    val pairs = Dedup.ngramJaccardPairs(skewed, n = 4, threshold = 0.8)
     noWindow(pairs)
     assert(pairs.queryExecution.executedPlan.toString.contains("partial_count"))
-    // the 700-doc mega-cluster exceeds the cap: all its shingles drop (the
-    // documented route-to-exact escape), unique docs share nothing
-    assert(pairs.count() == 0)
+    // exact output: the 700-doc mega-cluster is every one of its
+    // C(700, 2) pairs at 1.0 (the df-ordered prefix keeps the join on its
+    // few rarest shingles), and the doc-unique docs share nothing
+    val r = pairs.collect().map(x => (x.getLong(0), x.getLong(1), x.getDouble(2)))
+    assert(r.length == 700 * 699 / 2, s"got ${r.length} pairs")
+    assert(r.forall { case (a, b, j) => a < b && b < 700 && j == 1.0 })
+    assert(r.map(x => (x._1, x._2)).toSet.size == r.length, "pairs must be distinct")
   }
 
   test("passageDupStats: cross-doc df is a partial-aggregated groupBy with exchange reuse") {

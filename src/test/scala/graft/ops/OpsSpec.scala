@@ -84,19 +84,20 @@ class DedupSpec extends AnyFunSuite {
     assert(found == brute, s"found=$found brute=$brute (radius check: $radius unused)")
   }
 
-  test("shingle DF cap bounds the boilerplate postings blowup") {
+  test("exact ngram jaccard keeps every boilerplate-only pair at its true score") {
     val boiler = "all rights reserved worldwide"
     val big = (0 until 60)
       .map(i => (i.toLong, s"unique$i word$i token$i filler$i $boiler"))
       .toDF("doc_id", "text")
-    // the only shared shingle is the boilerplate 4-gram (df=60): with the cap
-    // binding it is dropped before the self-join, so no pair survives
-    val capped = Dedup.ngramJaccardPairs(big, n = 4, threshold = 0.01, maxShingleDf = 10)
-    assert(capped.count() == 0)
-    // without the cap binding, the mega-shingle alone creates C(60,2) join pairs
-    val uncapped = Dedup.ngramJaccardPairs(big, n = 4, threshold = 0.01, maxShingleDf = 1000)
-    assert(uncapped.count() == 60L * 59 / 2)
-    // the default cap does not bind on the planted near-dup corpus
+    // the only shared shingle is the boilerplate 4-gram (df=60) out of 5 per
+    // doc: every pair scores exactly 1/(5+5-1), none is dropped
+    val r = Dedup.ngramJaccardPairs(big, n = 4, threshold = 0.01)
+      .collect().map(x => (x.getLong(0), x.getLong(1), x.getDouble(2)))
+    assert(r.length == 60 * 59 / 2)
+    val allPairs = for (a <- 0L until 60L; b <- a + 1 until 60L) yield (a, b)
+    assert(r.map(x => (x._1, x._2)).toSet == allPairs.toSet)
+    assert(r.forall(_._3 == BigDecimal(1.0 / 9).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble))
+    // and the planted near-dup corpus keeps its exact dup and near-dup
     val defaults = Dedup.ngramJaccardPairs(docs, n = 4, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(defaults.contains((0L, 3L)) && defaults.contains((0L, 1L)))
