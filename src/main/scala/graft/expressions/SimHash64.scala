@@ -129,6 +129,7 @@ object GraftFunctions {
 
   private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "simhash64" -> ((exprs: Seq[Expression]) => SimHash64Expr(exprs.head)),
+    "gopher_stats" -> ((exprs: Seq[Expression]) => GopherStatsExpr(exprs.head)),
     "shingle_hashes64" -> ((exprs: Seq[Expression]) =>
       ShingleHashes64Expr(exprs.head, intArg(exprs, 1, "shingle_hashes64"))),
     "minhash_sig" -> ((exprs: Seq[Expression]) =>
@@ -167,6 +168,8 @@ object GraftFunctions {
   /** Column-API forms (resolve the registered functions). */
   def simhash64(c: Column): Column =
     org.apache.spark.sql.functions.call_function("simhash64", c)
+  def gopherStats(c: Column): Column =
+    org.apache.spark.sql.functions.call_function("gopher_stats", c)
   def shingleHashes64(c: Column, n: Int): Column =
     org.apache.spark.sql.functions.call_function(
       "shingle_hashes64", c, org.apache.spark.sql.functions.lit(n))

@@ -54,12 +54,14 @@ object PrepareJob {
   private val AllRow = "__all__"
 
   private def fromLineage(lin: DataFrame, resumed: Boolean): Result = {
-    val rows = lin.collect().map(r =>
+    val collected = lin.collect()
+    val rows = collected.map(r =>
       SplitStat(r.getAs[String]("split"), r.getAs[Long]("n_docs"),
         r.getAs[Long]("ws_tokens"), r.getAs[Long]("group_docs")))
     val stats = rows.filterNot(_.split == AllRow).toSeq
-    // input_docs is a run-constant replicated per lineage row
-    val inDocs = lin.select(col("input_docs")).first().getLong(0)
+    // input_docs is a run-constant replicated per lineage row (the lineage
+    // always holds the `__all__` row, so there is one to read)
+    val inDocs = collected.head.getAs[Long]("input_docs")
     val surv = stats.map(_.n_docs).sum
     val groupDocs = stats.map(_.group_docs).sum
     Result(resumed, inDocs, surv, groupDocs - surv, inDocs - groupDocs, stats)

@@ -76,6 +76,8 @@ object Pipeline {
       docs: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
+    // the gate's counts come from the native gopher_stats expression
+    graft.expressions.GraftFunctions.register(docs.sparkSession)
     val id = col(idCol)
     val text = col(textCol)
     docs

@@ -3,11 +3,14 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.expressions.GraftFunctions
+
 /** Column-only text analysis over `documents(doc_id, text, lang, ...)` —
   * language ID, quality scoring, token counting, fingerprinting. Everything
-  * here is pure Catalyst Column arithmetic (no UDFs): whole-stage codegen'd
-  * end to end, and independently re-computable by any ANSI SQL engine, which
-  * is exactly how the oracle verifies it.
+  * here is Catalyst Column arithmetic (no UDFs; the Gopher gate's counts come
+  * from one native codegen'd expression): whole-stage codegen'd end to end,
+  * and independently re-computable by any ANSI SQL engine, which is exactly
+  * how the oracle verifies it.
   */
 object TextAnalysis {
 
@@ -201,14 +204,14 @@ object TextAnalysis {
           .as("top_bigram_frac"))
   }
 
-  /** Gopher document-filter rules (Rae et al. 2021, Table A1) re-expressed
-    * as pure Column arithmetic — the standard pre-training quality gate a
-    * web pipeline applies after extraction. Per doc: the individual rule
-    * booleans plus the conjunction `keep`. Token = non-empty run of
-    * non-space/non-newline chars (matches the corpus tokenization);
-    * thresholds are the published ones.
+  /** Gopher document-filter rules (Rae et al. 2021, Table A1) — the
+    * standard pre-training quality gate a web pipeline applies after
+    * extraction. Per doc: the individual rule booleans plus the conjunction
+    * `keep`. Token = non-empty run of non-space/non-newline chars (matches
+    * the corpus tokenization); thresholds are the published ones.
     */
   def gopherRules(docs: DataFrame): DataFrame = {
+    GraftFunctions.register(docs.sparkSession)
     val cols = gopherColumns(col("text"))
     docs.select(col("doc_id") +: cols.map { case (n, c) => c.as(n) }: _*)
   }
@@ -217,7 +220,8 @@ object TextAnalysis {
     * single-pass pipeline ([[Pipeline.prepare]]) composes this into one
     * projection with the dedup key and split so the corpus is scanned
     * once. Derives from the same builder as [[gopherRules]], so the two
-    * entry points cannot drift.
+    * entry points cannot drift. Resolves the native `gopher_stats`, so the
+    * caller registers [[GraftFunctions]] in its session first.
     */
   def gopherKeep(textCol: Column): Column =
     gopherColumns(textCol)
@@ -225,55 +229,48 @@ object TextAnalysis {
       .getOrElse(throw new IllegalStateException("gopherColumns lost its keep column"))
 
   /** All gopher output columns (name -> column, `keep` last) from a text
-    * column. null text reads as empty: every count is 0, r_word_count is
-    * false, so keep is false (never null — three-valued logic would
-    * otherwise leak nulls through the conjunction and a filter(keep) would
-    * drop the row silently rather than explicitly rejecting it).
+    * column, derived from ONE native `gopher_stats` struct
+    * ([[graft.expressions.GopherStatsExpr]]): a single scan of the text's
+    * bytes yields the nine counts, and the ratios, thresholds and 4-place
+    * rounding below read only them. Every column references the same
+    * struct, so Catalyst evaluates it once per row (common subexpression).
+    * Bit-identical, all 13 columns, to the Column-arithmetic reference the
+    * tests keep (property test over generated text). null text reads as
+    * empty: every count is 0, r_word_count is false, so keep is false
+    * (never null — three-valued logic would otherwise leak nulls through
+    * the conjunction and a filter(keep) would drop the row silently rather
+    * than explicitly rejecting it).
     */
   private def gopherColumns(textCol: Column): Seq[(String, Column)] = {
-    val t = coalesce(textCol, lit(""))
-    val flat = regexp_replace(t, "\n", " ")
-    val words = regexp_extract_all(t, lit("[^ \n]+"), lit(0))
-    val wordCount = size(words)
-    val alphaWords = size(filter(words, w => w.rlike("[A-Za-z]")))
-    val charCount = length(regexp_replace(t, "[ \n]", ""))
-    val lines = filter(split(t, "\n"), l => l =!= "")
-    val nLines = size(lines)
-    val bulletLines = size(filter(lines, l => l.startsWith("- ") || l.startsWith("• ")))
-    val ellipsisLines = size(filter(lines, l => l.endsWith("...") || l.endsWith("…")))
-    // markerCount's space padding cannot create occurrences of these
-    // markers, so it counts them exactly (and keeps one counting idiom)
-    val hashCount = markerCount(flat, "#")
-    val ellipsisCount = markerCount(flat, "...") + markerCount(flat, "…")
+    val stats = GraftFunctions.gopherStats(textCol)
+    val wordCount = stats.getField("word_count")
+    val nLines = stats.getField("n_lines")
     // ANSI-safe ratios: an empty/null doc has wordCount/nLines 0, and under
     // Spark's default ANSI mode a zero divisor THROWS rather than nulling —
     // ratios read 0.0 there and the word-count rule rejects the doc
     def perWord(c: Column) =
       when(wordCount > 0, c.cast("double") / wordCount).otherwise(lit(0.0))
-    val symbolRatio = perWord(hashCount + ellipsisCount)
-    val meanWordLen = perWord(charCount)
+    val symbolRatio = perWord(stats.getField("hash_count") + stats.getField("ellipsis_count"))
+    val meanWordLen = perWord(stats.getField("char_count"))
+    val alphaWordFrac = perWord(stats.getField("alpha_words"))
     def perLine(c: Column) =
       when(nLines > 0, c.cast("double") / nLines).otherwise(lit(0.0))
-    val stopwords = Seq("the", "be", "to", "of", "and", "that", "have", "with")
-    val padded = concat(lit(" "), lower(flat), lit(" "))
-    val stopHits = stopwords
-      .map(w => when(padded.contains(s" $w "), 1).otherwise(0))
-      .reduce(_ + _)
+    val stopHits = stats.getField("stop_hits")
 
     val rWordCount = wordCount.between(50, 100000)
     val rMeanLen = meanWordLen.between(3.0, 10.0)
     val rSymbol = symbolRatio < 0.1
-    val rBullet = perLine(bulletLines) <= 0.9
-    val rEllipsis = perLine(ellipsisLines) <= 0.3
-    val rAlpha = perWord(alphaWords) >= 0.8
+    val rBullet = perLine(stats.getField("bullet_lines")) <= 0.9
+    val rEllipsis = perLine(stats.getField("ellipsis_lines")) <= 0.3
+    val rAlpha = alphaWordFrac >= 0.8
     val rStop = stopHits >= 2
 
     Seq(
       "word_count" -> wordCount.cast("long"),
       "mean_word_len" -> round(meanWordLen, 4),
       "symbol_ratio" -> round(symbolRatio, 4),
-      "alpha_word_frac" -> round(perWord(alphaWords), 4),
-      "stop_hits" -> stopHits.cast("int"),
+      "alpha_word_frac" -> round(alphaWordFrac, 4),
+      "stop_hits" -> stopHits,
       "r_word_count" -> rWordCount,
       "r_mean_word_len" -> rMeanLen,
       "r_symbol_ratio" -> rSymbol,

@@ -2,7 +2,6 @@ package graft.job
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -11,6 +10,7 @@ import org.apache.spark.sql.execution.exchange.Exchange
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.SparkTestBase.jobsStarted
 import graft.corpus.CorpusGen
 import graft.model.{Engines, Lineage}
 
@@ -311,35 +311,6 @@ class ExtractionJobSpec extends AnyFunSuite {
     assert(expected.map(_.commit_group).toSet == (0 until 8).toSet)
     assert(multiset(committed) == multiset(expected))
     assert(multiset(returned) == multiset(expected))
-  }
-
-  /** Spark jobs started by `f`, counted by job group. A marker job started
-    * after `f` returns drains the listener bus: its start event is handled
-    * only after every event `f`'s jobs posted.
-    */
-  private def jobsStarted(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val marker = s"$group-marker"
-    val started = new java.util.concurrent.atomic.AtomicInteger()
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
-          case `group` => started.incrementAndGet()
-          case `marker` => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try f finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus not drained")
-      started.get()
-    } finally sc.removeSparkListener(listener)
   }
 
   test("lineage is aggregated once per run, not once per commit batch") {

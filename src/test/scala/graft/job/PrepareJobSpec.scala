@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.SparkTestBase.jobsStarted
 
 class PrepareJobSpec extends AnyFunSuite {
   private implicit lazy val spark: org.apache.spark.sql.SparkSession = SparkTestBase.spark
@@ -62,5 +63,19 @@ class PrepareJobSpec extends AnyFunSuite {
     assert(r2.resumed)
     assert(r2.survivors == r1.survivors && r2.inputDocs == r1.inputDocs)
     assert(new java.io.File(s"$dir/prepared").lastModified() == before)
+  }
+
+  test("a resumed --prepare reads input_docs from the collected lineage rows") {
+    import spark.implicits._
+    val docs = ((0L until 30L).map(i => (i, goodText(i.toInt))) :+ (40L -> "tiny"))
+      .toDF("doc_id", "text")
+    val dir = Files.createTempDirectory("prepresume").toFile.getAbsolutePath
+    val first = PrepareJob.run(docs, dir)
+    var resumed: PrepareJob.Result = null
+    val jobs = jobsStarted { resumed = PrepareJob.run(docs, dir) }
+    assert(resumed == first.copy(resumed = true))
+    // the lineage read's schema inference, its non-empty check and the one
+    // collect that every reported count, input_docs included, comes from
+    assert(jobs == 3, s"resume started $jobs jobs")
   }
 }

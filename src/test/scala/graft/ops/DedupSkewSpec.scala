@@ -125,6 +125,32 @@ class DedupSkewSpec extends AnyFunSuite {
     assert(r.map(x => (x._1, x._2)).toSet.size == r.length, "pairs must be distinct")
   }
 
+  test("ngramJaccardPairs: a shuffled prefix self-join runs the per-doc prefix aggregate once") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, CollectList, Partial}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    // Once the prefix postings outgrow the broadcast threshold, both sides
+    // of the self-join shuffle by `sh`, and the second side must be a reused
+    // exchange of the first, not a second final collect_list aggregate.
+    // (Under a broadcast join, at test and benchmark scale, the stream side
+    // and the broadcast each run the aggregate: removing that needs an extra
+    // shuffle stage, which measured slower than the repeated aggregate.)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val pairs = Dedup.ngramJaccardPairs(skewed, n = 4, threshold = 0.8)
+      assert(pairs.collect().length == 700 * 699 / 2)
+      val finalCollects = new AdaptiveSparkPlanHelper {}.collect(pairs.queryExecution.executedPlan) {
+        case a: ObjectHashAggregateExec if a.aggregateExpressions.exists {
+          case AggregateExpression(_: CollectList, mode, _, _, _) => mode != Partial
+          case _ => false
+        } => a
+      }
+      assert(finalCollects.length == 1, pairs.queryExecution.executedPlan.toString)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("passageDupStats: cross-doc df is a partial-aggregated groupBy with exchange reuse") {
     val stats = Dedup.passageDupStats(skewed, n = 4)
     noWindow(stats)

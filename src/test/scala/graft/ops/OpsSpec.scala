@@ -153,6 +153,17 @@ class DedupSpec extends AnyFunSuite {
     assert(rc.values.toSet == Set(0L), s"chain must collapse to one cluster: $rc")
   }
 
+  test("dup clusters: a pair endpoint missing from docs joins nothing, duplicate rows stay") {
+    // 0-99-1 where 99 is not a doc: labels propagate only through docs, so
+    // 0 and 1 stay apart; doc 5 appears twice and keeps both rows
+    val nodes = Seq(0L, 1L, 5L, 5L, 6L).map(i => (i, s"text$i")).toDF("doc_id", "text")
+    val pairs = Seq((0L, 99L, 1.0), (1L, 99L, 1.0), (5L, 6L, 1.0))
+      .toDF("a_id", "b_id", "jaccard")
+    val r = Dedup.dupClusters(nodes, pairs)
+      .collect().map(x => x.getLong(0) -> x.getLong(1)).toSeq.sorted
+    assert(r == Seq(0L -> 0L, 1L -> 1L, 5L -> 5L, 5L -> 5L, 6L -> 5L))
+  }
+
   test("contamination: train/test n-gram overlap with planted cases") {
     val train = Seq(
       (0L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
