@@ -1,6 +1,6 @@
 package graft.job
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Pipeline
@@ -82,13 +82,23 @@ object PrepareJob {
         require(clash.isEmpty,
           s"--prepare input already carries ${clash.mkString(", ")}: " +
             "drop or rename before preparing (is this table already prepared?)")
-        val inputDocs = docs.count()
-        val prep = Pipeline.prepare(docs)
+        // input_docs rides on the write job: the gate side of the join reads
+        // every input row exactly once (the join-back side is not observed)
+        val observed = Observation("prepare_input")
+        val prep = Pipeline.prepare(docs.observe(observed, count(lit(1)).as("input_docs")))
         val survivors = prep
           .filter(col("keep"))
           .select(col("doc_id"), col("split"), col("ws_tokens"), col("dup_count"))
         val out = docs.join(survivors, Seq("doc_id"))
         out.write.mode("overwrite").partitionBy("split").parquet(s"$outDir/prepared")
+        // read only after the write returned: after a failed action an
+        // Observation reports zeroed metrics instead of throwing. An input
+        // the optimizer proves empty loses the observed node, and with it
+        // the metric: count() then reads the empty plan instead.
+        val inputDocs = observed.get.get("input_docs") match {
+          case Some(n: Long) => n
+          case _ => docs.count()
+        }
         // lineage FROM THE WRITTEN FILES (explicit schema: a zero-survivor
         // write leaves only the marker, which schema inference cannot
         // read): group_docs counts every input doc whose exact-dup group

@@ -21,15 +21,13 @@ object DictionarySignal {
   /** ASCII punctuation + typographic dashes/quotes/ellipsis, removed anywhere
     * in the token (reference: dictionary.py:14 translation table).
     */
-  private val PunctChars: Set[Char] =
-    ("!\"#$%&'()*+,-./:;<=>?@[\\]^_`{|}~" + "–—‘’“”…").toSet
+  private val PunctChars =
+    new CharSet("!\"#$%&'()*+,-./:;<=>?@[\\]^_`{|}~" + "–—‘’“”…")
 
-  private val Vowels: Set[Char] = "aeiouyàáâãäåèéêëìíîïòóôõöùúûüæœ".toSet
+  private val Vowels = new CharSet("aeiouyàáâãäåèéêëìíîïòóôõöùúûüæœ")
 
   private val RepeatPattern = Pattern.compile("(.)\\1{3,}")
   private val AlternatingPattern = Pattern.compile("(..)\\1{2,}")
-  // Python str.split() parity, precompiled once (see Hashing.PyWhitespaceRun)
-  private val Whitespace = graft.util.Hashing.PyWhitespaceRun
 
   val DefaultFloor = 0.5
 
@@ -55,7 +53,13 @@ object DictionarySignal {
     val lower = word.toLowerCase
     val length = lower.length
     if (length < 2) return true
-    val vowelRatio = lower.count(Vowels.contains).toDouble / length
+    var vowels = 0
+    var i = 0
+    while (i < length) {
+      if (Vowels.contains(lower.charAt(i))) vowels += 1
+      i += 1
+    }
+    val vowelRatio = vowels.toDouble / length
     if (vowelRatio < 0.1 && length > 3) return false
     if (vowelRatio > 0.9 && length > 4) return false
     if (RepeatPattern.matcher(lower).find()) return false
@@ -89,32 +93,55 @@ object DictionarySignal {
   def score(text: String): Result = score(text, defaultWords)
 
   /** Score with an explicit word set (the broadcastable entry point). */
-  def score(text: String, words: Set[String]): Result = {
-    if (text == null) return Neutral
+  def score(text: String, words: Set[String]): Result =
+    if (text == null) Neutral else scoreTokens(Tokens(text), words)
+
+  /** [[score]] over an already tokenized text (the quality gate's one token
+    * pass). Each word is its token with every `PunctChars` char removed.
+    */
+  def scoreTokens(tokens: Tokens, words: Set[String]): Result = {
+    val text = tokens.text
     graft.util.StepBudget.tick(text.length.toLong) // B3 row work budget
-    if (text.strip().isEmpty) return Neutral
     var known = 0
     var structured = 0
     var garbled = 0
     var total = 0
-    Whitespace.split(text).foreach { token =>
-      // translate-table strip: only allocate when punctuation is present
-      // (ws-split tokens carry no surrounding whitespace to strip unless
-      // punctuation removal exposes some)
-      var hasPunct = false
-      var j = 0
-      while (!hasPunct && j < token.length) {
-        if (PunctChars.contains(token.charAt(j))) hasPunct = true
+    var t = 0
+    while (t < tokens.size) {
+      val s = tokens.start(t)
+      val e = tokens.end(t)
+      // length and letter test before any allocation: punctuation is never
+      // a letter, so the word has a letter iff its token has one
+      var punct = 0
+      var hasLetter = false
+      var j = s
+      while (j < e) {
+        val c = text.charAt(j)
+        if (PunctChars.contains(c)) punct += 1
+        else if (!hasLetter && Character.isLetter(c)) hasLetter = true
         j += 1
       }
-      val word = if (hasPunct) token.filterNot(PunctChars.contains).strip() else token
-      if (word.length >= 3 && word.exists(Character.isLetter)) {
+      if (e - s - punct >= 3 && hasLetter) {
+        // translate-table strip: only copy when punctuation is present
+        val word =
+          if (punct == 0) text.substring(s, e)
+          else {
+            val sb = new java.lang.StringBuilder(e - s - punct)
+            j = s
+            while (j < e) {
+              val c = text.charAt(j)
+              if (!PunctChars.contains(c)) sb.append(c)
+              j += 1
+            }
+            sb.toString
+          }
         total += 1
         val lower = word.toLowerCase
         if (words.contains(lower)) known += 1
         else if (isStructurallyValid(word)) structured += 1
         else garbled += 1
       }
+      t += 1
     }
     if (total == 0) Neutral
     else {

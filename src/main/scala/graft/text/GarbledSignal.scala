@@ -102,57 +102,53 @@ object GarbledSignal {
   /** Reference/citation patterns that look garbled but are valid — page
     * ranges, ISBNs, roman numerals, §refs (reference: quality.py:113-130).
     * Matched with Python `re.match` semantics (anchored at start).
+    *
+    * Each pattern is paired with the chars its first atom admits (`\d` and
+    * `(?i)` are ASCII-only without `(?U)`), so a word runs only the
+    * patterns its first char can begin: at most 8 of the 16, and one for a
+    * lowercase word starting with a roman-numeral letter. The set of
+    * words matched is unchanged (property-tested against all 16).
     */
-  private val ValidPatterns: Seq[Pattern] = Seq(
-    "^\\d+$",
-    "^\\d{1,4}[-–—]+\\d{1,4}$",
-    "(?i)^[ivxlcdm]+$",
-    "^\\d{4}$",
-    "^[A-Z]\\d+$",
-    "^\\d+[a-z]?$",
-    "(?i)^ISBN",
-    "^\\d{1,3}\\.\\d",
-    "^[A-Z]{2,4}\\d",
-    "(?i)^pp?\\.\\s*\\d",
-    "^\\(\\d+\\)$",
-    "^\\[\\d+\\]$",
-    "^§\\d",
-    "^\\d+[a-z]?[-–—]+\\d+[a-z]?$",
-    "^[\\d][\\d\\-–—]+[\\d]$",
-    "^\\d[\\d.\\-–—/]+\\d$"
-  ).map(Pattern.compile)
+  private val ValidPatterns: Seq[(String, String)] = Seq(
+    "0-9" -> "^\\d+$",
+    "0-9" -> "^\\d{1,4}[-–—]+\\d{1,4}$",
+    "ivxlcdmIVXLCDM" -> "(?i)^[ivxlcdm]+$",
+    "0-9" -> "^\\d{4}$",
+    "A-Z" -> "^[A-Z]\\d+$",
+    "0-9" -> "^\\d+[a-z]?$",
+    "iI" -> "(?i)^ISBN",
+    "0-9" -> "^\\d{1,3}\\.\\d",
+    "A-Z" -> "^[A-Z]{2,4}\\d",
+    "pP" -> "(?i)^pp?\\.\\s*\\d",
+    "(" -> "^\\(\\d+\\)$",
+    "\\[" -> "^\\[\\d+\\]$",
+    "§" -> "^§\\d",
+    "0-9" -> "^\\d+[a-z]?[-–—]+\\d+[a-z]?$",
+    "0-9" -> "^[\\d][\\d\\-–—]+[\\d]$",
+    "0-9" -> "^\\d[\\d.\\-–—/]+\\d$"
+  )
 
-  private val StripChars: Set[Char] = ".,;:!?()[]{}\"'-–—".toSet
-
-  // Python str.split() parity, precompiled once (see Hashing.PyWhitespaceRun)
-  private val Whitespace = graft.util.Hashing.PyWhitespaceRun
-
-  /** First characters that can possibly begin a ValidPatterns match (all 16
-    * patterns anchor on a digit, an uppercase letter, '(', '[', '§', a roman
-    * numeral letter, or 'p'/'i' for pp./ISBN). Ordinary lowercase words skip
-    * the 16 regex evaluations entirely — outcome-identical, much cheaper.
-    */
-  private def mayBeReference(c: Char): Boolean =
-    Character.isDigit(c) || Character.isUpperCase(c) ||
-      c == '(' || c == '[' || c == '§' ||
-      c == 'i' || c == 'v' || c == 'x' || c == 'l' || c == 'c' || c == 'd' ||
-      c == 'm' || c == 'p'
-
-  /** Python `word.strip(chars)` analogue. */
-  private def stripEnds(s: String): String = {
-    var a = 0
-    var b = s.length
-    while (a < b && StripChars.contains(s.charAt(a))) a += 1
-    while (b > a && StripChars.contains(s.charAt(b - 1))) b -= 1
-    s.substring(a, b)
+  /** ValidPatterns by first char; every first atom admits only chars < 256. */
+  private val ValidPatternsByFirst: Array[Array[Pattern]] = {
+    val compiled = ValidPatterns.map { case (first, p) =>
+      (Pattern.compile(s"[$first]"), Pattern.compile(p))
+    }
+    Array.tabulate(256)(c =>
+      compiled.collect { case (f, p) if f.matcher(c.toChar.toString).matches() => p }.toArray)
   }
+
+  private def isValidReference(w: String): Boolean = {
+    val c = w.charAt(0)
+    c < 256 && ValidPatternsByFirst(c).exists(_.matcher(w).lookingAt())
+  }
+
+  private val StripChars = new CharSet(".,;:!?()[]{}\"'-–—")
 
   final case class Result(
       score: Double,
       garbledCount: Int,
       totalWords: Int,
-      sampleIssues: Seq[String],
-      sampleContext: Seq[String]
+      sampleIssues: Seq[String]
   ) {
     def toSignal(threshold: Double): Signal = Signal(
       "garbled",
@@ -165,16 +161,7 @@ object GarbledSignal {
     )
   }
 
-  private val Neutral = Result(1.0, 0, 0, Nil, Nil)
-
-  /** Length after Python-`str.strip()` (Unicode whitespace incl. NBSP). */
-  private def pyStrippedLength(s: String): Int = {
-    var a = 0
-    var b = s.length
-    while (a < b && graft.util.Hashing.isPyWhitespace(s.charAt(a))) a += 1
-    while (b > a && graft.util.Hashing.isPyWhitespace(s.charAt(b - 1))) b -= 1
-    b - a
-  }
+  private val Neutral = Result(1.0, 0, 0, Nil)
 
   private val ConsonantSet: Array[Boolean] = {
     val a = new Array[Boolean](128)
@@ -241,11 +228,15 @@ object GarbledSignal {
     val lower = lowerOf(wordClean)
     // ValidShort's longest member is 3 chars — longer words can't be in it
     if (wordClean.length <= 3 && ValidShort.contains(lower)) return None
-    if (mayBeReference(wordClean.charAt(0)) &&
-      ValidPatterns.exists(p => p.matcher(wordClean).lookingAt())) return None
+    if (isValidReference(wordClean)) return None
     if (ValidTerms.contains(lower)) return None
 
-    val alphaCount = wordClean.count(Character.isLetter)
+    var alphaCount = 0
+    var k = 0
+    while (k < wordClean.length) {
+      if (Character.isLetter(wordClean.charAt(k))) alphaCount += 1
+      k += 1
+    }
     val alphaRatio = alphaCount.toDouble / wordClean.length
     if (alphaRatio < 0.3 && wordClean.length > 4) return Some("low_alpha")
 
@@ -275,38 +266,43 @@ object GarbledSignal {
   /** Score a text. Texts with <100 stripped chars are neutral (score 1.0),
     * matching the reference's short-text rule (quality.py:138-149).
     */
-  def score(text: String, maxSamples: Int = 10, collectContext: Boolean = false): Result = {
-    if (text == null) return Neutral
+  def score(text: String, maxSamples: Int = 10): Result =
+    if (text == null) Neutral else scoreTokens(Tokens(text), maxSamples)
+
+  /** [[score]] over an already tokenized text (the quality gate's one token
+    * pass). Each word is Python `word.strip(StripChars)` of its token.
+    */
+  def scoreTokens(tokens: Tokens, maxSamples: Int): Result = {
+    val text = tokens.text
     graft.util.StepBudget.tick(text.length.toLong) // B3 row work budget
-    if (pyStrippedLength(text) < 100) return Neutral
-    val words = Whitespace.split(text).filter(_.nonEmpty)
-    val total = words.length
-    if (total == 0) return Neutral
+    if (tokens.strippedLength < 100) return Neutral
+    val total = tokens.size
 
     var garbled = 0
     val issues = Seq.newBuilder[String]
-    val contexts = Seq.newBuilder[String]
     var issueCount = 0
     var idx = 0
-    while (idx < words.length) {
-      val wordClean = stripEnds(words(idx))
-      classifyWord(wordClean) match {
-        case Some(issueType) =>
-          garbled += 1
-          if (issueCount < maxSamples) {
-            issueCount += 1
-            issues += s"$wordClean ($issueType)"
-            if (collectContext) {
-              val start = math.max(0, idx - 5)
-              val end = math.min(words.length, idx + 6)
-              contexts += ("..." + words.slice(start, end).mkString(" ") + "...")
+    while (idx < total) {
+      var a = tokens.start(idx)
+      var b = tokens.end(idx)
+      while (a < b && StripChars.contains(text.charAt(a))) a += 1
+      while (b > a && StripChars.contains(text.charAt(b - 1))) b -= 1
+      // classifyWord passes every word under 2 chars: skip the allocation
+      if (b - a >= 2) {
+        val wordClean = text.substring(a, b)
+        classifyWord(wordClean) match {
+          case Some(issueType) =>
+            garbled += 1
+            if (issueCount < maxSamples) {
+              issueCount += 1
+              issues += s"$wordClean ($issueType)"
             }
-          }
-        case None => ()
+          case None => ()
+        }
       }
       idx += 1
     }
     val ratio = garbled.toDouble / total
-    Result(math.max(0.0, 1.0 - ratio * 2), garbled, total, issues.result(), contexts.result())
+    Result(math.max(0.0, 1.0 - ratio * 2), garbled, total, issues.result())
   }
 }

@@ -37,16 +37,34 @@ object Postprocess {
 
   // (?U) makes \w match Unicode word chars like Python's re (SURVEY.md §2.8
   // parity watchpoint).
-  private val HyphenBreak = Pattern.compile("(?U)(\\w+)-\\n(\\w+)")
+  //
+  // Linear-time anchoring: the reference patterns (kept verbatim in the test
+  // suite as PostprocessReference) retry a failed run match from every
+  // later position of the same run, so a long run with no match costs time
+  // quadratic in its length. A leftmost match of a reference pattern always
+  // starts at the first char of its run (a `\w` run here, a whitespace run
+  // below): the search reaches a run's first char before any later one, and
+  // a match from a later char implies one from the first. A previous match
+  // never ends inside a run, because it ends after a greedy run at a
+  // non-run char (here), on punctuation, on `\n` or at the end of the text.
+  // So the anchors drop only start positions that can never win: same
+  // matches, groups and counts, one attempt per run.
+  //
+  // The `\w` run is anchored by `\b`, which reads the whole code point
+  // before the position. A `(?<!\w)` lookbehind reads one char there: after
+  // a supplementary letter such as U+1D400 it sees a lone low surrogate and
+  // lets the search restart inside the run, which stays quadratic.
+  private val HyphenBreak = Pattern.compile("(?U)\\b(\\w+)-\\n(\\w+)")
 
   private val ParaSplit = Pattern.compile("\n\n+")
   // Python-\s parity: (?U)\s binds to Unicode White_Space, which EXCLUDES
   // U+001C-U+001F; Python's \s includes them (matching isPyWhitespace)
-  private val SpaceBeforePunct = Pattern.compile("(?U)[\\s\\x1c-\\x1f]+([.,;:!?])")
+  private val SpaceBeforePunct =
+    Pattern.compile("(?U)(?<![\\s\\x1c-\\x1f])[\\s\\x1c-\\x1f]+([.,;:!?])")
   private val MultiSpace = Pattern.compile("  +")
-  private val TrailingBeforeNewline = Pattern.compile("[ \\t]+(\\n)")
+  private val TrailingBeforeNewline = Pattern.compile("(?<![ \\t])[ \\t]+(\\n)")
   // \z, not $: Java's $ also matches before a final \r/\r\n, Python's doesn't
-  private val TrailingAtEnd = Pattern.compile("[ \\t]+\\z")
+  private val TrailingAtEnd = Pattern.compile("(?<![ \\t])[ \\t]+\\z")
 
   type Counts = Map[String, Int]
 
@@ -90,6 +108,8 @@ object Postprocess {
     * (reference: postprocess.py:91-120).
     */
   def dehyphenate(text: String): (String, Counts) = {
+    // every match contains the literal "-\n": most texts have none
+    if (text.indexOf("-\n") < 0) return (text, Map("dehyphenations" -> 0))
     var rejoined = 0
     val m = HyphenBreak.matcher(text)
     if (!m.find()) return (text, Map("dehyphenations" -> 0))

@@ -34,8 +34,10 @@ final case class QualityAnalyzer(
       text: String,
       conf: Option[ConfidenceSignal.Result]
   ): Quality = {
-    val garbled = GarbledSignal.score(text, maxSamples)
-    val dict = DictionarySignal.score(text, wordSet)
+    // one token pass feeds both signals; a null text is neutral to both
+    val tokens = Tokens(text)
+    val garbled = GarbledSignal.scoreTokens(tokens, maxSamples)
+    val dict = DictionarySignal.scoreTokens(tokens, wordSet)
 
     val scores: Map[String, Double] =
       Map("garbled" -> garbled.score, "dictionary" -> dict.score) ++

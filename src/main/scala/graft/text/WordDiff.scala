@@ -16,8 +16,6 @@ object WordDiff {
   )
 
   private val MaxWords = 2000 // cap row cost; diffs beyond this are truncated
-  // Python str.split() parity, precompiled once (see Hashing.PyWhitespaceRun)
-  private val Whitespace = graft.util.Hashing.PyWhitespaceRun
 
   def diff(fastText: String, heavyText: String): Diff = {
     // NO StepBudget tick here: WordDiff only runs for diagnostics, and a
@@ -68,7 +66,8 @@ object WordDiff {
     )
   }
 
-  private def tokenize(t: String): Array[String] =
-    if (t == null) Array.empty
-    else Whitespace.split(t).filter(_.nonEmpty).take(MaxWords)
+  private def tokenize(t: String): Array[String] = {
+    val tokens = Tokens(t)
+    Array.tabulate(math.min(tokens.size, MaxWords))(tokens(_))
+  }
 }

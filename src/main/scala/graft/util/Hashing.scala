@@ -38,16 +38,13 @@ object Hashing {
   /** Python-`str.isspace()` / `(?U)\s` character test (Unicode White_Space):
     * Character.isWhitespace alone EXCLUDES U+00A0/U+2007/U+202F and U+0085,
     * which Python's \s and str.split() include — the NBSP parity watchpoint.
+    * U+001C-U+001F count too, as in Python's `str.split()`. ASCII chars take
+    * a range test; the whole char set is pinned to the regex form
+    * `(?U)[\s\x1c-\x1f]` in the test suite.
     */
   def isPyWhitespace(c: Char): Boolean =
-    Character.isWhitespace(c) ||
-      Character.getType(c) == Character.SPACE_SEPARATOR || c == 0x85.toChar
-
-  /** A run of Python `str.split()` separators, for `Pattern.split`: Unicode
-    * White_Space (`(?U)\s`, NBSP included) plus U+001C-U+001F, which
-    * `(?U)\s` alone excludes but Python and [[isPyWhitespace]] count. The
-    * one compiled copy shared by the tokenizing text kernels.
-    */
-  val PyWhitespaceRun: java.util.regex.Pattern =
-    java.util.regex.Pattern.compile("(?U)[\\s\\x1c-\\x1f]+")
+    if (c < 0x80) c == ' ' || (c >= '\t' && c <= '\r') || (c >= 0x1c && c <= 0x1f)
+    else
+      Character.isWhitespace(c) ||
+        Character.getType(c) == Character.SPACE_SEPARATOR || c == 0x85.toChar
 }

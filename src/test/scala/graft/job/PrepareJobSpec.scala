@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
 import graft.SparkTestBase.jobsStarted
+import graft.job.PrepareJob.SplitStat
 
 class PrepareJobSpec extends AnyFunSuite {
   private implicit lazy val spark: org.apache.spark.sql.SparkSession = SparkTestBase.spark
@@ -77,5 +78,41 @@ class PrepareJobSpec extends AnyFunSuite {
     // the lineage read's schema inference, its non-empty check and the one
     // collect that every reported count, input_docs included, comes from
     assert(jobs == 3, s"resume started $jobs jobs")
+  }
+
+  test("a fresh --prepare counts its input on the write job, not a separate scan") {
+    import spark.implicits._
+    val dup = goodText(7)
+    val mixed = ((0L until 24L).map(i => (i, goodText(i.toInt + 200))) ++
+      Seq(30L, 31L, 32L).map(i => (i, dup)) :+ (40L -> "tiny")).toDF("doc_id", "text")
+    val gated = (0L until 5L).map(i => (i, s"tiny $i")).toDF("doc_id", "text")
+    def fresh(docs: org.apache.spark.sql.DataFrame): (PrepareJob.Result, Int) = {
+      val dir = Files.createTempDirectory("prepfresh").toFile.getAbsolutePath
+      var r: PrepareJob.Result = null
+      val jobs = jobsStarted { r = PrepareJob.run(docs, dir) }
+      (r, jobs)
+    }
+    val (one, oneJobs) = fresh(mixed.repartition(1))
+    val (several, severalJobs) = fresh(mixed.repartition(7))
+    val (none, noneJobs) = fresh(gated.repartition(3))
+    val (empty, emptyJobs) = fresh(gated.filter(lit(false)))
+    // the Results of counting the input with docs.count(): every row counted
+    // once, although the join-back side reads the input a second time
+    val splits = Seq(SplitStat("test", 3, 1440, 3), SplitStat("train", 19, 9120, 21),
+      SplitStat("val", 3, 1440, 3))
+    val expected = PrepareJob.Result(resumed = false, inputDocs = 28, survivors = 25,
+      dupDropped = 2, gatedOut = 1, splits = splits)
+    assert(one.copy(splits = one.splits.sortBy(_.split)) == expected, one)
+    assert(several.copy(splits = several.splits.sortBy(_.split)) == expected, several)
+    assert(none == PrepareJob.Result(resumed = false, inputDocs = 5, survivors = 0,
+      dupDropped = 0, gatedOut = 5, splits = Nil), none)
+    assert(empty == PrepareJob.Result(resumed = false, inputDocs = 0, survivors = 0,
+      dupDropped = 0, gatedOut = 0, splits = Nil), empty)
+    // a separate count() adds 2, 3, 3 and 0 jobs to these: its own scan, the
+    // repartition's shuffle and the count's exchange, each a job under AQE.
+    // On the provably empty input the optimizer drops the observed node,
+    // and the count() fallback reads an empty plan with no job.
+    assert((oneJobs, severalJobs, noneJobs, emptyJobs) == ((8, 9, 7, 5)),
+      s"fresh runs started $oneJobs, $severalJobs, $noneJobs and $emptyJobs jobs")
   }
 }

@@ -64,6 +64,56 @@ object PostprocessProps extends Properties("Postprocess") {
     ok
   }
 
+  // ---- linear-time kernels pinned to their regex references ----
+
+  private val supplementaryLetter = new String(Character.toChars(0x1d400)) // MATHEMATICAL BOLD CAPITAL A
+
+  // word pieces: ASCII, capitals, digits, `_`, combining marks and
+  // supplementary letters (all `(?U)\w`), and non-word symbols
+  private val wordPiece: Gen[String] = Gen.frequency(
+    4 -> word,
+    1 -> word.map(_.capitalize),
+    1 -> Gen.oneOf("1", "42", "_", "a_b", "x1", "e\u0301", "\u00e9t\u00e9",
+      supplementaryLetter, s"b$supplementaryLetter", "\u0301", "\u4e2d\u6587"),
+    1 -> Gen.oneOf("(", ")", "-", "\u2014", "\"", "'", "#", "\u00a7"))
+
+  // line-break hyphens at word edges and in chains, and proper names
+  private val hyphenPiece: Gen[String] = Gen.oneOf(
+    "-\n", "a-\nb-\nc", "Merleau-\nPonty", "merleau-\nponty", "Jean-\nPaul",
+    "philo-\nsophy", "-\n-\n", "x-\n-\ny", s"$supplementaryLetter-\n$supplementaryLetter",
+    "e\u0301-\ne\u0301", "1-\n2", "_-\n_", "well-known", "a-b-\nc", "x--\ny", "-b-\nc")
+
+  private val spacePiece: Gen[String] = Gen.oneOf(
+    " ", "  ", "   ", "\t", " \t ", "\n", "\n\n", "\r\n", "\r", "\u00a0", "\u0085",
+    "\u2028", "\u2029", "\u001c", "\u001d", "\u001e", "\u001f", "\u3000", "\ufeff")
+
+  private val punctPiece: Gen[String] = Gen.oneOf(".", ",", ";", ":", "!", "?", " .", "\t,", " \n!")
+
+  private val richText: Gen[String] =
+    Gen.chooseNum(0, 40).flatMap(n => Gen.listOfN(n, Gen.frequency(
+      5 -> wordPiece, 2 -> hyphenPiece, 4 -> spacePiece, 2 -> punctPiece))).map(_.mkString)
+
+  property("anchored postprocess patterns equal the unanchored reference") =
+    forAll(richText) { t =>
+      val (dehyph, dehyphCount) = PostprocessReference.dehyphenate(t)
+      val (punct, punctCount) = PostprocessReference.normalizePunctuation(t)
+      Postprocess.dehyphenate(t) == ((dehyph, Map("dehyphenations" -> dehyphCount))) &&
+      Postprocess.normalizePunctuation(t) == ((punct, Map("punctuation_fixes" -> punctCount))) &&
+      Postprocess(t) == PostprocessReference(t)
+    }
+
+  property("isPyWhitespace is the regex separator class on every char") =
+    org.scalacheck.Prop((0 to 0xffff).forall { c =>
+      graft.util.Hashing.isPyWhitespace(c.toChar) ==
+        TokenReference.PyWhitespaceRun.matcher(c.toChar.toString).matches()
+    })
+
+  property("the one-pass tokenizer equals the regex split") =
+    forAll(Gen.frequency(3 -> richText, 1 -> spacePiece, 1 -> Gen.const(""))) { t =>
+      val tokens = Tokens(t)
+      (0 until tokens.size).map(tokens(_)) == TokenReference.split(t)
+    }
+
   property("garbled and dictionary scores stay in [0,1]") = forAll(text) { t =>
     val g = GarbledSignal.score(t).score
     val d = DictionarySignal.score(t).score
@@ -182,7 +232,17 @@ object PostprocessProps extends Properties("Postprocess") {
         Gen.oneOf('@', '#', '$', '%', '1', '\u0001', '\u00df', '\u00e9')))).map(_.mkString),
     2 -> Gen.chooseNum(3, 9).flatMap(n => Gen.listOfN(n, Gen.alphaChar)).map(_.mkString),
     1 -> Gen.oneOf("GarBled", "AbCdEf", "ABc", "AbCD", "bcdfghjk", "xylophonesque",
-      "freundlichkeit", "mnbvcxzlich", "a@#$%b", "Ab", "aB", "AaA", "AbCd"))
+      "freundlichkeit", "mnbvcxzlich", "a@#$%b", "Ab", "aB", "AaA", "AbCd"),
+    // reference shapes (every ValidPatterns entry) and near misses
+    1 -> Gen.oneOf("xiv", "MCMXC", "mixed", "civic", "Isbn978", "isbnx", "ISBN",
+      "pp.12", "P. 3", "p.x", "ppp.1", "(12)", "(1a)", "[3]", "[x]", "\u00a712", "\u00a7x",
+      "12-34", "1999", "12a", "3\u20134", "1.2", "1.x", "AB12", "ABCDE1", "A12", "a12",
+      "12b-13c", "1--2", "1/2/3", "1.2.3", "\u0661\u0662", "\u00c912"),
+    // any first char below 256, then reference-ish tails
+    1 -> (for {
+      c <- Gen.choose(0x21, 0xff).map(_.toChar)
+      tail <- Gen.listOfN(3, Gen.oneOf('1', '2', '.', '-', 'i', 'v', 'p', ')', ']', 'x'))
+    } yield (c +: tail).mkString))
 
   property("classifyWord fast paths match the pure-regex reference") =
     forAll(trickyWord) { w =>

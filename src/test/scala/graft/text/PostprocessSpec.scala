@@ -150,4 +150,32 @@ class PostprocessSpec extends AnyFunSuite {
     val (t, _) = Postprocess.joinParagraphs(text)
     assert(t == s"${nbsp}Title\nNext section starts here", s"got: ${t.replace("\u00a0", "~")}")
   }
+
+  // B3: the StepBudget ticks once per pass and cannot stop a running
+  // Matcher, so a pattern that is quadratic in run length escapes it. The
+  // unanchored reference patterns take minutes on each of these rows; the
+  // 2,000-char copies pin the output to them.
+  test("adversarial 200,000-char text-layer rows extract in linear time") {
+    import graft.extract.Extractor
+    import graft.model.RawPage
+    val supplementary = new String(Character.toChars(0x1d400))
+    val shapes: Seq[(String, Int => String)] = Seq(
+      "a word before a line-break hyphen" -> (n => "w" * n + "-\n "),
+      "a non-ASCII word before a line-break hyphen" -> (n => "\u00e9" * n + "-\n "),
+      "a supplementary-letter word before a line-break hyphen" ->
+        (n => supplementary * (n / 2) + "-\n "),
+      "a space run before a word and a stop" -> (n => " " * n + "x ."),
+      "a tab run before trailing spaces" -> (n => "\t" * n + "x  "))
+    def extract(text: String) = Extractor.extractWithFallback(
+      RawPage("https://adversarial.example/doc", null, null, text, "en"), Extractor.Config())
+    shapes.foreach { case (name, shape) =>
+      val t0 = System.nanoTime()
+      val big = extract(shape(200000))
+      val seconds = (System.nanoTime() - t0) / 1e9
+      assert(big.success, s"$name: ${big.error}")
+      assert(seconds < 10, f"$name took $seconds%.1f s")
+      val small = shape(2000)
+      assert(extract(small).extracted_text == PostprocessReference(small)._1, name)
+    }
+  }
 }
