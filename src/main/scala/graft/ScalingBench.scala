@@ -58,7 +58,7 @@ object ScalingBench {
       val t0 = System.nanoTime()
       // on the salted path, skew detection is part of the measured job
       val skewed =
-        if (salted) ExtractionJob.detectSkewedHosts(pages, cfg) else Set.empty[String]
+        if (salted) ExtractionJob.detectSkewedHosts(pages) else Set.empty[String]
       val n = ExtractionJob.extract(pages, cfg, skewed)(spark).count()
       val secs = (System.nanoTime() - t0) / 1e9
       require(n == rows, s"row count $n != $rows")

@@ -53,9 +53,6 @@ object ExtractionJob {
       groupsPerCommit: Int = 16, // commit-batch size
       numPartitions: Int = 0, // salted-shuffle width (repartitionInput only); 0 -> default
       repartitionInput: Boolean = false, // host-salted input shuffle (skewed scans only)
-      skewSalts: Int = 16, // salt fan-out for skewed hosts
-      skewSampleFraction: Double = 0.01, // host-frequency detection sample
-      skewHostShare: Double = 0.05, // host is "skewed" above this row share
       maxKernelSteps: Long = 64L * 1024 * 1024 // B3 per-row work budget
   ) {
     // an empty commit layout would commit nothing (numGroups) or fail only
@@ -90,6 +87,15 @@ object ExtractionJob {
       * `synth:`, or a scan without real statistics).
       */
     val UnknownSizeGroups: Int = 64
+
+    /** Salt fan-out for a skewed host under `repartitionInput`. */
+    val SkewSalts: Int = 16
+
+    /** Seeded row sample [[detectSkewedHosts]] counts hosts on. */
+    val SkewSampleFraction: Double = 0.01
+
+    /** A host is skewed above this share of the sampled rows. */
+    val SkewHostShare: Double = 0.05
   }
 
   /** Commit groups for `bytes` of input: ceil(bytes / TargetGroupBytes),
@@ -229,13 +235,12 @@ object ExtractionJob {
   }
 
   /** Detect skewed hosts from a sample: any host holding more than
-    * `skewHostShare` of sampled rows (SURVEY.md §4.1). Sampled, not exact —
-    * salting is a physical-plan decision, results never depend on it.
+    * [[JobConfig.SkewHostShare]] of sampled rows (SURVEY.md §4.1). Sampled,
+    * not exact — salting is a physical-plan decision, results never depend
+    * on it.
     */
-  def detectSkewedHosts(pages: DataFrame, cfg: JobConfig): Set[String] = {
-    val sampled =
-      if (cfg.skewSampleFraction >= 1.0) pages else pages.sample(cfg.skewSampleFraction, 42L)
-    val counts = sampled
+  def detectSkewedHosts(pages: DataFrame): Set[String] = {
+    val counts = pages.sample(JobConfig.SkewSampleFraction, 42L)
       .select(graft.ops.TextAnalysis.hostOf(col("url")).as("host"))
       .groupBy("host")
       .count()
@@ -246,7 +251,7 @@ object ExtractionJob {
       if (total == 0) Set.empty
       else
         counts
-          .filter(col("count") > lit(math.max(1.0, total * cfg.skewHostShare)))
+          .filter(col("count") > lit(math.max(1.0, total * JobConfig.SkewHostShare)))
           .select("host")
           .collect()
           .map(_.getString(0))
@@ -262,8 +267,9 @@ object ExtractionJob {
     * By default the input is consumed on its scan partitions — no shuffle,
     * payloads never move. With `repartitionInput` (for scans whose file
     * layout clusters rows by host, e.g. WARC-by-host crawls) the input is
-    * hash-partitioned on host with hosts above `skewHostShare` explicitly
-    * salted across `skewSalts` sub-keys, so one mega-host cannot pin a task.
+    * hash-partitioned on host with hosts above [[JobConfig.SkewHostShare]]
+    * explicitly salted across [[JobConfig.SkewSalts]] sub-keys, so one
+    * mega-host cannot pin a task.
     */
   private def keyed(
       pages: DataFrame,
@@ -282,7 +288,7 @@ object ExtractionJob {
           "salted_key",
           when(
             col("host").isInCollection(skewedHosts + " none"),
-            concat(col("host"), lit("#"), pmod(xxhash64(col("url")), lit(cfg.skewSalts)))
+            concat(col("host"), lit("#"), pmod(xxhash64(col("url")), lit(JobConfig.SkewSalts)))
           ).otherwise(col("host"))
         )
         .repartition(partitions(cfg), col("salted_key"))
@@ -387,7 +393,7 @@ object ExtractionJob {
       return Seq.empty
     }
     val skewed =
-      if (cfg.repartitionInput) detectSkewedHosts(pages, cfg) else Set.empty[String]
+      if (cfg.repartitionInput) detectSkewedHosts(pages) else Set.empty[String]
 
     // released through its Dataset handle: raw-RDD unpersist would leak the
     // CacheManager entry and turn a same-plan re-persist into a no-op

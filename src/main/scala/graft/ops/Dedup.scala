@@ -267,10 +267,9 @@ object Dedup {
     * verification. Bands of `rowsPerBand` signature slots bucket-join
     * candidates (the only shuffle proportional to corpus size); candidate
     * pairs are then verified against the true shingle-set Jaccard so the
-    * output contains no false positives. Degenerate buckets are capped at
-    * `maxBucket` docs — a cap that only binds on mass-duplicate clusters,
-    * where pairwise output is the wrong shape anyway (cluster these via
-    * `exact`/`markDuplicates` instead). The shingle+signature projection is
+    * output contains no false positives. Every candidate pair is kept, so
+    * `k` identical documents yield all k(k-1)/2 pairs: route mass exact
+    * copies through [[markDuplicates]] first. The shingle+signature projection is
     * materialized once via [[truncateLineage]]: band generation AND both
     * sides of the verification join consume it, and without truncation each
     * consumer re-scans and re-shingles the corpus (the r5 PLANS.md
@@ -289,8 +288,7 @@ object Dedup {
       n: Int = 4,
       numHashes: Int = 64,
       bands: Int = 16,
-      threshold: Double = 0.8,
-      maxBucket: Int = 200
+      threshold: Double = 0.8
   )(implicit spark: SparkSession): DataFrame = {
     // native codegen expressions end to end (shingles -> signature -> band
     // keys, each bit-identical to the Scala kernels): the whole candidate
@@ -309,16 +307,8 @@ object Dedup {
         posexplode(minhashBands(col("sig"), bands)).as(Seq("band", "bucket")))
       .select(col("band"), col("bucket"), col("doc_id"))
 
-    // bucket cap via a streaming row_number window (no per-bucket array
-    // materialization — a collect_list would buffer a mass-duplicate
-    // mega-bucket whole before the slice); pairs from the capped self-join
-    val wBucket = Window.partitionBy(col("band"), col("bucket")).orderBy(col("doc_id").asc)
-    val capped = bandRows
-      .withColumn("rn", row_number().over(wBucket))
-      .filter(col("rn") <= maxBucket)
-      .drop("rn")
-    val candidates = capped.select(col("band"), col("bucket"), col("doc_id").as("a_id"))
-      .join(capped.select(col("band"), col("bucket"), col("doc_id").as("b_id")),
+    val candidates = bandRows.select(col("band"), col("bucket"), col("doc_id").as("a_id"))
+      .join(bandRows.select(col("band"), col("bucket"), col("doc_id").as("b_id")),
         Seq("band", "bucket"))
       .filter(col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"))
@@ -351,70 +341,54 @@ object Dedup {
     * (quadratic blowup at web scale), while ~32-bit keys keep expected
     * buckets O(N/4x10^9).
     *
-    * Degenerate buckets (mass-duplicate clusters: many IDENTICAL simhashes)
-    * are capped at `maxBucket` docs, mirroring `minhashPairs`: pairwise
-    * output is the wrong shape for those — route them through the radius-0
-    * escape (group by the simhash itself via [[simhashes]] /
-    * [[markDuplicates]]) instead.
+    * Identical hashes are grouped once: same-hash pairs come from one
+    * self-join on the hash itself (the whole search at radius 0), and the
+    * table search runs over DISTINCT hashes, whose pairs join back to their
+    * docs — so a mass-duplicate cluster is one key there, not a bucket in
+    * every table. Every pair within `radius` is returned once, so `k`
+    * identical hashes yield all k(k-1)/2 pairs: route mass exact copies
+    * through [[markDuplicates]] first.
     *
     * Verification (bit_count(a XOR b) <= radius) runs on codegen'd built-ins;
-    * candidate generation is exact (no false negatives below the cap) by the
-    * pigeonhole argument above.
+    * candidate generation is exact (no false negatives) by the pigeonhole
+    * argument above.
     */
-  def simhashPairs(docs: DataFrame, radius: Int = 3, maxBucket: Int = 1000)(
-      implicit spark: SparkSession): DataFrame =
-    simhashPairsFromHashes(simhashes(docs), radius, maxBucket)
+  def simhashPairs(docs: DataFrame, radius: Int = 3)(implicit spark: SparkSession): DataFrame =
+    simhashPairsFromHashes(simhashes(docs), radius)
 
   /** Pair search over a precomputed (doc_id, simhash) table — the testable
     * core of [[simhashPairs]].
     */
-  def simhashPairsFromHashes(hashed0: DataFrame, radius: Int = 3, maxBucket: Int = 1000)(
+  def simhashPairsFromHashes(hashed0: DataFrame, radius: Int = 3)(
       implicit spark: SparkSession): DataFrame = {
     require(radius >= 0 && radius <= 8, s"radius $radius out of range")
-    if (radius == 0) {
-      // exact-hash grouping: no pair search needed at all (window cap, same
-      // no-materialization discipline as below)
-      val w0 = Window.partitionBy(col("simhash")).orderBy(col("doc_id").asc)
-      val capped0 = hashed0
-        .select(col("doc_id"), col("simhash"))
-        .withColumn("rn", row_number().over(w0))
-        .filter(col("rn") <= maxBucket)
-        .drop("rn")
-      return capped0.select(col("simhash"), col("doc_id").as("a_id"))
-        .join(capped0.select(col("simhash"), col("doc_id").as("b_id")), Seq("simhash"))
-        .filter(col("a_id") < col("b_id"))
-        .select(col("a_id"), col("b_id"), lit(0).as("hamming"))
-    }
-    // per-table block-combination keys via the native codegen expression
-    // (table id = position in the key array) — no typed-map boundary
+    val hashed = hashed0.select(col("doc_id"), col("simhash"))
+    def docsOf(p: String) = hashed.select(col("simhash").as(s"${p}_h"), col("doc_id").as(s"${p}_id"))
+    val same = docsOf("a").join(docsOf("b"), col("a_h") === col("b_h"))
+      .filter(col("a_id") < col("b_id"))
+      .select(col("a_id"), col("b_id"), lit(0).as("hamming"))
+    if (radius == 0) return same
+    // per-table block-combination keys of each distinct hash via the native
+    // codegen expression (table id = position in the key array)
     graft.expressions.GraftFunctions.register(hashed0.sparkSession)
-    val posts = hashed0
-      .select(col("doc_id"), col("simhash"),
+    val posts = hashed.select(col("simhash")).distinct()
+      .select(col("simhash"),
         posexplode(graft.expressions.GraftFunctions.simhashKeys(col("simhash"), radius))
           .as(Seq("table_id", "key")))
-      .select(col("table_id"), col("key"), col("doc_id"), col("simhash"))
-
-    // Bucket cap WITHOUT materializing buckets: a row_number window keeps
-    // the maxBucket lowest doc_ids per (table,key) — rows stream through the
-    // spill-capable window sort; a collect_list cap would materialize a
-    // mega-bucket (10^7 identical hashes) in ONE aggregation buffer before
-    // slicing. Pairs come from the capped self-join, hamming-verified.
-    val wBucket = Window.partitionBy(col("table_id"), col("key")).orderBy(col("doc_id").asc)
-    val capped = posts
-      .withColumn("rn", row_number().over(wBucket))
-      .filter(col("rn") <= maxBucket)
-      .drop("rn")
-    val a = capped.select(col("table_id"), col("key"),
-      col("doc_id").as("a_id"), col("simhash").as("a_h"))
-    val b = capped.select(col("table_id"), col("key"),
-      col("doc_id").as("b_id"), col("simhash").as("b_h"))
-    a.join(b, Seq("table_id", "key"))
-      .filter(col("a_id") < col("b_id"))
+    val near = posts.select(col("table_id"), col("key"), col("simhash").as("a_h"))
+      .join(posts.select(col("table_id"), col("key"), col("simhash").as("b_h")), Seq("table_id", "key"))
+      .filter(col("a_h") =!= col("b_h"))
       // hamming as pure built-ins (bit_count(xor)) — stays inside codegen
-      .select(col("a_id"), col("b_id"),
+      .select(col("a_h"), col("b_h"),
         bit_count(col("a_h").bitwiseXOR(col("b_h"))).cast("int").as("hamming"))
       .filter(col("hamming") <= radius)
       .distinct()
+      // both orientations of each hash pair join back; a_id < b_id keeps one
+      .join(docsOf("a"), "a_h")
+      .join(docsOf("b"), "b_h")
+      .filter(col("a_id") < col("b_id"))
+      .select(col("a_id"), col("b_id"), col("hamming"))
+    same.unionByName(near)
   }
 
   /** Lineage truncation for iterative plans: reliable `checkpoint()` when
@@ -702,6 +676,7 @@ object Dedup {
       col("label"),
       col("embedding").cast("array<double>").as("v"))
       .withColumn("norm", sqrt(Similarity.dotCol(col("v"), col("v"))))
+      .filter(col("norm") > 0.0) // no cosine for a zero vector (see Similarity.withNorm)
     val a = e.select(col("label"), col("vec_id").as("a_id"), col("v").as("a_v"),
       col("norm").as("a_norm"))
     val b = e.select(col("label"), col("vec_id").as("b_id"), col("v").as("b_v"),
@@ -1012,31 +987,20 @@ object Dedup {
     * oracle's planted guarantee) collide in every table under any scheme;
     * only which NEAR-threshold pairs happen to collide shifts.
     *
-    * Degenerate buckets are capped at `maxBucket` vectors (r7 — the same
-    * discipline as [[minhashPairs]]/[[simhashPairs]]): IDENTICAL vectors
-    * collide in EVERY table by construction, so one mass-duplicated
-    * embedding (the all-zeros vector of empty docs, a boilerplate page
-    * embedded 10^6 times) would otherwise form a quadratic bucket in all
-    * `tables` tables at once — `tables` x 10^12 candidate rows from a
-    * single hot key. The cap is a streaming row_number window (lowest
-    * `maxBucket` vec_ids per packed table|bucket key — rows stream through
-    * the spill-capable window sort, no bucket is ever materialized whole),
-    * so pair output from a mega-bucket is bounded at
-    * `maxBucket*(maxBucket-1)/2` per table. The cap only binds on
-    * mass-duplicate clusters, where pairwise output is the wrong shape
-    * anyway: route exact-identical vectors through a hash-grouping dedup
-    * first (group by a digest of the vector — the embedding analogue of
-    * [[exact]]), exactly as the shingle family documents for its own
-    * mass-dup escape. Expected bucket size on diffuse data is
-    * N / 2^planes per table — far under any sensible cap.
+    * Every pair that collides in some table and passes the cosine check is
+    * returned once; IDENTICAL vectors collide in every table, so `k` copies
+    * of one vector yield all k(k-1)/2 pairs — route mass exact copies
+    * through a hash-grouping dedup first (group by a digest of the vector,
+    * the embedding analogue of [[exact]]). Expected bucket size on diffuse
+    * data is N / 2^planes per table. A zero-norm vector has no cosine and
+    * takes part in no pair ([[Similarity.withNorm]]).
     */
   def embeddingDupPairsLsh(
       embeddings: DataFrame,
       threshold: Double = 0.95,
       tables: Int = 6,
       planes: Int = 8,
-      seed: Long = 7L,
-      maxBucket: Int = 200
+      seed: Long = 7L
   ): DataFrame = {
     // native codegen bucketing (no udf boundary in candidate generation);
     // the packed (table << 32 | bucket) long IS the blocking key. Register
@@ -1044,22 +1008,12 @@ object Dedup {
     // not SparkSession.active, which can be a different session under
     // newSession()/multi-threaded callers.
     graft.expressions.GraftFunctions.register(embeddings.sparkSession)
-    val e = embeddings.select(
-      col("vec_id"),
-      col("embedding").cast("array<double>").as("v"))
-      .withColumn("norm", sqrt(Similarity.dotCol(col("v"), col("v"))))
+    val e = Similarity.withNorm(embeddings)
       .withColumn("tb",
         explode(graft.expressions.GraftFunctions.signLshPacked(col("v"), seed, planes, tables)))
-    // bucket cap without materializing buckets (see scaladoc): keep the
-    // maxBucket lowest vec_ids per packed table|bucket key
-    val wBucket = Window.partitionBy(col("tb")).orderBy(col("vec_id").asc)
-    val capped = e
-      .withColumn("rn", row_number().over(wBucket))
-      .filter(col("rn") <= maxBucket)
-      .drop("rn")
-    val a = capped.select(col("tb"), col("vec_id").as("a_id"),
+    val a = e.select(col("tb"), col("vec_id").as("a_id"),
       col("v").as("a_v"), col("norm").as("a_norm"))
-    val b = capped.select(col("tb"), col("vec_id").as("b_id"),
+    val b = e.select(col("tb"), col("vec_id").as("b_id"),
       col("v").as("b_v"), col("norm").as("b_norm"))
     a.join(b, Seq("tb"))
       .filter(col("a_id") < col("b_id"))

@@ -29,11 +29,16 @@ object Similarity {
   def cosineCol(a: Column, b: Column): Column =
     dotCol(a, b) / (sqrt(dotCol(a, a)) * sqrt(dotCol(b, b)))
 
-  /** vec_id, v (double array), norm — the join-ready projection. */
+  /** vec_id, v (double array), norm — the join-ready projection. A vector
+    * of norm 0 has no cosine (and ANSI division by its norm fails the
+    * query), so it is dropped here: it takes part in no pair and no
+    * neighbour list of any operator built on this projection.
+    */
   private[ops] def withNorm(embeddings: DataFrame): DataFrame =
     embeddings
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("norm", sqrt(dotCol(col("v"), col("v"))))
+      .filter(col("norm") > 0.0)
 
   /** Brute-force top-k: queries (small) are broadcast against the corpus;
     * norms precomputed per row (never per pair); ranking is a per-query
@@ -69,7 +74,7 @@ object Similarity {
     * init (deterministic k-means++ analogue: well-spread seeds, ties to the
     * lower sample index), a fixed number of Lloyd iterations with cosine
     * assignment, empty cells keeping their previous centroid. Returns unit
-    * vectors.
+    * vectors. `e` is a [[withNorm]] projection: every norm is positive.
     */
   private[ops] def trainCentroids(
       e: DataFrame,
@@ -79,7 +84,6 @@ object Similarity {
   ): Array[Array[Double]] = {
     val sample: Array[Array[Double]] = e
       .select(col("vec_id"), col("v"), col("norm"))
-      .filter(col("norm") > 0.0)
       .orderBy(xxhash64(col("vec_id")).asc, col("vec_id").asc)
       .limit(math.max(nCentroids, nCentroids * sampleFactor))
       .collect()
@@ -178,16 +182,14 @@ object Similarity {
     */
   def assignCells(embeddings: DataFrame, nCentroids: Int = 16)(
       implicit spark: SparkSession): DataFrame =
-    assignCellsWith(embeddings, trainedCentroids(withNorm(embeddings), nCentroids))
+    assignCellsWith(embeddings, col("embedding").cast("array<double>"),
+      trainedCentroids(withNorm(embeddings), nCentroids))
 
-  private def assignCellsWith(
-      embeddings: DataFrame,
-      centroids: Seq[Seq[Double]]): DataFrame = {
-    graft.expressions.GraftFunctions.register(embeddings.sparkSession)
-    embeddings.withColumn("cell",
-      element_at(
-        graft.expressions.GraftFunctions.ivfCells(
-          col("embedding").cast("array<double>"), centroids, 1), 1))
+  /** `df` with the cell of its vector column `v` appended as `cell`. */
+  private def assignCellsWith(df: DataFrame, v: Column, centroids: Seq[Seq[Double]]): DataFrame = {
+    graft.expressions.GraftFunctions.register(df.sparkSession)
+    df.withColumn("cell",
+      element_at(graft.expressions.GraftFunctions.ivfCells(v, centroids, 1), 1))
   }
 
   /** One row per (query, probed cell): the `nProbe` cells nearest each
@@ -228,9 +230,7 @@ object Similarity {
     // separate assignCells/probeCells calls agree too — they just pay a
     // second training)
     val cents = trainedCentroids(e, nCentroids)
-    val corpus = assignCellsWith(embeddings, cents)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"), col("cell"))
-      .withColumn("norm", sqrt(dotCol(col("v"), col("v"))))
+    val corpus = assignCellsWith(e, col("v"), cents)
     val queries = probeCellsWith(e, queryFilter, cents, nProbe)
     val scored = corpus
       .join(broadcast(queries), Seq("cell"))

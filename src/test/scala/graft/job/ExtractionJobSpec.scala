@@ -94,7 +94,7 @@ class ExtractionJobSpec extends AnyFunSuite {
     val partial = cfg.copy(numGroups = 8, groupsPerCommit = 8)
     val firstBatchCfg = partial.copy(groupsPerCommit = 4)
     // run only the first commit batch by calling extract+write manually
-    val skewed = ExtractionJob.detectSkewedHosts(pages, partial)
+    val skewed = ExtractionJob.detectSkewedHosts(pages)
     val firstGroups = Some(Seq(0, 1, 2, 3))
     import spark.implicits._
     val firstResults = ExtractionJob.extract(pages, firstBatchCfg, skewed, firstGroups)
@@ -182,12 +182,13 @@ class ExtractionJobSpec extends AnyFunSuite {
     import spark.implicits._
     // 60% of rows on one host, written with an UPPERCASE scheme and
     // mixed-case authority — a case-sensitive host extract would read an
-    // empty host for every one of them and the mega-host would evade salting
-    val urls = (0 until 100).map { i =>
-      if (i < 60) s"HTTPS://Skew.Example.COM/page$i" else s"https://unique$i.org/p"
+    // empty host for every one of them and the mega-host would evade salting.
+    // 20,000 rows put about 200 in the seeded 1% sample: the mega-host holds
+    // about 120 of them against a skew bar of 10, every other host at most 1.
+    val urls = (0 until 20000).map { i =>
+      if (i % 5 < 3) s"HTTPS://Skew.Example.COM/page$i" else s"https://unique$i.org/p"
     }.toDF("url")
-    val c = cfg.copy(skewSampleFraction = 1.0, skewHostShare = 0.3)
-    val skewed = ExtractionJob.detectSkewedHosts(urls, c)
+    val skewed = ExtractionJob.detectSkewedHosts(urls)
     assert(skewed == Set("skew.example.com"), s"got $skewed")
   }
 
@@ -199,7 +200,7 @@ class ExtractionJobSpec extends AnyFunSuite {
         .sortBy(_._1).toSeq
     val r1 = run(cfg.copy(numPartitions = 1), Set.empty)
     val r2 = run(
-      cfg.copy(numPartitions = 7, skewSalts = 3, repartitionInput = true),
+      cfg.copy(numPartitions = 7, repartitionInput = true),
       Set("host0.example"))
     assert(r1 == r2)
     // the default (narrow) path keeps the input's partitioning, so vary it

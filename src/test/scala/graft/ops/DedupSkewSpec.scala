@@ -212,45 +212,51 @@ class DedupSkewSpec extends AnyFunSuite {
         s"only-binary=${(actual -- expected).take(3)}")
   }
 
-  test("embeddingDupPairsLsh: planted mega-bucket is capped, diffuse output unchanged") {
-    // 1000 IDENTICAL vectors — they collide in EVERY table by construction,
-    // the exact regime the maxBucket cap exists for (r7 / r6-verdict #1:
-    // without the cap this is a quadratic bucket in all 6 tables at once)
-    val mega = (0L until 1000L).map { i =>
-      (i, Array.tabulate(8)(d => (0.1 * (d + 1)).toFloat))
-    }.toDF("vec_id", "embedding")
-    val capped = Dedup.embeddingDupPairsLsh(mega, threshold = 0.95, maxBucket = 50)
-    val pairs = capped.collect().map(r =>
-      (r.getAs[Long]("a_id"), r.getAs[Long]("b_id")))
-    // identical vectors share every bucket of every table, so the capped
-    // survivor set is the 50 lowest ids in each table — pair output is
-    // bounded at C(50, 2), never the 499,500 uncapped pairs
-    assert(pairs.length == 50 * 49 / 2, s"got ${pairs.length} pairs")
-    assert(pairs.forall { case (a, b) => a < 50 && b < 50 })
+  test("embeddingDupPairsLsh: a mass-duplicate bucket yields every pair; diffuse output is the brute-force set") {
+    // 250 IDENTICAL vectors collide in every bucket of every table: all
+    // C(250, 2) pairs come out, once each, at cosine 1.0
+    val k = 250L
+    val mega = (0L until k).map(i => (i, Array.tabulate(8)(d => (0.1 * (d + 1)).toFloat)))
+      .toDF("vec_id", "embedding")
+    val pairs = Dedup.embeddingDupPairsLsh(mega, threshold = 0.95).collect().map(r =>
+      (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"), r.getAs[Double]("cosine")))
+    assert(pairs.length == k * (k - 1) / 2, s"got ${pairs.length} pairs")
+    assert(pairs.map(p => (p._1, p._2)).toSet.size == pairs.length)
+    assert(pairs.forall { case (a, b, c) => a < b && c == 1.0 })
 
-    // on diffuse data (distinct vectors, buckets far under the cap) the cap
-    // must be invisible: same pair set as an effectively-uncapped run —
-    // the q_dedup_embedding_lsh oracle regime
-    val diffuse = (0L until 120L).map { i =>
-      val v = Array.tabulate(8) { d =>
-        (Dedup.mix64(i * 131 + d).toDouble / Long.MaxValue).toFloat
+    // diffuse vectors plus 5 planted exact dups of ids 0..4 (the
+    // q_dedup_embedding_lsh regime): the output is exactly the brute-force
+    // cosine >= 0.95 set — the 5 planted pairs and one random pair at 0.952
+    def vec(i: Long) = Array.tabulate(8)(d => (Dedup.mix64(i * 131 + d).toDouble / Long.MaxValue).toFloat)
+    val rows = (0L until 120L).map(i => (i, vec(i))) ++ (0L until 5L).map(i => (i + 100000L, vec(i)))
+    def cos(a: Array[Float], b: Array[Float]): Double = {
+      def dot(x: Array[Float], y: Array[Float]) = x.indices.map(d => x(d).toDouble * y(d)).sum
+      dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
+    }
+    val brute = (for ((a, va) <- rows; (b, vb) <- rows if a < b && cos(va, vb) >= 0.95) yield (a, b)).toSet
+    assert(brute == (0L until 5L).map(i => (i, i + 100000L)).toSet + ((14L, 51L)))
+    val found = Dedup.embeddingDupPairsLsh(rows.toDF("vec_id", "embedding"), threshold = 0.95)
+      .collect().map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"))).toSet
+    assert(found == brute)
+  }
+
+  test("minhash, simhash and embedding-LSH pair searches plan no window") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val emb = (0L until 300L).map(i => (i, Array.tabulate(8)(d => if (d == i % 3) 1.0f else 0.0f)))
+      .toDF("vec_id", "embedding")
+    val searches = Seq(
+      "minhashPairs" -> (Dedup.minhashPairs(skewed), 700L * 699 / 2),
+      "simhashPairsFromHashes" -> (Dedup.simhashPairsFromHashes(Dedup.simhashes(skewed), radius = 3),
+        700L * 699 / 2),
+      "embeddingDupPairsLsh" -> (Dedup.embeddingDupPairsLsh(emb), 3L * 100 * 99 / 2))
+    searches.foreach { case (name, (pairs, expected)) =>
+      noWindow(pairs)
+      // the 700-copy mega-cluster and the three 100-copy vectors give every pair
+      assert(pairs.collect().length == expected, name)
+      val windows = new AdaptiveSparkPlanHelper {}.collect(pairs.queryExecution.executedPlan) {
+        case p if p.nodeName.startsWith("Window") => p.nodeName
       }
-      (i, v)
-    }.toDF("vec_id", "embedding") // plus 5 planted exact dups of ids 0..4
-    val planted = (0L until 5L).map { i =>
-      (i + 100000L,
-        Array.tabulate(8)(d => (Dedup.mix64(i * 131 + d).toDouble / Long.MaxValue).toFloat))
-    }.toDF("vec_id", "embedding")
-    val all = diffuse.unionByName(planted)
-    def pairSet(mb: Int) =
-      Dedup.embeddingDupPairsLsh(all, threshold = 0.95, maxBucket = mb)
-        .collect().map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"))).toSet
-    val atDefault = pairSet(200)
-    assert(atDefault == pairSet(1000000), "cap must not bind on diffuse buckets")
-    // and the planted exact dups are still found (identical vectors collide
-    // in every table regardless of the cap)
-    (0L until 5L).foreach { i =>
-      assert(atDefault.contains((i, i + 100000L)), s"planted dup $i missing")
+      assert(windows.isEmpty, s"$name plans $windows")
     }
   }
 }

@@ -10,7 +10,8 @@ import graft.SparkTestBase
   * brute-force all-pairs computation over [[Dedup.shingleHashes]]: planted
   * boilerplate above any df bound, a pair on the rounding edge of the
   * threshold, and generated corpora with null, empty, one-token, identical
-  * and boilerplate documents on 1 and 7 input partitions.
+  * and boilerplate documents on 1 and 7 input partitions, one of them with
+  * an exact-copy cluster of 210 documents.
   */
 class NgramJaccardSpec extends AnyFunSuite {
   private implicit lazy val spark: org.apache.spark.sql.SparkSession = SparkTestBase.spark
@@ -107,7 +108,11 @@ class NgramJaccardSpec extends AnyFunSuite {
 
   test("ngramJaccardPairs equals brute force and minhashPairs is a subset, on 1 and 7 partitions") {
     for (seed <- 1 to 3) {
-      val rows = corpus(seed, 40)
+      // seed 3 adds 210 exact copies: one band bucket larger than the
+      // 200-doc cap minhashPairs once applied, whose every pair is Jaccard 1
+      val copies = if (seed == 3) (0L until 210L).map(i => (1000L + i, "a b c d e f a b")) else Nil
+      val copyPairs = (for ((a, _) <- copies; (b, _) <- copies if a < b) yield (a, b, 1.0)).toSet
+      val rows = corpus(seed, 40) ++ copies
       val docs = table(rows)
       for (parts <- Seq(1, 7); t <- Seq(0.3, 0.5, 0.8, 1.0)) {
         val input = docs.repartition(parts)
@@ -118,6 +123,7 @@ class NgramJaccardSpec extends AnyFunSuite {
         assert(exact.toSet == expected, s"$at: missing ${expected -- exact} extra ${exact.toSet -- expected}")
         val lsh = triples(Dedup.minhashPairs(input, n = 4, threshold = t)).toSet
         assert(lsh.subsetOf(expected), s"$at: ${lsh -- expected}")
+        assert(copyPairs.subsetOf(lsh), s"$at: ${(copyPairs -- lsh).size} copy pairs missing")
       }
       assert(brute(rows, 4, 0.3).nonEmpty && brute(rows, 4, 1.0).nonEmpty, s"seed $seed corpus has no pairs")
     }

@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -103,16 +105,17 @@ class DedupSpec extends AnyFunSuite {
     assert(defaults.contains((0L, 3L)) && defaults.contains((0L, 1L)))
   }
 
-  test("simhash mega-cluster buckets are capped; radius-0 escape covers them") {
-    val cluster = (0 until 500).map(i => (i.toLong, 0x0123456789abcdefL))
-      .toDF("doc_id", "simhash")
-    // identical hashes = one bucket per table; the cap bounds in-bucket pairs
-    val capped = Dedup.simhashPairsFromHashes(cluster, radius = 3, maxBucket = 50)
-    assert(capped.count() == 50L * 49 / 2,
-      "capped mega-bucket must yield C(cap,2) pairs, not C(500,2)")
-    // the radius-0 escape (group by the hash itself) handles the full cluster
-    val zero = Dedup.simhashPairsFromHashes(cluster, radius = 0, maxBucket = 500)
-    assert(zero.count() == 500L * 499 / 2)
+  test("simhash mega-cluster: every pair of identical hashes, at radius 3 and at radius 0") {
+    val k = 1200L
+    val cluster = (0L until k).map(i => (i, 0x0123456789abcdefL)).toDF("doc_id", "simhash")
+    // identical hashes share every table's bucket: the pair search must
+    // still emit each of the C(k, 2) pairs exactly once, at hamming 0
+    Seq(3, 0).foreach { radius =>
+      val pairs = Dedup.simhashPairsFromHashes(cluster, radius = radius)
+      assert(pairs.count() == k * (k - 1) / 2, s"radius $radius")
+      assert(pairs.select("a_id", "b_id").distinct().count() == k * (k - 1) / 2)
+      assert(pairs.filter(col("hamming") =!= 0 || col("a_id") >= col("b_id")).count() == 0L)
+    }
   }
 
   test("multi-table simhash construction is exhaustive within radius (random)") {
@@ -134,6 +137,40 @@ class DedupSpec extends AnyFunSuite {
     val found = Dedup.simhashPairsFromHashes(df2, radius = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(found == brute, s"missing=${(brute -- found).take(5)} extra=${(found -- brute).take(5)}")
+  }
+
+  // generated hash sets: random hashes, neighbours planted at hamming 0-4,
+  // one identical-hash cluster and two copies of a hash near that cluster
+  private val hashSets: Gen[Seq[Long]] = for {
+    n <- Gen.chooseNum(5, 40)
+    base <- Gen.listOfN(n, Gen.long)
+    flips = for { d <- Gen.chooseNum(0, 4); bits <- Gen.pick(d, 0 until 64) } yield bits
+    planted <- Gen.listOfN(n, Gen.zip(Gen.chooseNum(0, n - 1), flips))
+    cluster <- Gen.zip(Gen.long, Gen.chooseNum(2, 30))
+    near <- flips
+  } yield {
+    def flip(h: Long, bits: Iterable[Int]) = bits.foldLeft(h)((x, b) => x ^ (1L << b))
+    base ++ planted.map { case (i, bits) => flip(base(i), bits) } ++
+      Seq.fill(cluster._2)(cluster._1) ++ Seq.fill(2)(flip(cluster._1, near))
+  }
+
+  test("simhashPairsFromHashes equals brute force at radius 0-4 on 1 and 7 partitions (property)") {
+    val prop = Prop.forAll(hashSets) { hs =>
+      val rows = hs.zipWithIndex.map { case (h, i) => (3L * i + 1, h) }
+      val bad = for {
+        parts <- Seq(1, 7)
+        radius <- 0 to 4
+        expected = (for ((a, ha) <- rows; (b, hb) <- rows if a < b && Dedup.hamming(ha, hb) <= radius)
+          yield (a, b, Dedup.hamming(ha, hb))).toSet
+        got = Dedup.simhashPairsFromHashes(rows.toDF("doc_id", "simhash").repartition(parts), radius)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+        if got.size != expected.size || got.toSet != expected
+      } yield s"$parts partitions, radius $radius: missing ${expected -- got} extra ${got.toSet -- expected}"
+      Prop(bad.isEmpty) :| bad.take(2).mkString("\n")
+    }
+    val res = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(8).withInitialSeed(Seed(20261019L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
 
   test("dup clusters: connected components with min-id survivors") {
@@ -565,10 +602,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("trained IVF cells are balanced (no degenerate coarse quantizer)") {
-    import graft.ops.Similarity
-    val e = emb
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("norm", sqrt(Similarity.dotCol(col("v"), col("v"))))
+    val e = Similarity.withNorm(emb)
     val centroids = Similarity.trainCentroids(e, nCentroids = 10)
     assert(centroids.length == 10)
     // assign every vector locally and check no cell absorbs the corpus
@@ -587,6 +621,31 @@ class SimilaritySpec extends AnyFunSuite {
       s"cell sizes too skewed: ${counts.toSeq} (mean $mean)")
     assert(counts.count(_ > 0) >= centroids.length / 2,
       s"too many dead cells: ${counts.toSeq}")
+  }
+
+  test("a zero-norm embedding takes part in no pair and no neighbour list") {
+    // two all-zero vectors (an empty document's embedding) mixed into
+    // diffuse ones: under ANSI division every cosine over them would raise
+    // DIVIDE_BY_ZERO, so each operator must drop them before it divides
+    val diffuse = (0L until 80L).map { i =>
+      (i, Array.tabulate(8)(d => (Dedup.mix64(i * 131 + d).toDouble / Long.MaxValue).toFloat), 0)
+    }
+    val zeros = Seq(1000L, 1001L).map(i => (i, Array.fill(8)(0.0f), 0))
+    val clean = diffuse.toDF("vec_id", "embedding", "label")
+    val mixed = (diffuse ++ zeros).toDF("vec_id", "embedding", "label")
+    val queries = col("vec_id") < 10 || col("vec_id") >= 1000
+    val ops: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+      "embeddingDupPairs" -> (Dedup.embeddingDupPairs(_, threshold = 0.4)),
+      "embeddingDupPairsLsh" -> (Dedup.embeddingDupPairsLsh(_, threshold = 0.5, planes = 2)),
+      "bruteForceTopK" -> (Similarity.bruteForceTopK(_, queries, 5)),
+      "lshTopK" -> (Similarity.lshTopK(_, queries, 5, planes = 3, nTables = 6)),
+      "ivfTopK" -> (Similarity.ivfTopK(_, queries, 5, nCentroids = 4, nProbe = 2)))
+    ops.foreach { case (name, op) =>
+      val got = op(mixed).collect().map(_.toString).sorted
+      assert(got.nonEmpty, s"$name: no output on the diffuse vectors")
+      assert(got.sameElements(op(clean).collect().map(_.toString).sorted),
+        s"$name: the zero vectors changed the output")
+    }
   }
 
   test("cosineCol matches scalar cosine") {
