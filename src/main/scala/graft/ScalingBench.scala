@@ -53,8 +53,7 @@ object ScalingBench {
             concat(upper(prefix), expr("substring(url, length(substring_index(url, '/', 3)) + 1)")))
             .otherwise(col("url")))
       }
-      val cfg = ExtractionJob.JobConfig(
-        numGroups = 64, numPartitions = cpus * 4, repartitionInput = salted)
+      val cfg = ExtractionJob.JobConfig(numGroups = 64, repartitionInput = salted)
       val t0 = System.nanoTime()
       // on the salted path, skew detection is part of the measured job
       val skewed =

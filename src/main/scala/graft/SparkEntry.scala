@@ -129,7 +129,7 @@ object SparkEntry {
         col("text"),
         lit("en").as("lang"))
     val pages = corpus.unionByName(docsAsPages)
-    val cfg = ExtractionJob.JobConfig(numGroups = 16, numPartitions = 8)
+    val cfg = ExtractionJob.JobConfig(numGroups = 16)
     ExtractionJob.extract(pages, cfg)(spark)
       .select(col("url"), col("engine"), col("success"),
         round(col("quality.score"), 6).as("quality_score"),
@@ -474,11 +474,11 @@ object SparkEntry {
       val docs = s.read.parquet(t(dir, "documents"))
       Dedup.dupClusters(docs, Dedup.ngramJaccardPairs(docs, n = 4, threshold = 0.8)(s))(s)
     }),
-    // same labelling via alternating large-star/small-star contraction —
-    // the adversarial-diameter drop-in, held to the identical oracle
+    // a fixed query key: it runs the same one connected-components
+    // operator as q_dedup_clusters, held to the identical oracle
     "q_dedup_clusters_star" -> ((s, dir) => {
       val docs = s.read.parquet(t(dir, "documents"))
-      Dedup.dupClustersStar(docs, Dedup.ngramJaccardPairs(docs, n = 4, threshold = 0.8)(s))(s)
+      Dedup.dupClusters(docs, Dedup.ngramJaccardPairs(docs, n = 4, threshold = 0.8)(s))(s)
     }),
     // quality-aware canonical selection: each near-dup cluster keeps its
     // highest-quality member (char count as the quality, ties -> min id)
@@ -690,7 +690,7 @@ object SparkEntry {
     "q_extract_pipeline" -> ((s, dir) => extractPipelineDf(s)),
     "q_extract_summary" -> ((s, dir) => {
       val pages = CorpusGen.pages(s, 2000).toDF()
-      val cfg = ExtractionJob.JobConfig(numGroups = 16, numPartitions = 8)
+      val cfg = ExtractionJob.JobConfig(numGroups = 16)
       ExtractionJob.summarize(ExtractionJob.extract(pages, cfg)(s))
     }),
     // Digest gates: the corpus is seeded and deterministic (CorpusGen,
@@ -711,7 +711,7 @@ object SparkEntry {
     }),
     "q_extract_summary_gate" -> ((s, dir) => {
       val pages = CorpusGen.pages(s, 2000).toDF()
-      val cfg = ExtractionJob.JobConfig(numGroups = 16, numPartitions = 8)
+      val cfg = ExtractionJob.JobConfig(numGroups = 16)
       // integer columns only: mean_quality is a cross-row double AVG whose
       // partial-combine order depends on partitioning, so freezing its
       // formatted value could flake on an ulp at a rounding boundary under
@@ -733,7 +733,7 @@ object SparkEntry {
     */
   private def extractPipelineDf(s: SparkSession): DataFrame = {
     val pages = CorpusGen.pages(s, 2000).toDF()
-    val cfg = ExtractionJob.JobConfig(numGroups = 16, numPartitions = 8)
+    val cfg = ExtractionJob.JobConfig(numGroups = 16)
     ExtractionJob.extract(pages, cfg)(s)
       .select(col("url"), col("engine"), col("success"),
         round(col("quality.score"), 6).as("quality_score"),

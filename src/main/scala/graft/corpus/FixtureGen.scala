@@ -59,7 +59,7 @@ object FixtureGen {
         CorpusGen.encryptedPdfPages(
           spark, Rows + SplicedRows + RealPdfRows + ModernPdfRows + CidPdfRows,
           EncPdfRows).toDF())
-    val cfg = ExtractionJob.JobConfig(numGroups = 8, numPartitions = 4, diagnostics = true)
+    val cfg = ExtractionJob.JobConfig(numGroups = 8, diagnostics = true)
     val results = ExtractionJob.extract(pages, cfg).collect().sortBy(_.url)
 
     Files.createDirectories(out.resolve("extracted"))

@@ -51,9 +51,7 @@ object ExtractionJob {
       maxBytes: Int = 512 * 1024,
       numGroups: Int = JobConfig.SizedToInput, // commit groups (url-hash buckets); resume unit
       groupsPerCommit: Int = 16, // commit-batch size
-      numPartitions: Int = 0, // salted-shuffle width (repartitionInput only); 0 -> default
-      repartitionInput: Boolean = false, // host-salted input shuffle (skewed scans only)
-      maxKernelSteps: Long = 64L * 1024 * 1024 // B3 per-row work budget
+      repartitionInput: Boolean = false // host-salted input shuffle (skewed scans only)
   ) {
     // an empty commit layout would commit nothing (numGroups) or fail only
     // after the whole extract job ran (groupsPerCommit): reject it up front
@@ -65,8 +63,7 @@ object ExtractionJob {
       threshold = threshold,
       diagnostics = diagnostics,
       forceHeavy = forceHeavy,
-      maxBytes = maxBytes,
-      maxKernelSteps = maxKernelSteps
+      maxBytes = maxBytes
     )
   }
 
@@ -269,7 +266,7 @@ object ExtractionJob {
     * layout clusters rows by host, e.g. WARC-by-host crawls) the input is
     * hash-partitioned on host with hosts above [[JobConfig.SkewHostShare]]
     * explicitly salted across [[JobConfig.SkewSalts]] sub-keys, so one
-    * mega-host cannot pin a task.
+    * mega-host cannot pin a task. The shuffle is `defaultParallelism` wide.
     */
   private def keyed(
       pages: DataFrame,
@@ -291,14 +288,11 @@ object ExtractionJob {
             concat(col("host"), lit("#"), pmod(xxhash64(col("url")), lit(JobConfig.SkewSalts)))
           ).otherwise(col("host"))
         )
-        .repartition(partitions(cfg), col("salted_key"))
+        .repartition(spark.sparkContext.defaultParallelism, col("salted_key"))
     }
     df.select("url", "warc_ts", "html", "text", "lang", "commit_group")
       .as[KeyedPage]
   }
-
-  private def partitions(cfg: JobConfig)(implicit spark: SparkSession): Int =
-    if (cfg.numPartitions > 0) cfg.numPartitions else spark.sparkContext.defaultParallelism
 
   /** Fast extraction + heavy fallback over (a batch of) the input. Pure
     * transformation — no writes. ONE narrow mapPartitions stage: fast

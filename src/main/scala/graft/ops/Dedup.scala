@@ -415,69 +415,65 @@ object Dedup {
     * gets `cluster_id` = the smallest doc_id reachable through the pairs
     * (docs in no pair keep their own id) — the step a training pipeline runs
     * after candidate generation, so each near-dup component keeps exactly
-    * one survivor (`doc_id == cluster_id`).
+    * one survivor (`doc_id == cluster_id`). Only pairs whose two ends are
+    * both doc ids are edges: an endpoint missing from `docs` joins nothing,
+    * and a doc_id listed twice keeps both rows.
     *
-    * Iterative smallest-label propagation with a driver convergence loop:
-    * each iteration is one edge-label join + min-aggregate, labels persisted
-    * per round (bounded lineage), convergence when no label shrinks. The
-    * iteration count is the component diameter — near-dup components are
-    * near-cliques, so 2-3 rounds in practice; for adversarial long-chain
-    * graphs use [[dupClustersStar]] (same signature, O(log^2 n) rounds on
-    * any diameter). Checkpointing is reliable when a checkpoint dir is set
-    * (see [[truncateLineage]]).
+    * Alternating large-star / small-star contraction (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC 2014): O(log^2 n)
+    * rounds on ANY graph shape, so a long chain of near-dup revisions
+    * converges in a few rounds where min-label propagation would need one
+    * round per unit of diameter (a 1000-node chain converges within 25
+    * rounds — tested). The normalized edge set is checkpointed once up
+    * front, and each round's edge set is truncated via [[truncateLineage]]
+    * (reliable when a checkpoint dir is set): without lineage truncation
+    * every round's plan embeds all previous rounds. Convergence = the
+    * materialized edge set is a min-rooted star forest ([[isStarForest]]),
+    * the contraction's fixpoint — an exact check, never a hash heuristic:
+    * a false convergence would silently emit multiple survivors per
+    * component. A graph that is not a star forest after `maxIters` rounds
+    * throws.
     */
   def dupClusters(docs: DataFrame, pairs: DataFrame, maxIters: Int = 50)(
       implicit spark: SparkSession): DataFrame = {
-    // eager checkpoints per round: without lineage truncation every
-    // iteration's logical plan embeds all previous rounds and Catalyst
-    // analysis cost explodes (classic iterative-DataFrame pitfall).
-    // Pair generation is checkpointed ONCE before deriving both edge
-    // directions — a plain union would embed (and re-execute) the expensive
-    // pair subtree twice.
-    val p = truncateLineage(pairs.select(col("a_id"), col("b_id")))
-    // edges derive from the MATERIALIZED pair set by a plain union — no
-    // second checkpoint (r7): each iteration's join re-reads p twice, which
-    // costs the same row reads the materialized edge copy would, without
-    // paying an extra materialization job and a second pair-sized block set
-    // up front (the expensive pair subtree itself is never re-executed —
-    // that is what the p checkpoint is for)
-    val edges = p.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .union(p.select(col("b_id").as("src"), col("a_id").as("dst")))
-    var labels = truncateLineage(
-      docs.select(col("doc_id"), col("doc_id").as("cluster_id")))
-    var changed = 1L
+    val ids = docs.select(col("doc_id"))
+    var edges = truncateLineage(
+      pairs.select(greatest(col("a_id"), col("b_id")).as("u"),
+          least(col("a_id"), col("b_id")).as("v"))
+        .filter(col("u") =!= col("v"))
+        .distinct()
+        .join(ids.withColumnRenamed("doc_id", "u"), Seq("u"), "left_semi")
+        .join(ids.withColumnRenamed("doc_id", "v"), Seq("v"), "left_semi")
+        .select(col("u"), col("v")))
+    var converged = isStarForest(edges)
     var iter = 0
-    while (changed > 0 && iter < maxIters) {
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("doc_id", "src"), Seq("src"))
-        .groupBy(col("dst"))
-        .agg(min(col("cluster_id")).as("neighbor_min"))
-      // the shrink flag rides the checkpointed frame (r7): the convergence
-      // count then scans the already-materialized blocks instead of
-      // re-joining the new labels against the old ones — one shuffle join
-      // fewer per iteration, identical convergence condition (flag true
-      // iff this row's label shrank this round)
-      val updated = truncateLineage(
-        labels
-          .join(neighborMin.withColumnRenamed("dst", "doc_id"), Seq("doc_id"), "left")
-          .select(
-            col("doc_id"),
-            least(col("cluster_id"), coalesce(col("neighbor_min"), col("cluster_id")))
-              .as("cluster_id"),
-            (coalesce(col("neighbor_min"), col("cluster_id")) < col("cluster_id"))
-              .as("__shrunk")))
-      changed = updated.filter(col("__shrunk")).count()
-      labels = updated.select(col("doc_id"), col("cluster_id"))
+    while (!converged && iter < maxIters) {
+      edges = truncateLineage(smallStarStep(largeStarStep(edges)))
+      converged = isStarForest(edges)
       iter += 1
     }
-    // a silent non-converged return would hand out WRONG cluster ids (one
-    // component, several "survivors") — fail loudly; raise maxIters for
-    // pathological long-chain graphs (or switch to large-star/small-star)
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"dupClusters did not converge in $maxIters iterations ($changed labels still shrinking)")
-    labels
+    if (!converged)
+      throw new IllegalStateException(s"dupClusters did not converge in $maxIters iterations")
+    // converged state is a min-rooted star per component: every non-root
+    // points directly at its component minimum
+    ids.join(edges.select(col("u").as("doc_id"), col("v").as("root")), Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("root"), col("doc_id")).as("cluster_id"))
   }
+
+  /** True iff the directed edge set (u > v) is a star forest: every u has
+    * exactly one outgoing edge and no v is also a u, so each component is
+    * one root (its minimum, since edges point larger -> smaller) with every
+    * other member pointing straight at it. Both steps map such a set to
+    * itself, so it is the contraction's fixpoint, and the round that
+    * reaches it is the last. One partial-aggregated pass over the edges.
+    */
+  private def isStarForest(edges: DataFrame): Boolean =
+    edges.select(col("u").as("n"), lit(1).as("out"), lit(0).as("in"))
+      .union(edges.select(col("v").as("n"), lit(0).as("out"), lit(1).as("in")))
+      .groupBy(col("n"))
+      .agg(sum(col("out")).as("out"), max(col("in")).as("in"))
+      .filter(col("out") > 1 || (col("out") === 1 && col("in") === 1))
+      .isEmpty
 
   /** Large-star step (Kiveris et al., "Connected Components in MapReduce
     * and Beyond", SoCC 2014 §3): for every node u, connect each STRICTLY
@@ -499,15 +495,13 @@ object Dedup {
   /** Small-star step: for every node u, connect u and each of its
     * (smaller) neighbors to m = min(N(u)); edges stay larger -> smaller.
     *
-    * INPUT CONTRACT (r7): `dir` must already be a DISTINCT edge set
-    * directed strictly larger -> smaller (u > v) — exactly what
-    * [[largeStarStep]] emits (its output rows are (old_v,
-    * least(mn, old_u)) with old_v > old_u >= least(mn, old_u), ending in
-    * `.distinct()`) and what [[dupClustersStar]]'s initial normalization
-    * produces. The previous re-normalization here
-    * (greatest/least + filter + distinct) was therefore an IDENTITY
-    * transformation costing one full edge-set exchange per round; the
-    * contract is asserted by construction at both call sites.
+    * INPUT CONTRACT: `dir` must already be a DISTINCT edge set directed
+    * strictly larger -> smaller (u > v) — exactly what [[largeStarStep]]
+    * emits (its output rows are (old_v, least(mn, old_u)) with
+    * old_v > old_u >= least(mn, old_u), ending in `.distinct()`) and what
+    * [[dupClusters]]'s initial normalization produces. Re-normalizing here
+    * (greatest/least + filter + distinct) would be an identity
+    * transformation costing one full edge-set exchange per round.
     */
   private def smallStarStep(dir: DataFrame): DataFrame = {
     val mins = dir.groupBy(col("u")).agg(min(col("v")).as("m"))
@@ -519,52 +513,11 @@ object Dedup {
       .select(col("a").as("u"), col("b").as("v"))
   }
 
-  /** [[dupClusters]] via alternating large-star / small-star contraction
-    * (Kiveris et al., SoCC 2014) — same signature, same output contract
-    * (`cluster_id` = smallest reachable doc_id). Converges in O(log^2 n)
-    * rounds on ANY graph shape, vs label propagation's diameter-many
-    * rounds: the drop-in for adversarial long-chain graphs (a 1000-node
-    * chain converges in ~10 rounds here vs 999 there — tested). Per-round
-    * state is one edge set, truncated via [[truncateLineage]] (reliable
-    * when a checkpoint dir is set). Convergence = the round's edge set is
-    * IDENTICAL to the previous round's (count gate first, then an exact
-    * exceptAll diff — never a hash heuristic, a false convergence would
-    * silently emit multiple survivors per component).
-    */
-  def dupClustersStar(docs: DataFrame, pairs: DataFrame, maxIters: Int = 40)(
-      implicit spark: SparkSession): DataFrame = {
-    val p = truncateLineage(pairs.select(col("a_id"), col("b_id")))
-    var edges = truncateLineage(
-      p.select(greatest(col("a_id"), col("b_id")).as("u"),
-          least(col("a_id"), col("b_id")).as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct())
-    var prevCount = edges.count()
-    var converged = prevCount == 0
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      val next = truncateLineage(smallStarStep(largeStarStep(edges)))
-      val cnt = next.count()
-      converged = cnt == prevCount && next.exceptAll(edges).isEmpty
-      edges = next
-      prevCount = cnt
-      iter += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"dupClustersStar did not converge in $maxIters iterations ($prevCount edges)")
-    // converged state is a min-rooted star per component: every non-root
-    // points directly at its component minimum
-    docs.select(col("doc_id"))
-      .join(edges.select(col("u").as("doc_id"), col("v").as("root")), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("root"), col("doc_id")).as("cluster_id"))
-  }
-
   /** Quality-aware canonical selection over dedup clusters: for every
-    * cluster from [[dupClusters]]/[[dupClustersStar]], elect the HIGHEST
-    * `quality` doc (ties → smallest doc_id) as the survivor — what a
-    * training pipeline actually keeps from a near-dup component (the best
-    * extraction of the page, not an arbitrary member). Returns every doc
+    * cluster from [[dupClusters]], elect the HIGHEST `quality` doc
+    * (ties → smallest doc_id) as the survivor — what a training pipeline
+    * actually keeps from a near-dup component (the best extraction of the
+    * page, not an arbitrary member). Returns every doc
     * annotated `(doc_id, cluster_id, quality, keep)`; filter on `keep`
     * for the survivor corpus.
     *

@@ -44,7 +44,7 @@ class GoldenFixtureSpec extends AnyFunSuite {
         FixtureGen.Rows + FixtureGen.SplicedRows + FixtureGen.RealPdfRows +
           FixtureGen.ModernPdfRows + FixtureGen.CidPdfRows,
         FixtureGen.EncPdfRows).toDF())
-    val cfg = ExtractionJob.JobConfig(numGroups = 8, numPartitions = 4, diagnostics = true)
+    val cfg = ExtractionJob.JobConfig(numGroups = 8, diagnostics = true)
     ExtractionJob.extract(pages, cfg).collect()
       .map(r => r.url.substring(r.url.lastIndexOf('/') + 1).toLong -> r)
       .toMap

@@ -201,6 +201,71 @@ class DedupSpec extends AnyFunSuite {
     assert(r == Seq(0L -> 0L, 1L -> 1L, 5L -> 5L, 5L -> 5L, 6L -> 5L))
   }
 
+  /** In-memory union-find reference for [[Dedup.dupClusters]]: each doc
+    * row's smallest reachable doc_id, joining only pairs whose two ends are
+    * docs. Linking the larger root under the smaller keeps every root its
+    * component's minimum.
+    */
+  private def unionFindClusters(docIds: Seq[Long], pairs: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = scala.collection.mutable.Map(docIds.map(i => i -> i): _*)
+    def find(x: Long): Long = {
+      val p = parent(x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    for ((a, b) <- pairs if parent.contains(a) && parent.contains(b)) {
+      val (ra, rb) = (find(a), find(b))
+      parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    docIds.map(i => i -> find(i)).sorted
+  }
+
+  // doc rows (ids may repeat) and (a_id, b_id) pairs: a sparse random part,
+  // a chain in id order, a chain in shuffled order, a star whose center is
+  // not its minimum, a clique, bridges through ids that are not docs,
+  // reversed, duplicated and self pairs, duplicated doc rows; or no pairs
+  private val ccCases: Gen[(Seq[Long], Seq[(Long, Long)])] = for {
+    sizes <- Gen.listOfN(5, Gen.choose(2, 12))
+    noPairs <- Gen.frequency(1 -> true, 4 -> false)
+    seed <- Gen.long
+  } yield {
+    val rnd = new scala.util.Random(seed)
+    val ids = rnd.shuffle((1L to 300L).toVector).take(sizes.sum + 5)
+    val Seq(sparse, ordered, shuffled, star, clique) =
+      sizes.scanLeft(0)(_ + _).sliding(2).map(w => ids.slice(w(0), w(1))).toSeq
+    def pick(s: Seq[Long]) = s(rnd.nextInt(s.size))
+    val chains = ordered.sorted.sliding(2).map(c => (c(0), c(1))) ++
+      shuffled.sliding(2).map(c => (c(0), c(1)))
+    val absent = Seq.fill(3)(1000L + rnd.nextInt(5))
+    val base = Seq.fill(2 * sparse.size)((pick(sparse), pick(sparse))) ++ chains ++
+      star.tail.map(star.head -> _) ++
+      clique.combinations(2).map(c => (c(0), c(1))) ++
+      absent.flatMap(x => Seq((x, pick(ids)), (pick(ids), x)))
+    val pairs = base.map(e => if (rnd.nextBoolean()) e.swap else e) ++
+      base.filter(_ => rnd.nextInt(4) == 0) ++ Seq.fill(3)(pick(ids)).map(x => (x, x))
+    (ids ++ Seq.fill(3)(pick(ids)), if (noPairs) Seq.empty else pairs)
+  }
+
+  test("dup clusters equal an in-memory union-find on 1 and 7 partitions (property)") {
+    var sawNoPairs = false
+    val prop = Prop.forAllNoShrink(ccCases) { case (docIds, pairs) =>
+      sawNoPairs ||= pairs.isEmpty
+      val expected = unionFindClusters(docIds, pairs)
+      val bad = for {
+        parts <- Seq(1, 7)
+        got = Dedup.dupClusters(
+            docIds.map(i => (i, s"t$i")).toDF("doc_id", "text").repartition(parts),
+            pairs.toDF("a_id", "b_id").repartition(parts))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+        if got != expected
+      } yield s"$parts partitions: expected $expected got $got"
+      Prop(bad.isEmpty) :| bad.take(1).mkString("\n")
+    }
+    val res = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(8).withInitialSeed(Seed(20261019L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    assert(sawNoPairs, "the fixed seed must generate a case with no pairs")
+  }
+
   test("contamination: train/test n-gram overlap with planted cases") {
     val train = Seq(
       (0L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
@@ -223,24 +288,13 @@ class DedupSpec extends AnyFunSuite {
     assert(r(12L).getAs[Double]("contamination_frac") == 0.0)
   }
 
-  test("star-contraction clusters agree with label propagation") {
-    val nodes = (0L to 6L).map(i => (i, s"text$i")).toDF("doc_id", "text")
-    val pairs = Seq((0L, 1L, 1.0), (0L, 3L, 1.0), (2L, 5L, 1.0))
-      .toDF("a_id", "b_id", "jaccard")
-    val star = Dedup.dupClustersStar(nodes, pairs)
-      .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
-    val prop = Dedup.dupClusters(nodes, pairs)
-      .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
-    assert(star == prop)
-  }
-
   test("star contraction collapses a 1000-node chain within the round bound") {
-    // diameter 999: label propagation would need 999 rounds (and throw at
-    // its default 50); star contraction is O(log^2 n) on any shape
+    // diameter 999: min-label propagation would need 999 rounds; star
+    // contraction is O(log^2 n) on any shape
     val n = 1000L
     val nodes = (0L until n).map(i => (i, s"t$i")).toDF("doc_id", "text")
     val chain = (0L until n - 1).map(i => (i, i + 1, 1.0)).toDF("a_id", "b_id", "jaccard")
-    val r = Dedup.dupClustersStar(nodes, chain, maxIters = 25)
+    val r = Dedup.dupClusters(nodes, chain, maxIters = 25)
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(r.size == 1000 && r.values.toSet == Set(0L))
   }
@@ -260,7 +314,7 @@ class DedupSpec extends AnyFunSuite {
       sc.setCheckpointDir(dir.getAbsolutePath)
       val nodes = (0L to 5L).map(i => (i, s"t$i")).toDF("doc_id", "text")
       val pairs = Seq((0L, 1L, 1.0), (1L, 2L, 1.0)).toDF("a_id", "b_id", "jaccard")
-      val r = Dedup.dupClustersStar(nodes, pairs)
+      val r = Dedup.dupClusters(nodes, pairs)
         .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
       assert(r(2L) == 0L && r(5L) == 5L)
       // fault-tolerant state actually landed on (shared) storage

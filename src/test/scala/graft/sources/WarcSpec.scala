@@ -223,7 +223,7 @@ class WarcSpec extends AnyFunSuite {
         dir.resolve("mix.warc.gz"),
         WarcGen.archive(htmlRows :+ cidRow, gzip = true))
       val table = Warc.toTable(spark, dir.toString + "/*")
-      val cfg = ExtractionJob.JobConfig(numGroups = 4, numPartitions = 2)
+      val cfg = ExtractionJob.JobConfig(numGroups = 4)
       val results = ExtractionJob.extract(table, cfg).collect()
       val pdfResult = results.find(_.url == cidRow.url)
       assert(pdfResult.isDefined, s"missing ${cidRow.url}")
@@ -254,7 +254,7 @@ class WarcSpec extends AnyFunSuite {
         dir.resolve("mix.warc.gz"),
         WarcGen.archive(htmlRows ++ encRows, gzip = true))
       val table = Warc.toTable(spark, dir.toString + "/*")
-      val cfg = ExtractionJob.JobConfig(numGroups = 4, numPartitions = 2)
+      val cfg = ExtractionJob.JobConfig(numGroups = 4)
       val results = ExtractionJob.extract(table, cfg).collect()
       encRows.zipWithIndex.foreach { case (row, k) =>
         val res = results.find(_.url == row.url)
@@ -288,7 +288,7 @@ class WarcSpec extends AnyFunSuite {
       java.nio.file.Files.write(dir.resolve("b.warc.gz"), WarcGen.archive(in.drop(20), gzip = true))
       val table = Warc.toTable(spark, dir.toString + "/*")
       assert(table.columns.toSeq == Seq("url", "warc_ts", "html", "text", "lang"))
-      val cfg = ExtractionJob.JobConfig(numGroups = 8, numPartitions = 4)
+      val cfg = ExtractionJob.JobConfig(numGroups = 8)
       val viaWarc = ExtractionJob.extract(table, cfg).collect()
         .map(r => r.url -> (r.extracted_text, r.engine, r.success)).toMap
       // direct rows, with the two WARC-inherent differences applied: the

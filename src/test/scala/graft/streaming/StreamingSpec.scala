@@ -1,7 +1,8 @@
 package graft.streaming
 
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -12,7 +13,7 @@ import graft.model.RawPage
 class StreamingSpec extends AnyFunSuite {
   private implicit lazy val spark: org.apache.spark.sql.SparkSession = SparkTestBase.spark
 
-  private val cfg = ExtractionJob.JobConfig(numGroups = 8, numPartitions = 4)
+  private val cfg = ExtractionJob.JobConfig(numGroups = 8)
 
   test("streaming extraction produces byte-identical rows to the batch job") {
     import spark.implicits._
@@ -40,6 +41,42 @@ class StreamingSpec extends AnyFunSuite {
       .sortBy(_._1)
 
     assert(streamed.toSeq == batch.toSeq)
+  }
+
+  test("a file-source stream restarted from its checkpoint emits every document exactly once") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-stream-restart").toFile
+    // appends `rows` as parquet to the query's input, then runs the query
+    // until every input file is processed; a later call resumes from the
+    // same checkpoint
+    def feed(name: String, rows: Seq[RawPage])(query: DataFrame => Dataset[_]): DataFrame = {
+      rows.toDS().write.mode("append").parquet(s"$root/$name/in")
+      val q = query(spark.readStream.schema(Encoders.product[RawPage].schema).parquet(s"$root/$name/in"))
+        .writeStream
+        .format("parquet")
+        .option("checkpointLocation", s"$root/$name/ckpt")
+        .trigger(Trigger.AvailableNow())
+        .start(s"$root/$name/out")
+      try q.awaitTermination()
+      finally q.stop()
+      spark.read.parquet(s"$root/$name/out")
+    }
+    try {
+      val dedup = StreamingExtraction.dedupedExtract(_: DataFrame, cfg)
+      feed("dedup", Seq(CorpusGen.genRow(42L, 3), CorpusGen.genRow(42L, 23)))(dedup)
+      // same content as doc 3 under a new url: the restored state drops it
+      val dup = CorpusGen.genRow(42L, 3).copy(url = "https://dup.example/doc/3")
+      val deduped = feed("dedup", Seq(dup, CorpusGen.genRow(42L, 43)))(dedup)
+        .select("url", "content_hash").as[(String, String)].collect().toSeq
+      assert(deduped.groupBy(_._2).values.forall(_.size == 1), s"duplicate re-emitted: $deduped")
+      assert(deduped.map(_._1).toSet == Set(3L, 23L, 43L).map(CorpusGen.url(42L, _)))
+
+      val extract = StreamingExtraction.extract(_: DataFrame, cfg)
+      feed("extract", (0L until 10L).map(CorpusGen.genRow(42L, _)))(extract)
+      val urls = feed("extract", (10L until 15L).map(CorpusGen.genRow(42L, _)))(extract)
+        .select("url").as[String].collect().toSeq.sorted
+      assert(urls == (0L until 15L).map(CorpusGen.url(42L, _)).sorted)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(root)
   }
 
   test("stateful streaming dedup drops duplicates across micro-batches") {
