@@ -33,6 +33,11 @@ import graft.job.{ExtractionJob, ParquetCommitStore}
   * and `--status` read it back, and a `--groups` that contradicts it fails
   * before anything is extracted or written.
   *
+  * `--repartition-input` rebalances the input before extraction: one hash
+  * shuffle on (url, warc_ts), `defaultParallelism` wide. It is for scans
+  * whose tasks are uneven, such as `warc:`, which reads each unsplittable
+  * archive whole; results are the same with and without it.
+  *
   * Exit code 0 iff no failure rows (cli.py:404 contract).
   */
 object Main {

@@ -29,36 +29,14 @@ import graft.tools.LocalSession
   */
 object ScalingBench {
 
-  private def runOnce(
-      cpus: Int,
-      rows: Long,
-      salted: Boolean = false,
-      mixedCase: Boolean = false): Double = {
+  private def runOnce(cpus: Int, rows: Long, repartition: Boolean = false): Double = {
     val spark = LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try {
-      import org.apache.spark.sql.functions._
-      var pages = CorpusGen.pages(spark, rows, partitions = cpus * 4).toDF()
-      if (mixedCase) {
-        // real crawls mix url casings: uppercase the scheme+authority on a
-        // deterministic half of rows, so the skew host appears under BOTH
-        // casings. Salting only stays effective if hostOf canonicalizes
-        // case (the r3 fix) — a case-sensitive hostOf would leave half the
-        // mega-host unsalted and the measured number would regress toward
-        // the unsalted single-task wall.
-        val prefix = substring_index(col("url"), "/", 3)
-        pages = pages.withColumn(
-          "url",
-          when(pmod(xxhash64(col("url")), lit(2)) === 0,
-            concat(upper(prefix), expr("substring(url, length(substring_index(url, '/', 3)) + 1)")))
-            .otherwise(col("url")))
-      }
-      val cfg = ExtractionJob.JobConfig(numGroups = 64, repartitionInput = salted)
+      val pages = CorpusGen.pages(spark, rows, partitions = cpus * 4).toDF()
+      val cfg = ExtractionJob.JobConfig(numGroups = 64, repartitionInput = repartition)
       val t0 = System.nanoTime()
-      // on the salted path, skew detection is part of the measured job
-      val skewed =
-        if (salted) ExtractionJob.detectSkewedHosts(pages) else Set.empty[String]
-      val n = ExtractionJob.extract(pages, cfg, skewed)(spark).count()
+      val n = ExtractionJob.extract(pages, cfg)(spark).count()
       val secs = (System.nanoTime() - t0) / 1e9
       require(n == rows, s"row count $n != $rows")
       secs
@@ -199,17 +177,13 @@ object ScalingBench {
     val s416 = Pair(4, 16, strongWall(4), strongWall(16), strongRows)
     val s832 = Pair(8, 32, strongWall(8), strongWall(32), strongRows)
 
-    // salted-input path (host-clustered-scan mode) over the MIXED-CASE
-    // corpus — the measured proof that case-robust host canonicalization
-    // keeps salting effective when the skew host arrives under several url
-    // casings (r3 hostOf fix, VERDICT r3 #8). min-of-2 per level: the probe
-    // rides the same throttly VM as everything else.
-    def saltedBest(cpus: Int): Double =
-      math.min(
-        runOnce(cpus, rows, salted = true, mixedCase = true),
-        runOnce(cpus, rows, salted = true, mixedCase = true))
-    val tLoS = saltedBest(8)
-    val tHiS = saltedBest(32)
+    // repartitioned-input path: the full-width (url, warc_ts)-hash payload
+    // shuffle. min-of-2 per level: the probe rides the same throttly VM as
+    // everything else.
+    def repartitionedBest(cpus: Int): Double =
+      math.min(runOnce(cpus, rows, repartition = true), runOnce(cpus, rows, repartition = true))
+    val tLoR = repartitionedBest(8)
+    val tHiR = repartitionedBest(32)
 
     // WARC-native archive-scale probe: same job, fed from the page table vs
     // from multi-record .warc.gz archives through the production reader
@@ -265,24 +239,16 @@ object ScalingBench {
          |${row(s416)}
          |${row(s832)}
          |
-         |## Salted-input path (repartitionInput=true; host-clustered scans)
+         |## Repartitioned-input path (repartitionInput=true; uneven scans)
          |
-         |Full-width payload shuffle with explicit salting of detected skewed
-         |hosts (host0 holds ~40% of urls), measured over a MIXED-CASE corpus:
-         |the scheme+authority of a deterministic half of the urls is
-         |uppercased, so the skew host arrives as both `https://host0...` and
-         |`HTTPS://HOST0...`. Skew detection and salting both canonicalize via
-         |the case-robust hostOf, so the mega-host is recognized and salted
-         |across its casings. min-of-2 per level:
-         |local[8] ${f"$tLoS%.2f"} s (${f"${rows / tLoS}%.0f"} docs/s),
-         |local[32] ${f"$tHiS%.2f"} s (${f"${rows / tHiS}%.0f"} docs/s).
-         |Without salting, host0's rows land on ONE task and wall time pins
-         |at the single-task cost at every parallelism level (0.26 efficiency
-         |measured before salting was wired in — see git history); a
-         |case-SENSITIVE hostOf over this corpus would likewise leave each
-         |casing of host0 to pin its own task. At uniform scan layouts the
-         |default narrow path is strictly better: payloads never shuffle at
-         |all.
+         |Full-width payload shuffle hash-partitioned on (url, warc_ts), a
+         |key with no heavy hitters: host0 holds ~40% of the urls and still
+         |spreads evenly over `defaultParallelism` tasks, with nothing to
+         |detect or salt. min-of-2 per level:
+         |local[8] ${f"$tLoR%.2f"} s (${f"${rows / tLoR}%.0f"} docs/s),
+         |local[32] ${f"$tHiR%.2f"} s (${f"${rows / tHiR}%.0f"} docs/s).
+         |At uniform scan layouts the default narrow path is strictly
+         |better: payloads never shuffle at all.
          |
          |## WARC-native ingest at archive scale (local[32], min-of-2)
          |

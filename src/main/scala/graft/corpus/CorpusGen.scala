@@ -205,7 +205,10 @@ $footerBlock
   // -- row assembly ------------------------------------------------------------
   private val Langs = Vector("en", "fr", "de", "el", "la")
 
-  /** Skewed host distribution: host0 owns ~40% of urls (exercises salting). */
+  /** Skewed host distribution: host0 owns ~40% of urls (a host-keyed
+    * shuffle would pin a task with it; the input shuffle keys on
+    * (url, warc_ts)).
+    */
   def host(seed: Long, idx: Long): String = {
     val r = (rng(seed, idx, 1) >>> 1) % 10
     if (r < 4) "host0" else s"host${1 + ((rng(seed, idx, 2) >>> 1) % 97)}"

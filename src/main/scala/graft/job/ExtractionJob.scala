@@ -29,10 +29,10 @@ import graft.model._
   *
   * Shuffle discipline at 10^12 rows: the only full-width data movement is
   * the OPTIONAL input repartition (`repartitionInput`), for scans whose
-  * file layout clusters by host (WARC-by-host crawls) — that path salts
-  * skewed hosts explicitly. The default path moves only the extracted
-  * results (payload-free) into commit groups at write time. Everything
-  * else is narrow.
+  * file layout leaves tasks uneven (a few unsplittable WARC archives) —
+  * that path hashes rows on (url, warc_ts), a key with no heavy hitters.
+  * The default path moves only the extracted results (payload-free) into
+  * commit groups at write time. Everything else is narrow.
   */
 object ExtractionJob {
 
@@ -51,13 +51,18 @@ object ExtractionJob {
       maxBytes: Int = 512 * 1024,
       numGroups: Int = JobConfig.SizedToInput, // commit groups (url-hash buckets); resume unit
       groupsPerCommit: Int = 16, // commit-batch size
-      repartitionInput: Boolean = false // host-salted input shuffle (skewed scans only)
+      repartitionInput: Boolean = false // (url, warc_ts)-hash input shuffle (uneven scans only)
   ) {
     // an empty commit layout would commit nothing (numGroups) or fail only
     // after the whole extract job ran (groupsPerCommit): reject it up front
     require(numGroups >= 1 || numGroups == JobConfig.SizedToInput,
       s"numGroups must be >= 1, got $numGroups")
     require(groupsPerCommit >= 1, s"groupsPerCommit must be >= 1, got $groupsPerCommit")
+    // a zero byte cap fails every payload row, and a threshold above 1 flags
+    // every row (the composite score is at most 1): both only show after a
+    // full run
+    require(maxBytes >= 1, s"maxBytes must be >= 1, got $maxBytes")
+    require(threshold >= 0.0 && threshold <= 1.0, s"threshold must be in [0, 1], got $threshold")
 
     def extractorConfig: Extractor.Config = Extractor.Config(
       threshold = threshold,
@@ -84,15 +89,6 @@ object ExtractionJob {
       * `synth:`, or a scan without real statistics).
       */
     val UnknownSizeGroups: Int = 64
-
-    /** Salt fan-out for a skewed host under `repartitionInput`. */
-    val SkewSalts: Int = 16
-
-    /** Seeded row sample [[detectSkewedHosts]] counts hosts on. */
-    val SkewSampleFraction: Double = 0.01
-
-    /** A host is skewed above this share of the sampled rows. */
-    val SkewHostShare: Double = 0.05
   }
 
   /** Commit groups for `bytes` of input: ceil(bytes / TargetGroupBytes),
@@ -231,31 +227,6 @@ object ExtractionJob {
     }
   }
 
-  /** Detect skewed hosts from a sample: any host holding more than
-    * [[JobConfig.SkewHostShare]] of sampled rows (SURVEY.md §4.1). Sampled,
-    * not exact — salting is a physical-plan decision, results never depend
-    * on it.
-    */
-  def detectSkewedHosts(pages: DataFrame): Set[String] = {
-    val counts = pages.sample(JobConfig.SkewSampleFraction, 42L)
-      .select(graft.ops.TextAnalysis.hostOf(col("url")).as("host"))
-      .groupBy("host")
-      .count()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val totalRow = counts.agg(sum("count")).first()
-      val total = if (totalRow.isNullAt(0)) 0L else totalRow.getLong(0)
-      if (total == 0) Set.empty
-      else
-        counts
-          .filter(col("count") > lit(math.max(1.0, total * JobConfig.SkewHostShare)))
-          .select("host")
-          .collect()
-          .map(_.getString(0))
-          .toSet
-    } finally { counts.unpersist(); () }
-  }
-
   /** Keyed input for one commit batch. The commit group is pure url-hash
     * (`pmod(xxhash64(url), numGroups)`, numGroups from [[numGroupsFor]]),
     * deterministic and independent of physical partitioning, so resume keys
@@ -263,33 +234,23 @@ object ExtractionJob {
     *
     * By default the input is consumed on its scan partitions — no shuffle,
     * payloads never move. With `repartitionInput` (for scans whose file
-    * layout clusters rows by host, e.g. WARC-by-host crawls) the input is
-    * hash-partitioned on host with hosts above [[JobConfig.SkewHostShare]]
-    * explicitly salted across [[JobConfig.SkewSalts]] sub-keys, so one
-    * mega-host cannot pin a task. The shuffle is `defaultParallelism` wide.
+    * layout leaves tasks uneven, e.g. a few large unsplittable WARC
+    * archives) the input is hash-partitioned on (url, warc_ts),
+    * `defaultParallelism` wide. A row is one capture of one url, so the key
+    * has no heavy hitters: neither a large host nor a url recaptured across
+    * crawls can pin a task, and there is nothing to detect or split.
     */
   private def keyed(
       pages: DataFrame,
       cfg: JobConfig,
-      skewedHosts: Set[String],
       groups: Option[Seq[Int]]
   )(implicit spark: SparkSession): Dataset[KeyedPage] = {
     import spark.implicits._
     var df = pages
       .withColumn("commit_group", pmod(xxhash64(col("url")), lit(numGroupsFor(pages, cfg))).cast("int"))
     groups.foreach(g => df = df.filter(col("commit_group").isInCollection(g)))
-    if (cfg.repartitionInput) {
-      df = df
-        .withColumn("host", graft.ops.TextAnalysis.hostOf(col("url")))
-        .withColumn(
-          "salted_key",
-          when(
-            col("host").isInCollection(skewedHosts + " none"),
-            concat(col("host"), lit("#"), pmod(xxhash64(col("url")), lit(JobConfig.SkewSalts)))
-          ).otherwise(col("host"))
-        )
-        .repartition(spark.sparkContext.defaultParallelism, col("salted_key"))
-    }
+    if (cfg.repartitionInput)
+      df = df.repartition(spark.sparkContext.defaultParallelism, col("url"), col("warc_ts"))
     df.select("url", "warc_ts", "html", "text", "lang", "commit_group")
       .as[KeyedPage]
   }
@@ -298,17 +259,17 @@ object ExtractionJob {
     * transformation — no writes. ONE narrow mapPartitions stage: fast
     * extract, and flagged rows fall through to the heavy kernel in place
     * ([[Extractor.extractWithFallback]]) — zero shuffles, zero caching,
-    * payloads never leave their scan partition.
+    * payloads never leave their scan partition. Under `repartitionInput`
+    * the one (url, warc_ts) shuffle of [[keyed]] runs first.
     */
   def extract(
       pages: DataFrame,
       cfg: JobConfig,
-      skewedHosts: Set[String] = Set.empty,
       groups: Option[Seq[Int]] = None
   )(implicit spark: SparkSession): Dataset[ResultRow] = {
     import spark.implicits._
     val exCfg = cfg.extractorConfig
-    keyed(pages, cfg, skewedHosts, groups).mapPartitions { it =>
+    keyed(pages, cfg, groups).mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
       it.map { p =>
         val raw = RawPage(p.url, p.warc_ts, p.html, p.text, p.lang)
@@ -386,12 +347,13 @@ object ExtractionJob {
       info(RunInfo(numGroups, 0.0, 0.0))
       return Seq.empty
     }
-    val skewed =
-      if (cfg.repartitionInput) detectSkewedHosts(pages) else Set.empty[String]
+    // a fresh run keeps every group: a filter listing them all is always
+    // true, and every task would deserialize its numGroups literals
+    val groups = if (recorded.groups.isEmpty) None else Some(remaining)
 
     // released through its Dataset handle: raw-RDD unpersist would leak the
     // CacheManager entry and turn a same-plan re-persist into a no-op
-    val persisted = extract(pages, runCfg, skewed, Some(remaining))
+    val persisted = extract(pages, runCfg, groups)
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
 
     val all = Seq.newBuilder[Lineage]

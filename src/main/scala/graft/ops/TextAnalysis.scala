@@ -675,16 +675,6 @@ object TextAnalysis {
     * codegen, no UDF, and every pattern is RE2-compatible so an ANSI SQL
     * oracle (DuckDB) reproduces it exactly.
     */
-  /** Lowercased host (authority) of a url, with the same case-insensitive
-    * scheme handling as [[canonicalizeUrl]] — the shared expression for
-    * host-keyed partitioning/salting decisions. A case-sensitive `[a-z]+`
-    * scheme match would give every `HTTPS://...` url an EMPTY host: a
-    * skewed crawl with non-lowercase schemes would evade salting entirely
-    * (and all its rows would hash together under one empty key).
-    */
-  def hostOf(url: Column): Column =
-    lower(regexp_extract(url, "^[A-Za-z][A-Za-z0-9+.\\-]*://([^/?#]+)", 1))
-
   def canonicalizeUrl(url: Column): Column = {
     val prefix = regexp_extract(url, "^[A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]*", 0)
     val lowered = concat(lower(prefix), url.substr(length(prefix) + lit(1), length(url)))

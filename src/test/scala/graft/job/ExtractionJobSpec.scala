@@ -94,10 +94,9 @@ class ExtractionJobSpec extends AnyFunSuite {
     val partial = cfg.copy(numGroups = 8, groupsPerCommit = 8)
     val firstBatchCfg = partial.copy(groupsPerCommit = 4)
     // run only the first commit batch by calling extract+write manually
-    val skewed = ExtractionJob.detectSkewedHosts(pages)
     val firstGroups = Some(Seq(0, 1, 2, 3))
     import spark.implicits._
-    val firstResults = ExtractionJob.extract(pages, firstBatchCfg, skewed, firstGroups)
+    val firstResults = ExtractionJob.extract(pages, firstBatchCfg, firstGroups)
     firstResults.write.mode("append").partitionBy("commit_group").parquet(s"$out/results")
     ExtractionJob.lineage(firstResults, partial.numGroups).coalesce(1)
       .write.mode("append").parquet(s"$out/lineage")
@@ -124,7 +123,7 @@ class ExtractionJobSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("graft-orphan").toString
     val pages = CorpusGen.pages(spark, 120).toDF()
     val c = cfg.copy(numGroups = 8, groupsPerCommit = 8)
-    val orphan = ExtractionJob.extract(pages, c, Set.empty, Some(Seq(0, 1, 2, 3)))
+    val orphan = ExtractionJob.extract(pages, c, Some(Seq(0, 1, 2, 3)))
     orphan.write.mode("append").partitionBy("commit_group").parquet(s"$out/results")
     // no lineage written -> nothing is committed -> full run reprocesses all
     ExtractionJob.runCheckpointed(pages, c, out)
@@ -178,39 +177,80 @@ class ExtractionJobSpec extends AnyFunSuite {
     assert(ExtractionJob.runCheckpointed(pages, c, store).isEmpty)
   }
 
-  test("skew detection is scheme-case-robust (HTTPS:// hosts land in the salted branch)") {
-    import spark.implicits._
-    // 60% of rows on one host, written with an UPPERCASE scheme and
-    // mixed-case authority — a case-sensitive host extract would read an
-    // empty host for every one of them and the mega-host would evade salting.
-    // 20,000 rows put about 200 in the seeded 1% sample: the mega-host holds
-    // about 120 of them against a skew bar of 10, every other host at most 1.
-    val urls = (0 until 20000).map { i =>
-      if (i % 5 < 3) s"HTTPS://Skew.Example.COM/page$i" else s"https://unique$i.org/p"
-    }.toDF("url")
-    val skewed = ExtractionJob.detectSkewedHosts(urls)
-    assert(skewed == Set("skew.example.com"), s"got $skewed")
-  }
-
-  test("results are independent of parallelism and salting (plan-only knobs)") {
+  test("results are independent of parallelism and the input shuffle") {
     val pages = CorpusGen.pages(spark, 100).toDF()
-    def run(c: ExtractionJob.JobConfig, hosts: Set[String], in: DataFrame = pages) =
-      ExtractionJob.extract(in, c, hosts)
+    def run(c: ExtractionJob.JobConfig, in: DataFrame) =
+      ExtractionJob.extract(in, c)
         .collect().map(r => (r.url, r.extracted_text, r.engine, r.quality.score))
         .sortBy(_._1).toSeq
-    // the salted arm shuffles into defaultParallelism partitions, so vary
-    // the width of its input
-    val salted = cfg.copy(repartitionInput = true)
-    val r1 = run(salted, Set("host0.example"), pages.repartition(1))
-    val r2 = run(salted, Set("host0.example"), pages.repartition(7))
+    // the repartitioned arm shuffles into defaultParallelism partitions, so
+    // vary the width of its input
+    val shuffled = cfg.copy(repartitionInput = true)
+    val r1 = run(shuffled, pages.repartition(1))
+    val r2 = run(shuffled, pages.repartition(7))
     assert(r1 == r2)
     // the default (narrow) path keeps the input's partitioning, so vary it
     assert(ExtractionJob.extract(pages.repartition(7), cfg).rdd.getNumPartitions == 7)
-    val narrow1 = run(cfg, Set.empty, pages.repartition(1))
-    val narrow7 = run(cfg, Set.empty, pages.repartition(7))
+    val narrow1 = run(cfg, pages.repartition(1))
+    val narrow7 = run(cfg, pages.repartition(7))
     assert(narrow1.size == 100)
     assert(narrow1 == narrow7)
     assert(narrow1 == r1)
+  }
+
+  /** Rows per extract task of `pages` under `repartitionInput`, fed from
+    * one scan partition.
+    */
+  private def rowsPerTask(pages: DataFrame): Seq[Long] = {
+    import spark.implicits._
+    ExtractionJob.extract(pages.repartition(1), cfg.copy(repartitionInput = true))
+      .groupBy("partition_id").count().as[(Int, Long)].collect().map(_._2).toSeq
+  }
+
+  /** Every task holds at most 1.25x the mean row count. */
+  private def assertBalanced(counts: Seq[Long], rows: Long): Unit = {
+    val mean = rows.toDouble / spark.sparkContext.defaultParallelism
+    assert(counts.sum == rows)
+    assert(counts.max <= 1.25 * mean, s"rows per task ${counts.sorted.reverse} against a mean of $mean")
+  }
+
+  test("the input shuffle spreads a url recaptured across crawls") {
+    import spark.implicits._
+    // 1,000 captures of one url (distinct warc_ts) plus 1,000 distinct urls:
+    // a key that holds every capture of a url on one task puts at least half
+    // the rows there
+    val pages = spark.range(0, 2000, 1, 1).map { i =>
+      val row = CorpusGen.genRow(CorpusGen.DefaultSeed, i)
+      if (i < 1000) row.copy(url = "https://popular.example/front") else row
+    }.toDF()
+    assert(pages.select("warc_ts").distinct().count() == 2000)
+    assertBalanced(rowsPerTask(pages), 2000)
+  }
+
+  test("the input shuffle spreads a skewed host") {
+    // host0 holds about 40% of the rows
+    assertBalanced(rowsPerTask(CorpusGen.pages(spark, 4000).toDF()), 4000)
+  }
+
+  test("the repartitioned extract plan is one (url, warc_ts) hash exchange and no sample") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SampleExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val results = ExtractionJob.extract(CorpusGen.pages(spark, 60).toDF(), cfg.copy(repartitionInput = true))
+    assert(results.collect().length == 60)
+    val plan = results.queryExecution.executedPlan
+    object Stages extends AdaptiveSparkPlanHelper
+    val exchanges = Stages.collectWithSubqueries(plan) { case e: Exchange => e }
+    assert(exchanges.length == 1, s"executed plan:\n$plan")
+    val keys = exchanges.head match {
+      case ShuffleExchangeExec(HashPartitioning(exprs, n), _, _, _) =>
+        assert(n == spark.sparkContext.defaultParallelism)
+        exprs.map { case a: AttributeReference => a.name; case e => e.sql }
+      case other => fail(s"not a hash shuffle: $other")
+    }
+    assert(keys == Seq("url", "warc_ts"))
+    assert(Stages.collectWithSubqueries(plan) { case p: SampleExec => p }.isEmpty, s"executed plan:\n$plan")
   }
 
   test("diagnostics survive the parquet sink roundtrip") {
@@ -337,6 +377,47 @@ class ExtractionJobSpec extends AnyFunSuite {
       intercept[IllegalArgumentException](cfg.copy(groupsPerCommit = 0))
     }
     assert(jobs == 0)
+  }
+
+  test("a byte cap below 1 and a threshold outside [0, 1] are rejected up front") {
+    intercept[IllegalArgumentException](cfg.copy(maxBytes = 0))
+    intercept[IllegalArgumentException](cfg.copy(maxBytes = -1))
+    Seq(-0.01, 1.01, 2.0, Double.NaN, Double.PositiveInfinity).foreach { t =>
+      intercept[IllegalArgumentException](cfg.copy(threshold = t))
+    }
+    // the bounds themselves are valid
+    Seq(0.0, 1.0).foreach(t => assert(cfg.copy(threshold = t).threshold == t))
+    assert(cfg.copy(maxBytes = 1).maxBytes == 1)
+  }
+
+  test("a fresh run filters no commit group below the cache; a resumed run does") {
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val pages = CorpusGen.pages(spark, 60).toDF()
+    /** Group filters inside the cached plan every batch reads. */
+    def filtersBelowCache(committed: Set[Int]): Seq[String] = {
+      var seen = Seq.empty[String]
+      val store = new CommitStore {
+        override def committedGroups()(implicit s: SparkSession): Set[Int] = committed
+        override def commitBatch(
+            results: Dataset[ExtractionJob.ResultRow],
+            lineageRows: Seq[Lineage],
+            batch: Seq[Int])(implicit s: SparkSession): Unit = {
+          val cached = results.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }
+          assert(cached.length == 1, results.queryExecution.withCachedData)
+          seen = cached.head.cacheBuilder.logicalPlan.flatMap(_.expressions.flatMap(_.collect {
+            case e: In => e.sql
+            case e: InSet => e.sql
+          }))
+        }
+      }
+      ExtractionJob.runCheckpointed(pages, cfg, store)
+      seen
+    }
+    assert(filtersBelowCache(Set.empty).isEmpty)
+    val resumed = filtersBelowCache(Set(0, 1, 2, 3))
+    assert(resumed.length == 1, resumed)
+    assert(resumed.head.contains("commit_group"), resumed)
   }
 
   test("the default extract plan is one narrow stage: no Exchange, no cache") {

@@ -969,21 +969,6 @@ class TextAnalysisSpec extends AnyFunSuite {
     }
   }
 
-  test("hostOf: case-insensitive scheme, lowercased authority, port kept, path/query excluded") {
-    val cases = Seq(
-      "HTTPS://Host.COM/Path?q=1" -> "host.com",
-      "http://host.org:8443/x" -> "host.org:8443",
-      "ftp+ssh://A.B.C" -> "a.b.c",
-      "https://h?q=1" -> "h", // query directly after authority
-      "not a url" -> "")
-    val df = cases.map(_._1).zipWithIndex.map { case (u, i) => (i, u) }.toDF("i", "u")
-    val got = df.select(col("i"), TextAnalysis.hostOf(col("u")).as("h"))
-      .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
-    cases.zipWithIndex.foreach { case ((in, want), i) =>
-      assert(got(i) == want, s"$in -> ${got(i)} (want $want)")
-    }
-  }
-
   test("fingerprint is case/whitespace normalized") {
     val df = Seq((1L, "  Hello World "), (2L, "hello world")).toDF("doc_id", "text")
     val fp = TextAnalysis.fingerprint(df).collect().map(_.getAs[String]("fingerprint"))
