@@ -419,25 +419,35 @@ object Dedup {
     * both doc ids are edges: an endpoint missing from `docs` joins nothing,
     * and a doc_id listed twice keeps both rows.
     *
-    * Alternating large-star / small-star contraction (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC 2014): O(log^2 n)
-    * rounds on ANY graph shape, so a long chain of near-dup revisions
-    * converges in a few rounds where min-label propagation would need one
-    * round per unit of diameter (a 1000-node chain converges within 25
-    * rounds — tested). The normalized edge set is checkpointed once up
-    * front, and each round's edge set is truncated via [[truncateLineage]]
-    * (reliable when a checkpoint dir is set): without lineage truncation
-    * every round's plan embeds all previous rounds. Convergence = the
-    * materialized edge set is a min-rooted star forest ([[isStarForest]]),
-    * the contraction's fixpoint — an exact check, never a hash heuristic:
-    * a false convergence would silently emit multiple survivors per
-    * component. A graph that is not a star forest after `maxIters` rounds
-    * throws.
+    * The pairs are normalized once (larger -> smaller, no self pairs,
+    * distinct, both ends docs) and checkpointed via [[truncateLineage]]
+    * (reliable when a checkpoint dir is set). Then one of two paths runs,
+    * chosen by the size of that edge set, the way a broadcast join is
+    * chosen: with k = `spark.sql.autoBroadcastJoinThreshold` / 16 bytes
+    * (two longs per edge) of `docs`' session, one bounded
+    * `limit(k + 1).collect()` reads the edges.
+    *  - At most k edges: union-find on the driver ([[unionFindRoots]]), and
+    *    the labels of the non-root nodes (never more rows than edges) come
+    *    back as a local relation. A few jobs in all, where each round of
+    *    the loop below costs several.
+    *  - More than k edges, or a threshold <= 0: alternating large-star /
+    *    small-star contraction (Kiveris et al., "Connected Components in
+    *    MapReduce and Beyond", SoCC 2014), O(log^2 n) rounds on ANY graph
+    *    shape, so a long chain of near-dup revisions converges in a few
+    *    rounds where min-label propagation would need one round per unit
+    *    of diameter (a 1000-node chain converges within 25 rounds —
+    *    tested). Each round's edge set is truncated via [[truncateLineage]]:
+    *    without lineage truncation every round's plan embeds all previous
+    *    rounds. Convergence = the materialized edge set is a min-rooted star
+    *    forest ([[isStarForest]]), the contraction's fixpoint — an exact
+    *    check, never a hash heuristic: a false convergence would silently
+    *    emit multiple survivors per component. A graph that is not a star
+    *    forest after `maxIters` rounds throws.
     */
   def dupClusters(docs: DataFrame, pairs: DataFrame, maxIters: Int = 50)(
       implicit spark: SparkSession): DataFrame = {
     val ids = docs.select(col("doc_id"))
-    var edges = truncateLineage(
+    val edges = truncateLineage(
       pairs.select(greatest(col("a_id"), col("b_id")).as("u"),
           least(col("a_id"), col("b_id")).as("v"))
         .filter(col("u") =!= col("v"))
@@ -445,6 +455,63 @@ object Dedup {
         .join(ids.withColumnRenamed("doc_id", "u"), Seq("u"), "left_semi")
         .join(ids.withColumnRenamed("doc_id", "v"), Seq("v"), "left_semi")
         .select(col("u"), col("v")))
+    val session = docs.sparkSession
+    val threshold = session.sessionState.conf.autoBroadcastJoinThreshold
+    // limit takes an Int: a threshold beyond 32 GiB is capped there
+    val k = math.min(threshold / 16, Int.MaxValue - 1L).toInt
+    val small =
+      if (threshold <= 0) None
+      else Some(edges.limit(k + 1).collect()).filter(_.length <= k)
+    // (doc_id, root) for every node that is not its component's minimum
+    val roots = small match {
+      case Some(rows) =>
+        session.createDataFrame(unionFindRoots(rows.map(_.getLong(0)), rows.map(_.getLong(1))))
+          .toDF("doc_id", "root")
+      case None => starContraction(edges, maxIters)
+    }
+    ids.join(roots, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("root"), col("doc_id")).as("cluster_id"))
+  }
+
+  /** In-memory connected components of the edges (us(i), vs(i)): union-find
+    * over the sorted distinct node ids with path compression, always
+    * linking the larger root under the smaller, so every root is its
+    * component's minimum. Returns (node, root) for the non-root nodes only:
+    * each is the loser of one successful union, so there are never more of
+    * them than edges.
+    */
+  private def unionFindRoots(us: Array[Long], vs: Array[Long]): Seq[(Long, Long)] = {
+    val all = us ++ vs
+    java.util.Arrays.sort(all)
+    var n = 0
+    for (x <- all) if (n == 0 || all(n - 1) != x) { all(n) = x; n += 1 }
+    val nodes = java.util.Arrays.copyOf(all, n)
+    // node ids are sorted, so a smaller index is a smaller id
+    val parent = Array.tabulate(n)(identity)
+    def find(i: Int): Int = {
+      var r = i
+      while (parent(r) != r) r = parent(r)
+      var j = i
+      while (parent(j) != r) { val next = parent(j); parent(j) = r; j = next }
+      r
+    }
+    def index(x: Long) = java.util.Arrays.binarySearch(nodes, x)
+    for (e <- us.indices) {
+      val a = find(index(us(e)))
+      val b = find(index(vs(e)))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    (0 until n).iterator.map(i => i -> find(i)).collect {
+      case (i, r) if r != i => (nodes(i), nodes(r))
+    }.toVector
+  }
+
+  /** The distributed path of [[dupClusters]]: contracts the normalized edge
+    * set (u > v) to a min-rooted star forest and returns it as
+    * (doc_id, root), one row per non-root node.
+    */
+  private def starContraction(edges0: DataFrame, maxIters: Int): DataFrame = {
+    var edges = edges0
     var converged = isStarForest(edges)
     var iter = 0
     while (!converged && iter < maxIters) {
@@ -456,8 +523,7 @@ object Dedup {
       throw new IllegalStateException(s"dupClusters did not converge in $maxIters iterations")
     // converged state is a min-rooted star per component: every non-root
     // points directly at its component minimum
-    ids.join(edges.select(col("u").as("doc_id"), col("v").as("root")), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("root"), col("doc_id")).as("cluster_id"))
+    edges.select(col("u").as("doc_id"), col("v").as("root"))
   }
 
   /** True iff the directed edge set (u > v) is a star forest: every u has

@@ -1,7 +1,5 @@
 package graft.text
 
-import java.math.{BigDecimal => JBigDecimal, RoundingMode}
-
 import graft.model.Signal
 
 /** Length-weighted extraction-confidence signal.
@@ -58,7 +56,7 @@ object ConfidenceSignal {
       valid.foreach { b =>
         // floor the weight like the per-word form (math.max(1, len)): a
         // valid block with charWeight 0 must not zero the denominator
-        // (NaN would blow up in round2's BigDecimal)
+        // (NaN would blow up in round2)
         val w = math.max(1L, b.charWeight)
         totalWeight += w
         weightedSum += b.conf.toDouble * w
@@ -94,6 +92,5 @@ object ConfidenceSignal {
     }
   }
 
-  private def round2(x: Double): Double =
-    new JBigDecimal(x).setScale(2, RoundingMode.HALF_EVEN).doubleValue()
+  private def round2(x: Double): Double = HalfEven.round(x, 2)
 }

@@ -1,6 +1,5 @@
 package graft.text
 
-import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import java.util.regex.Pattern
 
 import graft.model.Signal
@@ -152,6 +151,5 @@ object DictionarySignal {
   }
 
   /** Python `round(x, 4)` = HALF_EVEN (SURVEY.md §2.8 parity watchpoint). */
-  def round4(x: Double): Double =
-    new JBigDecimal(x).setScale(4, RoundingMode.HALF_EVEN).doubleValue()
+  def round4(x: Double): Double = HalfEven.round(x, 4)
 }

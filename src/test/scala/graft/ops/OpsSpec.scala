@@ -245,19 +245,36 @@ class DedupSpec extends AnyFunSuite {
     (ids ++ Seq.fill(3)(pick(ids)), if (noPairs) Seq.empty else pairs)
   }
 
+  private val BroadcastThreshold = "spark.sql.autoBroadcastJoinThreshold"
+
+  /** Runs `f` with the broadcast threshold at `bytes`, the bound that
+    * selects [[Dedup.dupClusters]]' path: in memory up to bytes / 16 edges,
+    * the distributed loop above that or at -1.
+    */
+  private def withBroadcastThreshold[T](bytes: String)(f: => T): T = {
+    val prev = spark.conf.getOption(BroadcastThreshold)
+    spark.conf.set(BroadcastThreshold, bytes)
+    try f
+    finally prev.fold(spark.conf.unset(BroadcastThreshold))(spark.conf.set(BroadcastThreshold, _))
+  }
+
   test("dup clusters equal an in-memory union-find on 1 and 7 partitions (property)") {
     var sawNoPairs = false
     val prop = Prop.forAllNoShrink(ccCases) { case (docIds, pairs) =>
       sawNoPairs ||= pairs.isEmpty
       val expected = unionFindClusters(docIds, pairs)
       val bad = for {
+        // the default threshold takes the in-memory path, -1 the loop
+        (path, threshold) <- Seq("in-memory" -> spark.conf.get(BroadcastThreshold), "distributed" -> "-1")
         parts <- Seq(1, 7)
-        got = Dedup.dupClusters(
-            docIds.map(i => (i, s"t$i")).toDF("doc_id", "text").repartition(parts),
-            pairs.toDF("a_id", "b_id").repartition(parts))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+        got = withBroadcastThreshold(threshold) {
+          Dedup.dupClusters(
+              docIds.map(i => (i, s"t$i")).toDF("doc_id", "text").repartition(parts),
+              pairs.toDF("a_id", "b_id").repartition(parts))
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+        }
         if got != expected
-      } yield s"$parts partitions: expected $expected got $got"
+      } yield s"$path, $parts partitions: expected $expected got $got"
       Prop(bad.isEmpty) :| bad.take(1).mkString("\n")
     }
     val res = Test.check(
@@ -294,9 +311,34 @@ class DedupSpec extends AnyFunSuite {
     val n = 1000L
     val nodes = (0L until n).map(i => (i, s"t$i")).toDF("doc_id", "text")
     val chain = (0L until n - 1).map(i => (i, i + 1, 1.0)).toDF("a_id", "b_id", "jaccard")
-    val r = Dedup.dupClusters(nodes, chain, maxIters = 25)
-      .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+    // -1 disables the in-memory path, so the contraction loop runs
+    val r = withBroadcastThreshold("-1") {
+      Dedup.dupClusters(nodes, chain, maxIters = 25)
+        .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+    }
     assert(r.size == 1000 && r.values.toSet == Set(0L))
+  }
+
+  test("dup clusters: edge sets up to threshold / 16 finish in memory, larger ones run the loop") {
+    // 48 bytes = 3 edges of two longs. A chain 0-1-2-3 has 3 edges; adding
+    // the chord 0-2 makes 4 and the same one component.
+    val nodes = (0L to 5L).map(i => (i, s"t$i")).toDF("doc_id", "text")
+    val chain = Seq((0L, 1L), (1L, 2L), (2L, 3L))
+    val expected = Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L, 4L -> 4L, 5L -> 5L)
+    withBroadcastThreshold("48") {
+      def run(pairs: Seq[(Long, Long)]): (Map[Long, Long], Int) = {
+        var labels = Map.empty[Long, Long]
+        val jobs = SparkTestBase.jobsStarted {
+          labels = Dedup.dupClusters(nodes, pairs.toDF("a_id", "b_id"))
+            .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+        }
+        (labels, jobs)
+      }
+      val (inMemory, inMemoryJobs) = run(chain)
+      val (loop, loopJobs) = run(chain :+ (0L -> 2L))
+      assert(inMemory == expected && loop == expected)
+      assert(inMemoryJobs < loopJobs, s"in-memory $inMemoryJobs jobs, loop $loopJobs jobs")
+    }
   }
 
   test("iterative CC uses reliable checkpoints when a checkpoint dir is set") {
@@ -314,8 +356,11 @@ class DedupSpec extends AnyFunSuite {
       sc.setCheckpointDir(dir.getAbsolutePath)
       val nodes = (0L to 5L).map(i => (i, s"t$i")).toDF("doc_id", "text")
       val pairs = Seq((0L, 1L, 1.0), (1L, 2L, 1.0)).toDF("a_id", "b_id", "jaccard")
-      val r = Dedup.dupClusters(nodes, pairs)
-        .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+      // the contraction loop checkpoints every round: keep it on that path
+      val r = withBroadcastThreshold("-1") {
+        Dedup.dupClusters(nodes, pairs)
+          .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+      }
       assert(r(2L) == 0L && r(5L) == 5L)
       // fault-tolerant state actually landed on (shared) storage
       val wrote = java.nio.file.Files.walk(dir.toPath).filter(_.toFile.isFile).count()
