@@ -17,14 +17,19 @@ import graft.text._
   */
 object Extractor {
 
-  /** Job config broadcast to executors (reference: pipeline.py:35-54). */
+  /** Row languages the kernel accepts; another non-null `lang` fails. */
+  val Languages: Set[String] = Set("en", "fr", "de", "el", "la")
+
+  /** Job config broadcast to executors (reference: pipeline.py:35-54).
+    * @param maxBytes skip-big guard (tesseract.py:19 analogue) on `html`
+    *   payloads only: a text-layer row of any length is bounded by the
+    *   `maxKernelSteps` [[graft.util.StepBudget]] alone (linear kernels).
+    */
   final case class Config(
       threshold: Double = 0.85,
       diagnostics: Boolean = false,
       forceHeavy: Boolean = false,
-      maxBytes: Int = 512 * 1024, // skip-big guard (tesseract.py:19 analogue)
-      languages: Set[String] = Set("en", "fr", "de", "el", "la"),
-      words: Set[String] = null,
+      maxBytes: Int = 512 * 1024,
       // per-row kernel work budget in ~chars-scanned units (B3: the
       // reference's per-file 1800 s timeout, pipeline.py:396, made
       // deterministic). ~100x headroom over a maxBytes-sized row's normal
@@ -32,7 +37,7 @@ object Extractor {
       // timeout failure row instead of pinning the task.
       maxKernelSteps: Long = 64L * 1024 * 1024
   ) {
-    def analyzer: QualityAnalyzer = QualityAnalyzer(threshold = threshold, words = words)
+    def analyzer: QualityAnalyzer = QualityAnalyzer(threshold = threshold)
   }
 
   /** Assemble postprocessed blocks into (text, spans), dropping blocks that
@@ -133,7 +138,7 @@ object Extractor {
   }
 
   private def fastExtractUnsafe(row: RawPage, cfg: Config): DocResult = {
-    if (row.lang != null && !cfg.languages.contains(row.lang))
+    if (row.lang != null && !Languages.contains(row.lang))
       return failure(row, s"unknown_lang:${row.lang}")
     val hasHtml = row.html != null && row.html.nonEmpty
     val hasText = row.text != null && row.text.strip().nonEmpty

@@ -1,6 +1,6 @@
 package graft.job
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Pipeline
@@ -18,10 +18,11 @@ import graft.ops.Pipeline
   *   - the at-rest layout is `partitionBy("split")`, so downstream training
   *     readers prune to their split instead of filtering the corpus;
   *   - commit protocol is write-then-commit, mirroring [[CommitStore]]: the
-  *     lineage table is written LAST, from the parquet actually on disk
-  *     (not a re-plan), so a killed run leaves no lineage and the rerun
-  *     redoes the work; an existing lineage short-circuits into a resume
-  *     no-op — the same contract the extraction CLI has.
+  *     lineage table is written LAST, from the per-split counts the write
+  *     job itself observed (not a re-plan or a read-back), so a killed run
+  *     leaves no lineage and the rerun redoes the work; an existing lineage
+  *     short-circuits into a resume no-op — the same contract the
+  *     extraction CLI has.
   */
 object PrepareJob {
 
@@ -42,37 +43,36 @@ object PrepareJob {
     }
   }
 
-  /** The committed lineage, or None when absent or empty — the extraction
-    * job's read policy ([[ExtractionJob.readLineage]]): a corrupted lineage
-    * dir stays loud instead of silently redoing and overwriting the
-    * previous run.
+  /** The committed lineage rows, or None when absent or empty — the
+    * extraction job's read policy ([[ExtractionJob.readLineage]]): a
+    * corrupted lineage dir stays loud instead of silently redoing and
+    * overwriting the previous run.
     */
-  private def readLineage(path: String)(implicit spark: SparkSession): Option[DataFrame] =
-    ExtractionJob.readLineage(path).filterNot(_.isEmpty)
+  private def readLineage(path: String)(implicit spark: SparkSession): Option[Array[Row]] =
+    ExtractionJob.readLineage(path).map(_.collect()).filter(_.nonEmpty)
 
   /** Lineage rollup-row marker (never a real split name). */
   private val AllRow = "__all__"
 
-  private def fromLineage(lin: DataFrame, resumed: Boolean): Result = {
-    val collected = lin.collect()
-    val rows = collected.map(r =>
-      SplitStat(r.getAs[String]("split"), r.getAs[Long]("n_docs"),
-        r.getAs[Long]("ws_tokens"), r.getAs[Long]("group_docs")))
-    val stats = rows.filterNot(_.split == AllRow).toSeq
-    // input_docs is a run-constant replicated per lineage row (the lineage
-    // always holds the `__all__` row, so there is one to read)
-    val inDocs = collected.head.getAs[Long]("input_docs")
-    val surv = stats.map(_.n_docs).sum
-    val groupDocs = stats.map(_.group_docs).sum
-    Result(resumed, inDocs, surv, groupDocs - surv, inDocs - groupDocs, stats)
+  /** The report of a run, fresh or resumed, from its per-split counts. */
+  private def result(resumed: Boolean, inputDocs: Long, stats: Seq[SplitStat]): Result = {
+    val (surv, groupDocs) = (stats.map(_.n_docs).sum, stats.map(_.group_docs).sum)
+    Result(resumed, inputDocs, surv, groupDocs - surv, inputDocs - groupDocs, stats)
   }
+
+  // input_docs is a run-constant replicated per lineage row (the lineage
+  // always holds the `__all__` row, so there is one to read)
+  private def fromLineage(rows: Array[Row], resumed: Boolean): Result =
+    result(resumed, rows.head.getAs[Long]("input_docs"), rows.toSeq.map(r =>
+      SplitStat(r.getAs[String]("split"), r.getAs[Long]("n_docs"),
+        r.getAs[Long]("ws_tokens"), r.getAs[Long]("group_docs"))).filterNot(_.split == AllRow))
 
   def run(docs: DataFrame, outDir: String)(implicit spark: SparkSession): Result = {
     val linPath = s"$outDir/prepare_lineage"
     readLineage(linPath) match {
-      case Some(lin) =>
+      case Some(rows) =>
         // committed lineage = the run finished: resume is a no-op report
-        fromLineage(lin, resumed = true)
+        fromLineage(rows, resumed = true)
       case None =>
         // fail FAST on schema collisions: the output appends these three
         // columns to the input row, and a duplicate name would surface as
@@ -89,40 +89,33 @@ object PrepareJob {
         val survivors = prep
           .filter(col("keep"))
           .select(col("doc_id"), col("split"), col("ws_tokens"), col("dup_count"))
-        val out = docs.join(survivors, Seq("doc_id"))
-        out.write.mode("overwrite").partitionBy("split").parquet(s"$outDir/prepared")
-        // read only after the write returned: after a failed action an
-        // Observation reports zeroed metrics instead of throwing. An input
-        // the optimizer proves empty loses the observed node, and with it
-        // the metric: count() then reads the empty plan instead.
-        val inputDocs = observed.get.get("input_docs") match {
-          case Some(n: Long) => n
-          case _ => docs.count()
+        // so do the per-split counts, observed above the join-back in the
+        // write's result stage (metrics applied once per task): the written
+        // rows, a duplicated doc_id's multiplied rows included. group_docs
+        // counts each input doc whose exact-dup group survived.
+        val written = Observation("prepare_splits")
+        val perSplit = Pipeline.SplitNames.flatMap { s =>
+          Seq("n_docs" -> lit(1L), "ws_tokens" -> col("ws_tokens"), "group_docs" -> col("dup_count"))
+            .map { case (name, c) => sum(when(col("split") === s, c)).as(s"${s}_$name") }
         }
-        // lineage FROM THE WRITTEN FILES (explicit schema: a zero-survivor
-        // write leaves only the marker, which schema inference cannot
-        // read): group_docs counts every input doc whose exact-dup group
-        // survived (survivor + its dropped copies). The `__all__` rollup
-        // row makes the lineage non-empty even for a fully-gated corpus,
-        // so the commit is durable and a rerun resumes instead of redoing.
-        val written = spark.read.schema(out.schema).parquet(s"$outDir/prepared")
-        val perSplit = written
-          .groupBy(col("split"))
-          .agg(
-            count(lit(1)).as("n_docs"),
-            sum(col("ws_tokens")).as("ws_tokens"),
-            sum(col("dup_count")).as("group_docs"))
-        val totals = written
-          .agg(
-            count(lit(1)).as("n_docs"),
-            coalesce(sum(col("ws_tokens")), lit(0L)).as("ws_tokens"),
-            coalesce(sum(col("dup_count")), lit(0L)).as("group_docs"))
-          .select(lit(AllRow).as("split"), col("n_docs"), col("ws_tokens"), col("group_docs"))
-        val lin = perSplit
-          .unionByName(totals)
-          .withColumn("input_docs", lit(inputDocs))
-        lin.write.mode("overwrite").parquet(linPath)
-        fromLineage(spark.read.parquet(linPath), resumed = false)
+        docs.join(survivors, Seq("doc_id")).observe(written, perSplit.head, perSplit.tail: _*)
+          .write.mode("overwrite").partitionBy("split").parquet(s"$outDir/prepared")
+        // read only after the write returned: a failed action's Observation
+        // reads zeroed metrics. A write the optimizer proves empty loses the
+        // observed nodes: a split count reads 0, input_docs falls to count().
+        def metric(o: Observation, name: String) = o.get.get(name).collect { case n: Long => n }
+        val inputDocs = metric(observed, "input_docs").getOrElse(docs.count())
+        val stats = Pipeline.SplitNames.map { s =>
+          def n(name: String) = metric(written, s"${s}_$name").getOrElse(0L)
+          SplitStat(s, n("n_docs"), n("ws_tokens"), n("group_docs"))
+        }.filter(_.n_docs > 0)
+        // the `__all__` rollup row keeps a fully-gated corpus's lineage
+        // non-empty, so the commit is durable and a rerun resumes
+        val rollup = SplitStat(AllRow, stats.map(_.n_docs).sum, stats.map(_.ws_tokens).sum,
+          stats.map(_.group_docs).sum)
+        spark.createDataFrame(stats :+ rollup).withColumn("input_docs", lit(inputDocs))
+          .coalesce(1).write.mode("overwrite").parquet(linPath)
+        result(resumed = false, inputDocs, stats)
     }
   }
 }

@@ -47,11 +47,13 @@ object Pipeline {
   /** [[hashBucket]] at modulus 100 — the split-assignment bucket. */
   def splitBucket(id: Column): Column = hashBucket(id, 100)
 
+  val SplitNames: Seq[String] = Seq("train", "val", "test") // splitName's bucket order
+
   /** 80/10/10 train/val/test assignment from [[splitBucket]]. */
   def splitName(id: Column): Column =
-    when(splitBucket(id) < 80, "train")
-      .when(splitBucket(id) < 90, "val")
-      .otherwise("test")
+    when(splitBucket(id) < 80, SplitNames(0))
+      .when(splitBucket(id) < 90, SplitNames(1))
+      .otherwise(SplitNames(2))
 
   /** One-pass gate + dedup + split. Output columns:
     * `(doc_id, keep, split, ws_tokens, dup_count)` — one row per unique

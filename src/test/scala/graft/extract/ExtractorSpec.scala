@@ -235,6 +235,19 @@ class ExtractorKernelSpec extends AnyFunSuite {
     assert(!badLang.success && badLang.error == "unknown_lang:xx")
   }
 
+  test("maxBytes caps html payloads only: a long text layer is bounded by the step budget") {
+    val small = Extractor.Config(maxBytes = 1024)
+    val layer = CorpusGen.genRow(42L, 3).text // class 3: good text layer
+    val prose = Iterator.continually(layer).take(2 + 1024 / layer.length).mkString("\n\n")
+    assert(prose.length > 1024)
+    val text = Extractor.fastExtract(RawPage("https://long.example/text", ts, null, prose, "en"), small)
+    assert(text.success && text.engine == Engines.Passthrough, text)
+    assert(text.error == null)
+    val html = Extractor.fastExtract(
+      RawPage("https://long.example/html", ts, s"<p>$prose</p>".getBytes(StandardCharsets.UTF_8), null, "en"), small)
+    assert(!html.success && html.error.startsWith("oversized_payload:"), html.error)
+  }
+
   test("short-text edge rows are neutral, not flagged") {
     val doc = Extractor.fastExtract(CorpusGen.genRow(42L, 19), cfg)
     assert(doc.success && !doc.quality.flagged)

@@ -75,9 +75,9 @@ class PrepareJobSpec extends AnyFunSuite {
     var resumed: PrepareJob.Result = null
     val jobs = jobsStarted { resumed = PrepareJob.run(docs, dir) }
     assert(resumed == first.copy(resumed = true))
-    // the lineage read's schema inference, its non-empty check and the one
-    // collect that every reported count, input_docs included, comes from
-    assert(jobs == 3, s"resume started $jobs jobs")
+    // the lineage read's schema inference and the one collect that every
+    // reported count, input_docs included, comes from
+    assert(jobs == 2, s"resume started $jobs jobs")
   }
 
   test("a fresh --prepare counts its input on the write job, not a separate scan") {
@@ -111,8 +111,48 @@ class PrepareJobSpec extends AnyFunSuite {
     // a separate count() adds 2, 3, 3 and 0 jobs to these: its own scan, the
     // repartition's shuffle and the count's exchange, each a job under AQE.
     // On the provably empty input the optimizer drops the observed node,
-    // and the count() fallback reads an empty plan with no job.
-    assert((oneJobs, severalJobs, noneJobs, emptyJobs) == ((8, 9, 7, 5)),
+    // and the count() fallback reads an empty plan with no job. The split
+    // counts ride on the write too, so no job reads prepared/ or the
+    // lineage back.
+    assert((oneJobs, severalJobs, noneJobs, emptyJobs) == ((4, 5, 5, 3)),
       s"fresh runs started $oneJobs, $severalJobs, $noneJobs and $emptyJobs jobs")
+  }
+
+  test("a failed prepare write commits no lineage, and the rerun is fresh") {
+    import spark.implicits._
+    val docs = ((0L until 20L).map(i => (i, goodText(i.toInt + 300))) :+ (30L -> "tiny"))
+      .toDF("doc_id", "text")
+    val dir = Files.createTempDirectory("prepfail").toFile.getAbsolutePath
+    // the obstacle: a column the gate never reads fails to evaluate on one
+    // row, so the survivors write fails on its join-back side
+    val broken = udf((id: Long) => if (id == 7L) throw new IllegalStateException("unreadable row") else id)
+    intercept[Exception](PrepareJob.run(docs.withColumn("note", broken(col("doc_id"))), dir))
+    val lineageFiles = Option(new java.io.File(s"$dir/prepare_lineage").listFiles()).toSeq.flatten
+      .map(_.getName).filterNot(n => n.startsWith("_") || n.startsWith("."))
+    assert(lineageFiles.isEmpty, lineageFiles)
+    // obstacle removed: nothing committed, so the rerun redoes the work and
+    // reports what a run into an empty directory reports
+    val rerun = PrepareJob.run(docs, dir)
+    assert(!rerun.resumed, rerun)
+    assert(rerun.inputDocs == 21 && rerun.survivors == 20 && rerun.gatedOut == 1, rerun)
+    assert(rerun == PrepareJob.run(docs, Files.createTempDirectory("prepclean").toFile.getAbsolutePath))
+  }
+
+  test("the lineage counts the written rows, a duplicated doc_id's included") {
+    import spark.implicits._
+    // doc_id 5 carries two different gate-passing texts: two canonical
+    // survivors, each joined back to both input rows of doc_id 5
+    val docs = ((0L until 20L).map(i => (i, goodText(i.toInt + 400))) ++
+      Seq(5L -> goodText(500), 30L -> "tiny")).toDF("doc_id", "text")
+    val dir = Files.createTempDirectory("prepdupid").toFile.getAbsolutePath
+    val r = PrepareJob.run(docs, dir)
+    val written = spark.read.parquet(s"$dir/prepared")
+      .groupBy(col("split"))
+      .agg(count(lit(1)), sum(col("ws_tokens")), sum(col("dup_count")))
+      .collect()
+      .map(w => SplitStat(w.getString(0), w.getLong(1), w.getLong(2), w.getLong(3)))
+    assert(written.map(_.n_docs).sum == 23, written.toSeq) // 19 + 2 x 2 rows of doc_id 5
+    assert(r.splits.sortBy(_.split) == written.toSeq.sortBy(_.split), r)
+    assert(r.survivors == 23, r)
   }
 }
