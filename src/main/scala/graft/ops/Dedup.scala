@@ -1,8 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Corpus-scale deduplication operators over a `documents(doc_id, text, ...)`
   * table — the operations a training-data pipeline layers on top of
@@ -194,6 +197,19 @@ object Dedup {
     * The output is every true pair, so a cluster of k identical documents
     * yields k(k-1)/2 rows. Collapse mass exact copies through
     * [[markDuplicates]] first (as `PrepareJob` does) — one hash aggregation.
+    *
+    * The shingle sets are checkpointed once; then one of two paths runs,
+    * chosen by their size the way a broadcast join is chosen. One aggregate
+    * job reads the shingle and row counts. When 8 bytes per shingle plus 16
+    * per row is at most `spark.sql.autoBroadcastJoinThreshold` of `docs`'
+    * session (and `doc_id` is a long), the sets are collected and the same
+    * search runs in driver memory ([[prefixJoinInMemory]]); its pairs come
+    * back as a local relation with the distributed plan's schema. That path
+    * gives up, having enumerated nothing, when its prefix self-join could
+    * emit more than the broadcast threshold / 24 candidate pairs (8 bytes
+    * for the packed pair, 16 for the two ids of its row). Larger inputs, or
+    * a broadcast threshold <= 0, run the distributed plan
+    * ([[prefixJoinPairs]]), the web-scale path.
     */
   def ngramJaccardPairs(
       docs: DataFrame,
@@ -213,6 +229,35 @@ object Dedup {
     val sets = truncateLineage(docs.select(
       col("doc_id"),
       graft.expressions.GraftFunctions.shingleHashes64(col("text"), n).as("shingles")))
+    // lazy: it starts no job unless returned, and the driver path takes
+    // its schema
+    val distributed = prefixJoinPairs(sets, threshold)
+    val session = docs.sparkSession
+    // the driver path indexes arrays by Int: a threshold beyond 2 GiB is
+    // capped there
+    val bound = math.min(session.sessionState.conf.autoBroadcastJoinThreshold, Int.MaxValue.toLong)
+    val inMemory =
+      if (bound <= 0 || sets.schema("doc_id").dataType != LongType) None
+      else {
+        val (shingles, rows) = sets
+          .select(when(col("shingles").isNull, 0).otherwise(size(col("shingles"))))
+          .rdd.aggregate((0L, 0L))(
+            (acc, r) => (acc._1 + r.getInt(0), acc._2 + 1),
+            (x, y) => (x._1 + y._1, x._2 + y._2))
+        if (8 * shingles + 16 * rows > bound) None
+        else {
+          import session.implicits._
+          val collected = sets.as[(java.lang.Long, Array[Long])].collect()
+          prefixJoinInMemory(collected.map(_._1), collected.map(_._2), threshold, bound / 24)
+        }
+      }
+    inMemory.fold(distributed)(pairs => session.createDataFrame(pairs.asJava, distributed.schema))
+  }
+
+  /** The distributed plan of [[ngramJaccardPairs]] over the checkpointed
+    * `(doc_id, shingles)` sets.
+    */
+  private def prefixJoinPairs(sets: DataFrame, threshold: Double): DataFrame = {
     // Document frequency per shingle: a partial-aggregated groupBy joined
     // back, NOT a window — a window partition runs on ONE task, so a
     // corpus-common shingle (df 10^7-10^8 at web scale) would land its whole
@@ -240,6 +285,122 @@ object Dedup {
       .select(col("a_id"), col("b_id"))
       .distinct()
     verifiedPairs(candidates, sets, threshold)
+  }
+
+  /** [[prefixJoinPairs]] in driver memory over the collected rows
+    * (`ids(i)`, `sets(i)`), with its semantics:
+    *  - df counts every post, null-`doc_id` rows included; a row with null
+    *    shingles posts nothing.
+    *  - A doc_id's rows merge their posts into one prefix, as the per-doc
+    *    `groupBy` does; a null doc_id never pairs.
+    *  - Candidates are distinct id pairs a < b meeting in a prefix, and each
+    *    is verified once per pair of their rows, as the joins on `a_id` and
+    *    `b_id` do, with Spark's `round` (HALF_UP on the double's decimal
+    *    string).
+    * df comes from one sorted primitive array of every post, and a doc's
+    * ordered shared posts are single longs, df << 32 | rank of the shingle
+    * among the distinct ones (ranks order as the hashes do). Returns None
+    * before enumerating a candidate when the prefix self-join would emit
+    * more than `maxCandidates` pairs, the sum of k(k - 1) / 2 over its
+    * postings.
+    */
+  private def prefixJoinInMemory(
+      ids: Array[java.lang.Long],
+      sets: Array[Array[Long]],
+      threshold: Double,
+      maxCandidates: Long): Option[Seq[Row]] = {
+    val present = sets.filter(_ != null)
+    val keys = new Array[Long](present.map(_.length).sum)
+    var at = 0
+    for (s <- present) { System.arraycopy(s, 0, keys, at, s.length); at += s.length }
+    java.util.Arrays.sort(keys)
+    // compacted in place: keys(0 until nKeys) distinct, dfs(r) the count of keys(r)
+    val dfs = new Array[Int](keys.length)
+    var nKeys = 0
+    for (x <- keys) {
+      if (nKeys == 0 || keys(nKeys - 1) != x) { keys(nKeys) = x; nKeys += 1 }
+      dfs(nKeys - 1) += 1
+    }
+    def rank(sh: Long) = java.util.Arrays.binarySearch(keys, 0, nKeys, sh)
+
+    // rows with a doc_id in id order; group g is rows(starts(g) until starts(g + 1))
+    val rows = ids.indices.filter(ids(_) != null).sortBy(ids(_).longValue).toArray
+    val starts = (rows.indices.filter(i => i == 0 || ids(rows(i)) != ids(rows(i - 1))) :+ rows.length).toArray
+    def groupSets(g: Int) = (starts(g) until starts(g + 1)).map(i => sets(rows(i))).filter(_ != null)
+
+    // prefix postings, rank << 32 | group: sorted, each rank's groups ascend
+    val postings = new Array[Long](keys.length)
+    var nPostings = 0
+    for (g <- 0 until starts.length - 1) {
+      val own = groupSets(g)
+      val len = own.map(_.length).sum
+      val shared = new Array[Long](len)
+      var m = 0
+      for (s <- own; sh <- s) {
+        val r = rank(sh)
+        if (dfs(r) > 1) { shared(m) = dfs(r).toLong << 32 | r; m += 1 }
+      }
+      java.util.Arrays.sort(shared, 0, m)
+      val prefix = math.min(m.toLong, math.max(0L, m - math.ceil((threshold - 1e-4) * len).toLong + 1)).toInt
+      for (i <- 0 until prefix) {
+        postings(nPostings) = (shared(i) & 0xffffffffL) << 32 | g
+        nPostings += 1
+      }
+    }
+    java.util.Arrays.sort(postings, 0, nPostings)
+    def runEnd(i: Int) = {
+      var j = i + 1
+      while (j < nPostings && postings(j) >>> 32 == postings(i) >>> 32) j += 1
+      j
+    }
+    var emitted = 0L
+    var i = 0
+    while (i < nPostings && emitted <= maxCandidates) {
+      val j = runEnd(i)
+      emitted += (j - i).toLong * (j - i - 1) / 2
+      i = j
+    }
+    if (emitted > maxCandidates) return None
+
+    // candidates ga << 32 | gb, ga < gb, so doc ids a < b
+    val candidates = new Array[Long](emitted.toInt)
+    var nCandidates = 0
+    i = 0
+    while (i < nPostings) {
+      val j = runEnd(i)
+      for (x <- i until j; y <- x + 1 until j) {
+        val ga = postings(x).toInt
+        val gb = postings(y).toInt
+        if (ga != gb) { candidates(nCandidates) = ga.toLong << 32 | gb; nCandidates += 1 }
+      }
+      i = j
+    }
+    java.util.Arrays.sort(candidates, 0, nCandidates)
+    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+    for (c <- 0 until nCandidates if c == 0 || candidates(c) != candidates(c - 1)) {
+      val (ga, gb) = ((candidates(c) >>> 32).toInt, candidates(c).toInt)
+      val (a, b) = (ids(rows(starts(ga))), ids(rows(starts(gb))))
+      for (sa <- groupSets(ga); sb <- groupSets(gb)) {
+        val common = intersectionSize(sa, sb)
+        val jaccard = java.math.BigDecimal.valueOf(common.toDouble / (sa.length + sb.length - common))
+          .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+        if (jaccard >= threshold) out += Row(a, b, jaccard)
+      }
+    }
+    Some(out.toSeq)
+  }
+
+  /** Common elements of two ascending arrays of distinct longs. */
+  private def intersectionSize(a: Array[Long], b: Array[Long]): Int = {
+    var i = 0
+    var j = 0
+    var common = 0
+    while (i < a.length && j < b.length) {
+      if (a(i) < b(j)) i += 1
+      else if (a(i) > b(j)) j += 1
+      else { common += 1; i += 1; j += 1 }
+    }
+    common
   }
 
   /** Exact Jaccard verification of candidate `(a_id, b_id)` pairs against

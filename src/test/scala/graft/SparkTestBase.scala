@@ -10,6 +10,22 @@ object SparkTestBase {
   lazy val spark: SparkSession = LocalSession.builder(4).getOrCreate()
   spark.sparkContext.setLogLevel("WARN")
 
+  private val BroadcastThreshold = "spark.sql.autoBroadcastJoinThreshold"
+
+  /** The session's broadcast threshold before any test sets it. */
+  val defaultBroadcastThreshold: String = spark.conf.get(BroadcastThreshold)
+
+  /** Runs `f` with the broadcast threshold at `bytes`, the bound that
+    * selects the driver or the distributed path of `Dedup.dupClusters` and
+    * `Dedup.ngramJaccardPairs`: -1 selects the distributed path.
+    */
+  def withBroadcastThreshold[T](bytes: String)(f: => T): T = {
+    val prev = spark.conf.getOption(BroadcastThreshold)
+    spark.conf.set(BroadcastThreshold, bytes)
+    try f
+    finally prev.fold(spark.conf.unset(BroadcastThreshold))(spark.conf.set(BroadcastThreshold, _))
+  }
+
   /** Spark jobs started by `f`, counted by job group. A marker job started
     * after `f` returns drains the listener bus: its start event is handled
     * only after every event `f`'s jobs posted.

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.SparkTestBase.withBroadcastThreshold
 
 /** Plan-shape guards for the skew-immune dedup formulations (VERDICT r2 #1):
   * per-key statistics (exact-dup canonical id, shingle df, passage df) must
@@ -113,16 +114,24 @@ class DedupSkewSpec extends AnyFunSuite {
   }
 
   test("ngramJaccardPairs: shingle df is a partial-aggregated groupBy, not a window") {
-    val pairs = Dedup.ngramJaccardPairs(skewed, n = 4, threshold = 0.8)
-    noWindow(pairs)
-    assert(pairs.queryExecution.executedPlan.toString.contains("partial_count"))
-    // exact output: the 700-doc mega-cluster is every one of its
-    // C(700, 2) pairs at 1.0 (the df-ordered prefix keeps the join on its
-    // few rarest shingles), and the doc-unique docs share nothing
-    val r = pairs.collect().map(x => (x.getLong(0), x.getLong(1), x.getDouble(2)))
-    assert(r.length == 700 * 699 / 2, s"got ${r.length} pairs")
-    assert(r.forall { case (a, b, j) => a < b && b < 700 && j == 1.0 })
-    assert(r.map(x => (x._1, x._2)).toSet.size == r.length, "pairs must be distinct")
+    // The plan shape is the distributed path's, which -1 selects. The exact
+    // output holds at both settings (at the default bound this corpus's
+    // 489,300 prefix candidates exceed threshold / 24 too, so both run the
+    // distributed plan).
+    for (threshold <- Seq(SparkTestBase.defaultBroadcastThreshold, "-1")) withBroadcastThreshold(threshold) {
+      val pairs = Dedup.ngramJaccardPairs(skewed, n = 4, threshold = 0.8)
+      if (threshold == "-1") {
+        noWindow(pairs)
+        assert(pairs.queryExecution.executedPlan.toString.contains("partial_count"))
+      }
+      // exact output: the 700-doc mega-cluster is every one of its
+      // C(700, 2) pairs at 1.0 (the df-ordered prefix keeps the join on its
+      // few rarest shingles), and the doc-unique docs share nothing
+      val r = pairs.collect().map(x => (x.getLong(0), x.getLong(1), x.getDouble(2)))
+      assert(r.length == 700 * 699 / 2, s"got ${r.length} pairs")
+      assert(r.forall { case (a, b, j) => a < b && b < 700 && j == 1.0 })
+      assert(r.map(x => (x._1, x._2)).toSet.size == r.length, "pairs must be distinct")
+    }
   }
 
   test("ngramJaccardPairs: a shuffled prefix self-join runs the per-doc prefix aggregate once") {

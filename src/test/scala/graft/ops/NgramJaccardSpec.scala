@@ -1,17 +1,25 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.SparkTestBase.{defaultBroadcastThreshold, withBroadcastThreshold}
 
 /** Exactness of the prefix-filtered n-gram Jaccard join against a
   * brute-force all-pairs computation over [[Dedup.shingleHashes]]: planted
   * boilerplate above any df bound, a pair on the rounding edge of the
   * threshold, and generated corpora with null, empty, one-token, identical
   * and boilerplate documents on 1 and 7 input partitions, one of them with
-  * an exact-copy cluster of 210 documents.
+  * an exact-copy cluster of 210 documents. The driver path equals the
+  * distributed one on null and repeated doc_ids too, and the broadcast
+  * threshold's byte and candidate bounds pick between them.
   */
 class NgramJaccardSpec extends AnyFunSuite {
   private implicit lazy val spark: org.apache.spark.sql.SparkSession = SparkTestBase.spark
@@ -117,15 +125,115 @@ class NgramJaccardSpec extends AnyFunSuite {
       for (parts <- Seq(1, 7); t <- Seq(0.3, 0.5, 0.8, 1.0)) {
         val input = docs.repartition(parts)
         val expected = brute(rows, 4, t)
-        val exact = triples(Dedup.ngramJaccardPairs(input, n = 4, threshold = t))
         val at = s"seed $seed, $parts partitions, t=$t"
-        assert(exact.size == exact.toSet.size, s"$at: duplicate rows")
-        assert(exact.toSet == expected, s"$at: missing ${expected -- exact} extra ${exact.toSet -- expected}")
+        // the default broadcast threshold takes the driver path, -1 the distributed one
+        for (bound <- Seq(defaultBroadcastThreshold, "-1")) {
+          val exact = withBroadcastThreshold(bound)(triples(Dedup.ngramJaccardPairs(input, n = 4, threshold = t)))
+          assert(exact.size == exact.toSet.size, s"$at, broadcast threshold $bound: duplicate rows")
+          assert(exact.toSet == expected,
+            s"$at, broadcast threshold $bound: missing ${expected -- exact} extra ${exact.toSet -- expected}")
+        }
         val lsh = triples(Dedup.minhashPairs(input, n = 4, threshold = t)).toSet
         assert(lsh.subsetOf(expected), s"$at: ${lsh -- expected}")
         assert(copyPairs.subsetOf(lsh), s"$at: ${(copyPairs -- lsh).size} copy pairs missing")
       }
       assert(brute(rows, 4, 0.3).nonEmpty && brute(rows, 4, 1.0).nonEmpty, s"seed $seed corpus has no pairs")
     }
+  }
+
+  /** True when `pairs` is the driver path's local relation. */
+  private def inDriver(pairs: DataFrame): Boolean =
+    pairs.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  private val nullableSchema = StructType(Seq(
+    StructField("doc_id", LongType, nullable = true),
+    StructField("text", StringType, nullable = true)))
+
+  // corpus() rows with about one doc_id in 8 nulled and one in 8 taken from
+  // an earlier row (that doc_id with another text); or one row, repeated
+  private val mixedCorpora: Gen[Seq[(java.lang.Long, String)]] = for {
+    seed <- Gen.chooseNum(1, 1 << 20)
+    size <- Gen.chooseNum(2, 40)
+    identical <- Gen.oneOf(true, false)
+  } yield {
+    val rnd = new scala.util.Random(seed)
+    val rows = corpus(seed, size).map { case (id, t) => (java.lang.Long.valueOf(id), t) }
+    val one = rows(rnd.nextInt(size))
+    if (identical) Seq.fill(size)(one)
+    else rows.indices.map { i =>
+      rnd.nextInt(8) match {
+        case 0 => (null, rows(i)._2)
+        case 1 if i > 0 => (rows(rnd.nextInt(i))._1, rows(i)._2)
+        case _ => rows(i)
+      }
+    }
+  }
+
+  test("the driver path equals the distributed path in rows and schema (property)") {
+    var seen = Set.empty[String]
+    val prop = Prop.forAllNoShrink(mixedCorpora) { rows =>
+      val texts = rows.map(_._2)
+      seen ++= Seq(
+        "null doc_id" -> rows.exists(_._1 == null),
+        "null text" -> texts.contains(null),
+        "empty text" -> texts.contains(""),
+        "repeated doc_id" -> rows.filter(_._1 != null).groupBy(_._1).exists(_._2.map(_._2).distinct.size > 1),
+        "identical rows" -> (rows.distinct.size == 1)
+      ).collect { case (feature, true) => feature }
+      val docs = spark.createDataFrame(
+        java.util.Arrays.asList(rows.map { case (id, t) => Row(id, t) }: _*), nullableSchema).repartition(3)
+      val bad = for {
+        t <- Seq(0.3, 0.8, 1.0)
+        Seq(driver, distributed) = Seq(defaultBroadcastThreshold, "-1").map { bound =>
+          withBroadcastThreshold(bound) {
+            val pairs = Dedup.ngramJaccardPairs(docs, n = 4, threshold = t)
+            (inDriver(pairs), pairs.schema, triples(pairs).groupBy(identity).map { case (p, c) => p -> c.size })
+          }
+        }
+        if !driver._1 || distributed._1 || driver._2 != distributed._2 || driver._3 != distributed._3
+      } yield s"t=$t: driver path $driver, distributed path $distributed"
+      Prop(bad.isEmpty) :| bad.take(1).mkString("\n")
+    }
+    val res = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(10).withInitialSeed(Seed(20261021L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    assert(seen == Set("null doc_id", "null text", "empty text", "repeated doc_id", "identical rows"),
+      s"the fixed seed generated only $seen")
+  }
+
+  test("the driver path takes sets of at most threshold bytes and at most threshold / 24 candidates") {
+    // Runs the search at broadcast threshold `bytes`: its pairs, the jobs it
+    // started, and whether its plan holds an exchange.
+    def run(rows: Seq[(Long, String)], bytes: Long): (Set[(Long, Long, Double)], Int, Boolean) =
+      withBroadcastThreshold(bytes.toString) {
+        var pairs: DataFrame = null
+        var got = Set.empty[(Long, Long, Double)]
+        val jobs = SparkTestBase.jobsStarted {
+          pairs = Dedup.ngramJaccardPairs(table(rows), n = 4, threshold = 0.5)
+          got = triples(pairs).toSet
+        }
+        val exchanges = new AdaptiveSparkPlanHelper {}.collect(pairs.queryExecution.executedPlan) {
+          case e: Exchange => e
+        }
+        (got, jobs, exchanges.nonEmpty)
+      }
+    // three docs of 5 shingles: 3 * (5 * 8 + 16) = 168 bytes of sets, and
+    // 4 prefix candidates, within 168 / 24 = 7
+    val near = Seq((0L, "x a b c d e f g"), (1L, "y a b c d e f g"), (2L, "z a b c d e f h"))
+    val setBytes = near.map(r => 8L * Dedup.shingleHashes(r._2, 4).length + 16).sum
+    assert(setBytes == 168)
+    assert(brute(near, 4, 0.5) == Set((0L, 1L, 0.6667)))
+    val (atBound, atBoundJobs, atBoundExchange) = run(near, setBytes)
+    assert(atBound == brute(near, 4, 0.5) && !atBoundExchange && atBoundJobs <= 3, s"$atBoundJobs jobs")
+    val (overBound, _, overBoundExchange) = run(near, setBytes - 1)
+    assert(overBound == brute(near, 4, 0.5) && overBoundExchange)
+    // ten one-shingle copies: 240 bytes of sets, but one shingle posts all
+    // ten prefixes, 45 candidate pairs, which need a threshold of 45 * 24
+    val copies = (0L until 10L).map(i => (i, "x"))
+    assert(brute(copies, 4, 0.5).size == 45)
+    val (fits, fitsJobs, fitsExchange) = run(copies, 45 * 24)
+    assert(fits == brute(copies, 4, 0.5) && !fitsExchange && fitsJobs <= 3, s"$fitsJobs jobs")
+    val (tooMany, _, tooManyExchange) = run(copies, 45 * 24 - 1)
+    assert(tooMany == brute(copies, 4, 0.5) && tooManyExchange)
   }
 }

@@ -6,6 +6,7 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.SparkTestBase.withBroadcastThreshold
 
 class DedupSpec extends AnyFunSuite {
   private implicit lazy val spark: org.apache.spark.sql.SparkSession = SparkTestBase.spark
@@ -245,19 +246,6 @@ class DedupSpec extends AnyFunSuite {
     (ids ++ Seq.fill(3)(pick(ids)), if (noPairs) Seq.empty else pairs)
   }
 
-  private val BroadcastThreshold = "spark.sql.autoBroadcastJoinThreshold"
-
-  /** Runs `f` with the broadcast threshold at `bytes`, the bound that
-    * selects [[Dedup.dupClusters]]' path: in memory up to bytes / 16 edges,
-    * the distributed loop above that or at -1.
-    */
-  private def withBroadcastThreshold[T](bytes: String)(f: => T): T = {
-    val prev = spark.conf.getOption(BroadcastThreshold)
-    spark.conf.set(BroadcastThreshold, bytes)
-    try f
-    finally prev.fold(spark.conf.unset(BroadcastThreshold))(spark.conf.set(BroadcastThreshold, _))
-  }
-
   test("dup clusters equal an in-memory union-find on 1 and 7 partitions (property)") {
     var sawNoPairs = false
     val prop = Prop.forAllNoShrink(ccCases) { case (docIds, pairs) =>
@@ -265,7 +253,7 @@ class DedupSpec extends AnyFunSuite {
       val expected = unionFindClusters(docIds, pairs)
       val bad = for {
         // the default threshold takes the in-memory path, -1 the loop
-        (path, threshold) <- Seq("in-memory" -> spark.conf.get(BroadcastThreshold), "distributed" -> "-1")
+        (path, threshold) <- Seq("in-memory" -> SparkTestBase.defaultBroadcastThreshold, "distributed" -> "-1")
         parts <- Seq(1, 7)
         got = withBroadcastThreshold(threshold) {
           Dedup.dupClusters(
