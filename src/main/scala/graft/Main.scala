@@ -27,11 +27,11 @@ import graft.job.{ExtractionJob, ParquetCommitStore}
   * }}}
   *
   * The commit layout (`num_groups`, the url-hash group count) is sized to
-  * the input: one group per 512 MB of scanned files
-  * (`ExtractionJob.numGroupsFor`), 64 when the input's size is unknown
-  * (`synth:`, `warc:`). The run records it in its lineage; a resumed run
-  * and `--status` read it back, and a `--groups` that contradicts it fails
-  * before anything is extracted or written.
+  * the input: one group per 512 MB of scanned files or of `synth:` rows
+  * at their estimated width (`ExtractionJob.numGroupsFor`), 64 when the
+  * input's size is unknown (`warc:`). The run records it in its lineage;
+  * a resumed run and `--status` read it back, and a `--groups` that
+  * contradicts it fails before anything is extracted or written.
   *
   * `--repartition-input` rebalances the input before extraction: one hash
   * shuffle on (url, warc_ts), `defaultParallelism` wide. It is for scans

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Range
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.functions._
@@ -86,7 +87,7 @@ object ExtractionJob {
     val TargetGroupBytes: Long = 512L * 1024 * 1024
 
     /** Groups when the input's size is unknown (a non-file scan such as
-      * `synth:`, or a scan without real statistics).
+      * `warc:`, or a scan without real statistics).
       */
     val UnknownSizeGroups: Int = 64
   }
@@ -100,19 +101,20 @@ object ExtractionJob {
   }
 
   /** The input's size from its optimized plan's statistics, when every leaf
-    * is a file or V2 scan and the estimate is real (below
-    * `spark.sql.defaultSizeInBytes`, which marks a source without stats).
-    * Reads file-index metadata only: starts no Spark job.
+    * is a file or V2 scan or a `Range` (whose row count is exact: a
+    * `synth:` input maps each id of one to a page) and the estimate is real
+    * (below `spark.sql.defaultSizeInBytes`, which marks a source without
+    * stats). Reads file-index metadata only: starts no Spark job.
     */
   private[job] def inputBytes(pages: DataFrame): Option[BigInt] = {
     val plan = pages.queryExecution.optimizedPlan
-    val fileScans = plan.collectLeaves().forall {
+    val sized = plan.collectLeaves().forall {
       case l: LogicalRelation => l.relation.isInstanceOf[HadoopFsRelation]
-      case _: DataSourceV2Relation | _: DataSourceV2ScanRelation => true
+      case _: DataSourceV2Relation | _: DataSourceV2ScanRelation | _: Range => true
       case _ => false
     }
     val size = plan.stats.sizeInBytes
-    if (fileScans && size < pages.sparkSession.sessionState.conf.defaultSizeInBytes) Some(size)
+    if (sized && size < pages.sparkSession.sessionState.conf.defaultSizeInBytes) Some(size)
     else None
   }
 

@@ -3,9 +3,12 @@ package graft.ops
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StructField, StructType}
 
 /** Corpus-scale deduplication operators over a `documents(doc_id, text, ...)`
   * table — the operations a training-data pipeline layers on top of
@@ -263,19 +266,21 @@ object Dedup {
     // corpus-common shingle (df 10^7-10^8 at web scale) would land its whole
     // posting list on a single spilling task; under partial aggregation it
     // shrinks to one row per map task.
-    val posts = sets.select(col("doc_id"), explode(col("shingles")).as("sh"))
+    val posts = sets.select(col("doc_id"), size(col("shingles")).as("len"), explode(col("shingles")).as("sh"))
     val dfTab = posts.groupBy(col("sh")).agg(count(lit(1)).as("df"))
     // A df-1 shingle is in no other document and can never make a
-    // candidate, so only shared shingles are collected per doc (by a per-doc
-    // aggregate, bounded by the document's own size — not a window;
-    // collect_list skips the nulls). They sort after the doc's df-1
-    // shingles, so of its |s| - ceil(t*|s|) + 1 prefix places they fill the
-    // last size(o) - ceil(t*|s|) + 1, if any.
-    val ordered = posts.join(dfTab, Seq("sh"))
+    // candidate, so only shared posts reach the per-doc aggregate (bounded
+    // by the document's own size — not a window), and a document without
+    // one drops out. Its df-1 shingles sort first, so of its
+    // |s| - ceil(t*|s|) + 1 prefix places the shared ones fill the last
+    // size(o) - ceil(t*|s|) + 1, if any. |s| is the shortest of the
+    // doc_id's sets that holds a shared post: with one row per doc_id its
+    // size; with several, the merged prefix then covers each row's own.
+    val ordered = posts.join(dfTab.filter(col("df") > 1), Seq("sh"))
       .groupBy(col("doc_id"))
       .agg(
-        count(lit(1)).as("len"),
-        sort_array(collect_list(when(col("df") > 1, struct(col("df"), col("sh"))))).as("o"))
+        min(col("len")).as("len"),
+        sort_array(collect_list(struct(col("df"), col("sh")))).as("o"))
     val sharedLen = size(col("o")) - ceil(lit(threshold - 1e-4) * col("len")) + 1
     val prefixes = ordered.select(col("doc_id"),
       explode(slice(col("o"), lit(1), greatest(lit(0), sharedLen).cast("int")).getField("sh")).as("sh"))
@@ -291,89 +296,99 @@ object Dedup {
     * (`ids(i)`, `sets(i)`), with its semantics:
     *  - df counts every post, null-`doc_id` rows included; a row with null
     *    shingles posts nothing.
-    *  - A doc_id's rows merge their posts into one prefix, as the per-doc
-    *    `groupBy` does; a null doc_id never pairs.
+    *  - A doc_id's rows merge their shared posts into one prefix, as the
+    *    per-doc `groupBy` does, sized by the shortest of its sets holding a
+    *    shared post; a null doc_id never pairs.
     *  - Candidates are distinct id pairs a < b meeting in a prefix, and each
     *    is verified once per pair of their rows, as the joins on `a_id` and
     *    `b_id` do, with Spark's `round` (HALF_UP on the double's decimal
     *    string).
-    * df comes from one sorted primitive array of every post, and a doc's
-    * ordered shared posts are single longs, df << 32 | rank of the shingle
-    * among the distinct ones (ranks order as the hashes do). Returns None
-    * before enumerating a candidate when the prefix self-join would emit
-    * more than `maxCandidates` pairs, the sum of k(k - 1) / 2 over its
-    * postings.
+    * Every post is packed with its row and the posts are sorted once by
+    * shingle ([[sortPosts]]): a shingle's posts are then one run, whose
+    * length is its df and whose index is the shingle's rank among the
+    * distinct ones (ranks order as the hashes do). Visiting the shared runs
+    * in (df, rank) order hands each doc its prefix postings in order, with
+    * no per-doc sort and no search. Returns None before enumerating a
+    * candidate when the prefix self-join would emit more than
+    * `maxCandidates` pairs, the sum of k(k - 1) / 2 over its postings.
     */
   private def prefixJoinInMemory(
       ids: Array[java.lang.Long],
       sets: Array[Array[Long]],
       threshold: Double,
       maxCandidates: Long): Option[Seq[Row]] = {
-    val present = sets.filter(_ != null)
-    val keys = new Array[Long](present.map(_.length).sum)
+    val nPosts = sets.iterator.filter(_ != null).map(_.length).sum
+    val keys = new Array[Long](nPosts)
+    val postRow = new Array[Int](nPosts)
     var at = 0
-    for (s <- present) { System.arraycopy(s, 0, keys, at, s.length); at += s.length }
-    java.util.Arrays.sort(keys)
-    // compacted in place: keys(0 until nKeys) distinct, dfs(r) the count of keys(r)
-    val dfs = new Array[Int](keys.length)
-    var nKeys = 0
-    for (x <- keys) {
-      if (nKeys == 0 || keys(nKeys - 1) != x) { keys(nKeys) = x; nKeys += 1 }
-      dfs(nKeys - 1) += 1
+    for (r <- sets.indices if sets(r) != null) {
+      System.arraycopy(sets(r), 0, keys, at, sets(r).length)
+      java.util.Arrays.fill(postRow, at, at + sets(r).length, r)
+      at += sets(r).length
     }
-    def rank(sh: Long) = java.util.Arrays.binarySearch(keys, 0, nKeys, sh)
+    sortPosts(keys, postRow)
+    // run r (rank r) is posts runStart(r) until runStart(r + 1)
+    val runStart = new Array[Int](nPosts + 1)
+    var nRuns = 0
+    for (i <- 0 until nPosts if i == 0 || keys(i) != keys(i - 1)) { runStart(nRuns) = i; nRuns += 1 }
+    runStart(nRuns) = nPosts
 
     // rows with a doc_id in id order; group g is rows(starts(g) until starts(g + 1))
     val rows = ids.indices.filter(ids(_) != null).sortBy(ids(_).longValue).toArray
     val starts = (rows.indices.filter(i => i == 0 || ids(rows(i)) != ids(rows(i - 1))) :+ rows.length).toArray
+    val nGroups = starts.length - 1
+    val groupOf = Array.fill(ids.length)(-1)
+    for (g <- 0 until nGroups; i <- starts(g) until starts(g + 1)) groupOf(rows(i)) = g
     def groupSets(g: Int) = (starts(g) until starts(g + 1)).map(i => sets(rows(i))).filter(_ != null)
 
-    // prefix postings, rank << 32 | group: sorted, each rank's groups ascend
-    val postings = new Array[Long](keys.length)
+    // per group: its shared posts and the shortest of its sets holding one;
+    // the shared runs, df << 32 | rank, sorted
+    val shared = new Array[Int](nGroups)
+    val len = Array.fill(nGroups)(Int.MaxValue)
+    val sharedRuns = new Array[Long](nRuns)
+    var nShared = 0
+    for (r <- 0 until nRuns) {
+      val df = runStart(r + 1) - runStart(r)
+      if (df > 1) {
+        sharedRuns(nShared) = df.toLong << 32 | r
+        nShared += 1
+        for (p <- runStart(r) until runStart(r + 1)) {
+          val g = groupOf(postRow(p))
+          if (g >= 0) { shared(g) += 1; len(g) = math.min(len(g), sets(postRow(p)).length) }
+        }
+      }
+    }
+    java.util.Arrays.sort(sharedRuns, 0, nShared)
+    val room = Array.tabulate(nGroups) { g =>
+      if (shared(g) == 0) 0
+      else math.min(shared(g).toLong, math.max(0L, shared(g) - math.ceil((threshold - 1e-4) * len(g)).toLong + 1)).toInt
+    }
+
+    // prefix postings, grouped by shingle: postings(postingStart(s) until
+    // postingStart(s + 1)) are the groups whose prefix holds shared run s
+    val postings = new Array[Int](nPosts)
+    val postingStart = new Array[Int](nShared + 1)
     var nPostings = 0
-    for (g <- 0 until starts.length - 1) {
-      val own = groupSets(g)
-      val len = own.map(_.length).sum
-      val shared = new Array[Long](len)
-      var m = 0
-      for (s <- own; sh <- s) {
-        val r = rank(sh)
-        if (dfs(r) > 1) { shared(m) = dfs(r).toLong << 32 | r; m += 1 }
-      }
-      java.util.Arrays.sort(shared, 0, m)
-      val prefix = math.min(m.toLong, math.max(0L, m - math.ceil((threshold - 1e-4) * len).toLong + 1)).toInt
-      for (i <- 0 until prefix) {
-        postings(nPostings) = (shared(i) & 0xffffffffL) << 32 | g
-        nPostings += 1
-      }
-    }
-    java.util.Arrays.sort(postings, 0, nPostings)
-    def runEnd(i: Int) = {
-      var j = i + 1
-      while (j < nPostings && postings(j) >>> 32 == postings(i) >>> 32) j += 1
-      j
-    }
     var emitted = 0L
-    var i = 0
-    while (i < nPostings && emitted <= maxCandidates) {
-      val j = runEnd(i)
-      emitted += (j - i).toLong * (j - i - 1) / 2
-      i = j
+    for (s <- 0 until nShared) {
+      postingStart(s) = nPostings
+      val r = sharedRuns(s).toInt
+      for (p <- runStart(r) until runStart(r + 1)) {
+        val g = groupOf(postRow(p))
+        if (g >= 0 && room(g) > 0) { room(g) -= 1; postings(nPostings) = g; nPostings += 1 }
+      }
+      val k = (nPostings - postingStart(s)).toLong
+      emitted += k * (k - 1) / 2
+      if (emitted > maxCandidates) return None
     }
-    if (emitted > maxCandidates) return None
+    postingStart(nShared) = nPostings
 
     // candidates ga << 32 | gb, ga < gb, so doc ids a < b
     val candidates = new Array[Long](emitted.toInt)
     var nCandidates = 0
-    i = 0
-    while (i < nPostings) {
-      val j = runEnd(i)
-      for (x <- i until j; y <- x + 1 until j) {
-        val ga = postings(x).toInt
-        val gb = postings(y).toInt
-        if (ga != gb) { candidates(nCandidates) = ga.toLong << 32 | gb; nCandidates += 1 }
-      }
-      i = j
+    for (s <- 0 until nShared; x <- postingStart(s) until postingStart(s + 1); y <- x + 1 until postingStart(s + 1)) {
+      val (ga, gb) = (math.min(postings(x), postings(y)), math.max(postings(x), postings(y)))
+      if (ga != gb) { candidates(nCandidates) = ga.toLong << 32 | gb; nCandidates += 1 }
     }
     java.util.Arrays.sort(candidates, 0, nCandidates)
     val out = scala.collection.mutable.ArrayBuffer.empty[Row]
@@ -388,6 +403,37 @@ object Dedup {
       }
     }
     Some(out.toSeq)
+  }
+
+  /** Sorts the posts `keys` ascending (as signed longs) and permutes their
+    * rows `rows` alongside: an LSD radix sort, 16 bits a pass, stable, in
+    * linear time.
+    */
+  private def sortPosts(keys: Array[Long], rows: Array[Int]): Unit = {
+    val n = keys.length
+    var (k, r) = (keys, rows)
+    var (k2, r2) = (new Array[Long](n), new Array[Int](n))
+    val count = new Array[Int]((1 << 16) + 1)
+    for (shift <- 0 until 64 by 16) {
+      // the sign bit flipped, unsigned digit order is signed key order
+      def digit(x: Long) = (((x ^ Long.MinValue) >>> shift) & 0xffff).toInt
+      java.util.Arrays.fill(count, 0)
+      var i = 0
+      while (i < n) { count(digit(k(i)) + 1) += 1; i += 1 }
+      var d = 0
+      while (d < (1 << 16)) { count(d + 1) += count(d); d += 1 }
+      i = 0
+      while (i < n) {
+        val to = digit(k(i))
+        k2(count(to)) = k(i)
+        r2(count(to)) = r(i)
+        count(to) += 1
+        i += 1
+      }
+      val (tk, tr) = (k, r)
+      k = k2; r = r2; k2 = tk; r2 = tr
+    }
+    // four passes: the sorted posts are back in `keys` and `rows`
   }
 
   /** Common elements of two ascending arrays of distinct longs. */
@@ -578,71 +624,92 @@ object Dedup {
     * after candidate generation, so each near-dup component keeps exactly
     * one survivor (`doc_id == cluster_id`). Only pairs whose two ends are
     * both doc ids are edges: an endpoint missing from `docs` joins nothing,
-    * and a doc_id listed twice keeps both rows.
+    * a doc_id listed twice keeps both rows, and a null doc_id is labelled
+    * (null, null).
     *
-    * The pairs are normalized once (larger -> smaller, no self pairs,
-    * distinct, both ends docs) and checkpointed via [[truncateLineage]]
-    * (reliable when a checkpoint dir is set). Then one of two paths runs,
-    * chosen by the size of that edge set, the way a broadcast join is
-    * chosen: with k = `spark.sql.autoBroadcastJoinThreshold` / 16 bytes
-    * (two longs per edge) of `docs`' session, one bounded
-    * `limit(k + 1).collect()` reads the edges.
-    *  - At most k edges: union-find on the driver ([[unionFindRoots]]), and
-    *    the labels of the non-root nodes (never more rows than edges) come
-    *    back as a local relation. A few jobs in all, where each round of
-    *    the loop below costs several.
-    *  - More than k edges, or a threshold <= 0: alternating large-star /
-    *    small-star contraction (Kiveris et al., "Connected Components in
-    *    MapReduce and Beyond", SoCC 2014), O(log^2 n) rounds on ANY graph
-    *    shape, so a long chain of near-dup revisions converges in a few
-    *    rounds where min-label propagation would need one round per unit
-    *    of diameter (a 1000-node chain converges within 25 rounds —
-    *    tested). Each round's edge set is truncated via [[truncateLineage]]:
-    *    without lineage truncation every round's plan embeds all previous
-    *    rounds. Convergence = the materialized edge set is a min-rooted star
-    *    forest ([[isStarForest]]), the contraction's fixpoint — an exact
-    *    check, never a hash heuristic: a false convergence would silently
-    *    emit multiple survivors per component. A graph that is not a star
-    *    forest after `maxIters` rounds throws.
+    * One of two paths runs, chosen by input size the way a broadcast join
+    * is chosen. With k = `spark.sql.autoBroadcastJoinThreshold` of `docs`'
+    * session / 16 bytes (two longs a row), one bounded read
+    * ([[boundedRead]]) takes the doc id rows and the `(a_id, b_id)` pair
+    * rows together.
+    *  - At most k rows in all (and long ids): union-find on the driver
+    *    ([[componentLabels]]), and every doc row's label comes back as a
+    *    local relation. One Spark job in all, where each round of the loop
+    *    below costs several.
+    *  - More than k rows, or a threshold <= 0: the pairs are normalized once
+    *    (larger -> smaller, no self pairs, distinct, both ends docs) and
+    *    checkpointed via [[truncateLineage]] (reliable when a checkpoint dir
+    *    is set), then alternating large-star / small-star contraction
+    *    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    *    SoCC 2014), O(log^2 n) rounds on ANY graph shape, so a long chain
+    *    of near-dup revisions converges in a few rounds where min-label
+    *    propagation would need one round per unit of diameter (a 1000-node
+    *    chain converges within 25 rounds — tested). Each round's edge set
+    *    is truncated via [[truncateLineage]]: without lineage truncation
+    *    every round's plan embeds all previous rounds. Convergence = the
+    *    materialized edge set is a min-rooted star forest
+    *    ([[isStarForest]]), the contraction's fixpoint — an exact check,
+    *    never a hash heuristic: a false convergence would silently emit
+    *    multiple survivors per component. A graph that is not a star forest
+    *    after `maxIters` rounds throws. The labels are the doc ids
+    *    left-joined to the contracted roots.
     */
   def dupClusters(docs: DataFrame, pairs: DataFrame, maxIters: Int = 50)(
       implicit spark: SparkSession): DataFrame = {
     val ids = docs.select(col("doc_id"))
-    val edges = truncateLineage(
-      pairs.select(greatest(col("a_id"), col("b_id")).as("u"),
-          least(col("a_id"), col("b_id")).as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-        .join(ids.withColumnRenamed("doc_id", "u"), Seq("u"), "left_semi")
-        .join(ids.withColumnRenamed("doc_id", "v"), Seq("v"), "left_semi")
-        .select(col("u"), col("v")))
+    val ends = pairs.select(col("a_id"), col("b_id"))
     val session = docs.sparkSession
     val threshold = session.sessionState.conf.autoBroadcastJoinThreshold
-    // limit takes an Int: a threshold beyond 32 GiB is capped there
-    val k = math.min(threshold / 16, Int.MaxValue - 1L).toInt
-    val small =
-      if (threshold <= 0) None
-      else Some(edges.limit(k + 1).collect()).filter(_.length <= k)
-    // (doc_id, root) for every node that is not its component's minimum
-    val roots = small match {
-      case Some(rows) =>
-        session.createDataFrame(unionFindRoots(rows.map(_.getLong(0)), rows.map(_.getLong(1))))
-          .toDF("doc_id", "root")
-      case None => starContraction(edges, maxIters)
+    val inMemory =
+      if (threshold <= 0 || (ids.schema ++ ends.schema).exists(_.dataType != LongType)) None
+      else boundedRead(
+        ids.select(col("doc_id"), lit(null).cast(LongType), lit(true).as("is_doc")),
+        ends.select(col("a_id"), col("b_id"), lit(false)),
+        threshold / 16).map(componentLabels)
+    inMemory match {
+      case Some(labels) =>
+        val docId = ids.schema("doc_id")
+        session.createDataFrame(labels.asJava,
+          StructType(Seq(docId, StructField("cluster_id", LongType, docId.nullable))))
+      case None =>
+        val edges = truncateLineage(
+          ends.select(greatest(col("a_id"), col("b_id")).as("u"),
+              least(col("a_id"), col("b_id")).as("v"))
+            .filter(col("u") =!= col("v"))
+            .distinct()
+            .join(ids.withColumnRenamed("doc_id", "u"), Seq("u"), "left_semi")
+            .join(ids.withColumnRenamed("doc_id", "v"), Seq("v"), "left_semi")
+            .select(col("u"), col("v")))
+        ids.join(starContraction(edges, maxIters), Seq("doc_id"), "left")
+          .select(col("doc_id"), coalesce(col("root"), col("doc_id")).as("cluster_id"))
     }
-    ids.join(roots, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("root"), col("doc_id")).as("cluster_id"))
   }
 
-  /** In-memory connected components of the edges (us(i), vs(i)): union-find
-    * over the sorted distinct node ids with path compression, always
-    * linking the larger root under the smaller, so every root is its
-    * component's minimum. Returns (node, root) for the non-root nodes only:
-    * each is the loser of one successful union, so there are never more of
-    * them than edges.
+  /** The rows of `a` then `b` (one schema), when there are at most
+    * `maxRows` of them: one Spark job, whose single task stops reading at
+    * `maxRows` + 1 rows, so an input far over the bound costs no more than
+    * the bound to reject. An input planned with exchanges runs its last
+    * stage in that task, so callers pass materialized inputs (the pair
+    * searches return local relations under the bound). The size check of
+    * the driver paths of [[dupClusters]] and [[keepBestInCluster]].
     */
-  private def unionFindRoots(us: Array[Long], vs: Array[Long]): Seq[(Long, Long)] = {
-    val all = us ++ vs
+  private def boundedRead(a: DataFrame, b: DataFrame, maxRows: Long): Option[Array[Row]] = {
+    // limit takes an Int: a bound beyond Int.MaxValue - 1 rows is capped there
+    val k = math.min(maxRows, Int.MaxValue - 1L).toInt
+    Some(a.union(b).coalesce(1).limit(k + 1).collect()).filter(_.length <= k)
+  }
+
+  /** In-memory connected components of [[dupClusters]]' collected rows:
+    * `(doc_id, null, true)` per doc row and `(a_id, b_id, false)` per pair
+    * row. Union-find over the sorted distinct doc ids with path
+    * compression, always linking the larger root under the smaller, so
+    * every root is its component's minimum; a pair with a null end or an
+    * end that is not a doc is no edge. Returns `(doc_id, cluster_id)` per
+    * doc row, in row order.
+    */
+  private def componentLabels(rows: Array[Row]): Seq[Row] = {
+    val (docRows, pairRows) = rows.partition(_.getBoolean(2))
+    val all = docRows.filterNot(_.isNullAt(0)).map(_.getLong(0))
     java.util.Arrays.sort(all)
     var n = 0
     for (x <- all) if (n == 0 || all(n - 1) != x) { all(n) = x; n += 1 }
@@ -657,14 +724,17 @@ object Dedup {
       r
     }
     def index(x: Long) = java.util.Arrays.binarySearch(nodes, x)
-    for (e <- us.indices) {
-      val a = find(index(us(e)))
-      val b = find(index(vs(e)))
-      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    for (p <- pairRows if !p.isNullAt(0) && !p.isNullAt(1)) {
+      val (a, b) = (index(p.getLong(0)), index(p.getLong(1)))
+      if (a >= 0 && b >= 0) {
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
     }
-    (0 until n).iterator.map(i => i -> find(i)).collect {
-      case (i, r) if r != i => (nodes(i), nodes(r))
-    }.toVector
+    docRows.toSeq.map { r =>
+      if (r.isNullAt(0)) Row(null, null)
+      else Row(r.getLong(0), nodes(find(index(r.getLong(0)))))
+    }
   }
 
   /** The distributed path of [[dupClusters]]: contracts the normalized edge
@@ -753,28 +823,61 @@ object Dedup {
     * A doc with a MISSING or null quality is still returned (quality
     * null) and never beats a scored member; a cluster whose members are
     * ALL unscored falls back to the min-doc_id canonical — no document is
-    * ever silently dropped from the annotation.
+    * ever silently dropped from the annotation. Quality compares by
+    * Spark's ordering (NaN largest, −0.0 equal to 0.0). A label row with a
+    * null cluster_id is dropped; a doc_id listed more than once, in the
+    * labels or in `quality`, gives a row per match of the `doc_id` left
+    * join, and a null doc_id is annotated with a null `keep`.
     *
-    * At scale: the arg-max runs as TWO all-primitive hash-aggregable
-    * `groupBy(cluster_id)` passes — max quality per cluster, then min
-    * doc_id among the max-quality members — never a `max_by`/struct
-    * aggregate (SortAggregate) and never a per-cluster window, so a
-    * mega-cluster (one boilerplate page duplicated 10^6 times) shrinks to
-    * one row per map task in both passes instead of pinning a single
-    * window task. Same election discipline as [[cutDupSpansKeepFirst]];
-    * like there, the labels⨝quality join is materialized once for its
-    * three consumers instead of re-running the quality subtree per pass.
+    * One of two paths runs, chosen by input size the way a broadcast join
+    * is chosen. With k = `spark.sql.autoBroadcastJoinThreshold` of
+    * `labels`' session / 32 bytes (doc_id, cluster_id and quality a row),
+    * one bounded read ([[boundedRead]]) takes the label and quality rows
+    * together. At most k of them, with long ids, an orderable quality and
+    * at most k joined rows, elect on the driver ([[electInMemory]]) and
+    * come back as a local relation with the distributed plan's schema: one
+    * Spark job where the plan below runs about ten.
+    *
+    * Above the bound, or at a threshold <= 0, the arg-max runs as TWO
+    * all-primitive hash-aggregable `groupBy(cluster_id)` passes — max
+    * quality per cluster, then min doc_id among the max-quality members —
+    * never a `max_by`/struct aggregate (SortAggregate) and never a
+    * per-cluster window, so a mega-cluster (one boilerplate page
+    * duplicated 10^6 times) shrinks to one row per map task in both passes
+    * instead of pinning a single window task. Same election discipline as
+    * [[cutDupSpansKeepFirst]]; like there, the labels⨝quality join is
+    * materialized once for its three consumers instead of re-running the
+    * quality subtree per pass.
     */
   def keepBestInCluster(
       labels: DataFrame,
       quality: DataFrame,
       qualityCol: String = "quality"): DataFrame = {
-    val j = truncateLineage(
-      labels
-        .select(col("doc_id"), col("cluster_id"))
-        .join(
-          quality.select(col("doc_id"), col(qualityCol).as("q")),
-          Seq("doc_id"), "left"))
+    val members = labels.select(col("doc_id"), col("cluster_id"))
+    val scores = quality.select(col("doc_id"), col(qualityCol).as("q"))
+    val session = labels.sparkSession
+    val threshold = session.sessionState.conf.autoBroadcastJoinThreshold
+    val qType = scores.schema("q").dataType
+    val maxRows = threshold / 32
+    val inMemory =
+      if (threshold <= 0 || !RowOrdering.isOrderable(qType) ||
+          (members.schema :+ scores.schema("doc_id")).exists(_.dataType != LongType)) None
+      else boundedRead(
+        members.select(col("doc_id"), col("cluster_id"), lit(null).cast(qType), lit(true).as("is_label")),
+        scores.select(col("doc_id"), lit(null).cast(LongType), col("q"), lit(false)),
+        maxRows).flatMap(electInMemory(_, qType, maxRows))
+    inMemory match {
+      case Some(rows) =>
+        session.createDataFrame(rows.asJava, StructType(members.schema.fields ++ Seq(
+          StructField(qualityCol, qType), StructField("keep", BooleanType))))
+      case None => election(truncateLineage(members.join(scores, Seq("doc_id"), "left")), qualityCol)
+    }
+  }
+
+  /** The distributed election of [[keepBestInCluster]] over the
+    * `(doc_id, cluster_id, q)` join of the labels and the quality rows.
+    */
+  private def election(j: DataFrame, qualityCol: String): DataFrame = {
     // max() ignores nulls: best_q is null only for all-unscored clusters,
     // where the null-safe <=> match admits every member and the min-doc_id
     // pass elects the fallback canonical
@@ -790,6 +893,47 @@ object Dedup {
         col("cluster_id"),
         col("q").as(qualityCol),
         (col("doc_id") === col("best_id")).as("keep"))
+  }
+
+  /** [[election]] on the driver over [[keepBestInCluster]]'s collected
+    * rows: `(doc_id, cluster_id, null, true)` per label row and
+    * `(doc_id, null, q, false)` per quality row. The rows are left-joined
+    * on doc_id as the plan joins them (a null doc_id matches nothing), and
+    * each cluster elects its max quality by Spark's ordering of `qType`
+    * (the one `max` and `<=>` use), null never above a value, then the
+    * min non-null doc_id among the members at that quality. Returns None
+    * when the join has more than `maxRows` rows.
+    */
+  private def electInMemory(rows: Array[Row], qType: DataType, maxRows: Long): Option[Seq[Row]] = {
+    val (labelRows, qualityRows) = rows.partition(_.getBoolean(3))
+    val qualityOf = qualityRows.filterNot(_.isNullAt(0)).groupBy(_.getLong(0))
+    val joined = labelRows.toSeq.flatMap { r =>
+      val matches = if (r.isNullAt(0)) None else qualityOf.get(r.getLong(0))
+      matches.fold(Seq(Row(r.get(0), r.get(1), null)))(_.toSeq.map(q => Row(r.get(0), r.get(1), q.get(2))))
+    }
+    if (joined.length > maxRows) return None
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(qType)
+    val ordering = TypeUtils.getInterpretedOrdering(qType)
+    // cluster_id -> (best quality as a Catalyst value or null, min doc_id at it or null)
+    val best = scala.collection.mutable.HashMap.empty[Long, (Any, java.lang.Long)]
+    for (r <- joined if !r.isNullAt(1)) {
+      val q = if (r.isNullAt(2)) null else toCatalyst(r.get(2))
+      val id = if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0))
+      best.get(r.getLong(1)) match {
+        case None => best(r.getLong(1)) = (q, id)
+        case Some((bestQ, bestId)) =>
+          val cmp =
+            if (q == null || bestQ == null) (q != null).compare(bestQ != null)
+            else ordering.compare(q, bestQ)
+          if (cmp > 0 || (cmp == 0 && id != null && (bestId == null || id < bestId)))
+            best(r.getLong(1)) = (q, id)
+      }
+    }
+    Some(joined.filter(!_.isNullAt(1)).map { r =>
+      val bestId = best(r.getLong(1))._2
+      val keep = if (r.isNullAt(0) || bestId == null) null else java.lang.Boolean.valueOf(r.getLong(0) == bestId.longValue)
+      Row(r.get(0), r.get(1), r.get(2), keep)
+    })
   }
 
   /** Cross-corpus contamination (train/test decontamination): for every doc

@@ -1,6 +1,6 @@
 package graft.tools
 
-/** Prints the formatted physical plan of each named query (default: seven
+/** Prints the formatted physical plan of each named query (default: eight
   * representative ones) to stdout, to check pushdown, broadcast and codegen
   * properties. Reads `SPARK_GRAFT_SF_DIR` (default sf0.01) and
   * `SPARK_GRAFT_CPUS` (default 4); set them as for `graft.Bench` to see the
@@ -15,7 +15,7 @@ object PlanCheck {
     val spark = LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else Seq(
-      "q_agg_filter", "q_join_broadcast", "q_dedup_ngram", "q_ann_brute",
+      "q_agg_filter", "q_join_broadcast", "q_dedup_ngram", "q_dedup_keep_best", "q_ann_brute",
       "q_quality_score", "q_dedup_simhash_pairs", "q_gopher_filter")
     names.foreach { n =>
       println(s"\n================ $n ================")

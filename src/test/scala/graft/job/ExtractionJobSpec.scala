@@ -478,14 +478,17 @@ class ExtractionJobSpec extends AnyFunSuite {
     val sized = ExtractionJob.JobConfig()
     val parquet = spark.read.parquet(dir)
     val synth = CorpusGen.pages(spark, 200).toDF()
+    val local = spark.createDataFrame(Seq(("http://a", 1))).toDF("url", "n")
     // the plan-statistics read must not run the scan or any other job
     var got = Seq.empty[Any]
     val jobs = jobsStarted {
       got = Seq(inputBytes(parquet), numGroupsFor(parquet, sized), numGroupsFor(synth, sized),
-        numGroupsFor(parquet, sized.copy(numGroups = 5)))
+        numGroupsFor(local, sized), numGroupsFor(parquet, sized.copy(numGroups = 5)))
     }
     assert(jobs == 0)
-    assert(got == Seq(Some(BigInt(fileBytes)), 1, 64, 5))
+    // a range-generated (synth:) input is sized from its row count; a local
+    // relation is not a sized leaf and takes the unknown-size layout
+    assert(got == Seq(Some(BigInt(fileBytes)), 1, 1, 64, 5))
     // the scan's statistics scale the count: 2.5 targets of input -> 3 groups
     withConf("spark.sql.sources.fileCompressionFactor" -> (2.5 * target.toDouble / fileBytes).toString) {
       assert(numGroupsFor(spark.read.parquet(dir), sized) == 3)
@@ -495,6 +498,32 @@ class ExtractionJobSpec extends AnyFunSuite {
       assert(inputBytes(spark.read.parquet(dir)).isEmpty)
       assert(numGroupsFor(spark.read.parquet(dir), sized) == 64)
     }
+  }
+
+  test("a synth: input is sized from its exact row count without a Spark job, and commits 1 group in 1 batch") {
+    // the plan `Main --input synth:300` runs: a Range leaf mapped to pages
+    val synth = CorpusGen.pages(spark, 300).toDF()
+    val cfg = ExtractionJob.JobConfig()
+    var groups = 0
+    assert(jobsStarted { groups = ExtractionJob.numGroupsFor(synth, cfg) } == 0)
+    assert(groups == 1)
+    val out = Files.createTempDirectory("graft-synth").toString
+    val parquet = new ParquetCommitStore(out)
+    var batches = 0
+    val counting = new CommitStore {
+      override def committedGroups()(implicit s: SparkSession): Set[Int] = parquet.committedGroups()(s)
+      override def commitBatch(
+          results: Dataset[ExtractionJob.ResultRow],
+          lineageRows: Seq[Lineage],
+          batch: Seq[Int])(implicit s: SparkSession): Unit = {
+        parquet.commitBatch(results, lineageRows, batch)(s)
+        batches += 1
+      }
+    }
+    var info: Option[ExtractionJob.RunInfo] = None
+    val lin = ExtractionJob.runCheckpointed(synth, cfg, counting, i => info = Some(i))
+    assert(info.map(_.numGroups).contains(1) && batches == 1)
+    assert(lin.map(_.commit_group).distinct == Seq(0) && lin.map(_.doc_count).sum == 300)
   }
 
   test("a crash between batches resumes onto the recorded layout, not a re-derived one") {

@@ -160,6 +160,29 @@ class DedupSkewSpec extends AnyFunSuite {
     } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
+  test("ngramJaccardPairs: the distributed per-doc prefix aggregate reads only shared posts") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, CollectList, Partial}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    // The 700 mass copies post 7 shingles each, all shared; the 100 unique
+    // docs post 6 each, all df 1. Only the 4,900 shared posts may reach the
+    // collect_list, not all 5,500.
+    withBroadcastThreshold("-1") {
+      val pairs = Dedup.ngramJaccardPairs(skewed, n = 4, threshold = 0.8)
+      assert(pairs.collect().length == 700 * 699 / 2)
+      def rowsInto(p: SparkPlan): Long =
+        p.metrics.get("numOutputRows").fold(rowsInto(p.children.head))(_.value)
+      val inputs = new AdaptiveSparkPlanHelper {}.collect(pairs.queryExecution.executedPlan) {
+        case a: ObjectHashAggregateExec if a.aggregateExpressions.exists {
+          case AggregateExpression(_: CollectList, Partial, _, _, _) => true
+          case _ => false
+        } => rowsInto(a.child)
+      }
+      assert(inputs.nonEmpty && inputs.forall(_ == 700L * 7), s"rows into the per-doc aggregate: $inputs")
+    }
+  }
+
   test("passageDupStats: cross-doc df is a partial-aggregated groupBy with exchange reuse") {
     val stats = Dedup.passageDupStats(skewed, n = 4)
     noWindow(stats)

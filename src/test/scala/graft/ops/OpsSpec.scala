@@ -1,12 +1,17 @@
 package graft.ops
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
-import graft.SparkTestBase.withBroadcastThreshold
+import graft.SparkTestBase.{defaultBroadcastThreshold, jobsStarted, withBroadcastThreshold}
 
 class DedupSpec extends AnyFunSuite {
   private implicit lazy val spark: org.apache.spark.sql.SparkSession = SparkTestBase.spark
@@ -223,10 +228,12 @@ class DedupSpec extends AnyFunSuite {
   // doc rows (ids may repeat) and (a_id, b_id) pairs: a sparse random part,
   // a chain in id order, a chain in shuffled order, a star whose center is
   // not its minimum, a clique, bridges through ids that are not docs,
-  // reversed, duplicated and self pairs, duplicated doc rows; or no pairs
-  private val ccCases: Gen[(Seq[Long], Seq[(Long, Long)])] = for {
+  // reversed, duplicated and self pairs, duplicated doc rows; or no pairs;
+  // and 0-2 doc rows with a null doc_id
+  private val ccCases: Gen[(Seq[Long], Seq[(Long, Long)], Int)] = for {
     sizes <- Gen.listOfN(5, Gen.choose(2, 12))
     noPairs <- Gen.frequency(1 -> true, 4 -> false)
+    nullDocs <- Gen.choose(0, 2)
     seed <- Gen.long
   } yield {
     val rnd = new scala.util.Random(seed)
@@ -243,23 +250,34 @@ class DedupSpec extends AnyFunSuite {
       absent.flatMap(x => Seq((x, pick(ids)), (pick(ids), x)))
     val pairs = base.map(e => if (rnd.nextBoolean()) e.swap else e) ++
       base.filter(_ => rnd.nextInt(4) == 0) ++ Seq.fill(3)(pick(ids)).map(x => (x, x))
-    (ids ++ Seq.fill(3)(pick(ids)), if (noPairs) Seq.empty else pairs)
+    (ids ++ Seq.fill(3)(pick(ids)), if (noPairs) Seq.empty else pairs, nullDocs)
   }
+
+  private val nullableDocs = StructType(Seq(
+    StructField("doc_id", LongType, nullable = true),
+    StructField("text", StringType, nullable = true)))
+
+  private def optionalLong(r: Row, i: Int): Option[Long] = if (r.isNullAt(i)) None else Some(r.getLong(i))
 
   test("dup clusters equal an in-memory union-find on 1 and 7 partitions (property)") {
     var sawNoPairs = false
-    val prop = Prop.forAllNoShrink(ccCases) { case (docIds, pairs) =>
+    var sawNullDoc = false
+    val prop = Prop.forAllNoShrink(ccCases) { case (docIds, pairs, nullDocs) =>
       sawNoPairs ||= pairs.isEmpty
-      val expected = unionFindClusters(docIds, pairs)
+      sawNullDoc ||= nullDocs > 0
+      // a null doc_id row is labelled (null, null)
+      val expected = (unionFindClusters(docIds, pairs).map { case (d, c) => (Option(d), Option(c)) } ++
+        Seq.fill(nullDocs)((None, None))).sorted
+      val docRows = docIds.map(i => Row(i, s"t$i")) ++ Seq.fill(nullDocs)(Row(null, "no id"))
       val bad = for {
         // the default threshold takes the in-memory path, -1 the loop
-        (path, threshold) <- Seq("in-memory" -> SparkTestBase.defaultBroadcastThreshold, "distributed" -> "-1")
+        (path, threshold) <- Seq("in-memory" -> defaultBroadcastThreshold, "distributed" -> "-1")
         parts <- Seq(1, 7)
         got = withBroadcastThreshold(threshold) {
           Dedup.dupClusters(
-              docIds.map(i => (i, s"t$i")).toDF("doc_id", "text").repartition(parts),
+              spark.createDataFrame(java.util.Arrays.asList(docRows: _*), nullableDocs).repartition(parts),
               pairs.toDF("a_id", "b_id").repartition(parts))
-            .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+            .collect().map(r => optionalLong(r, 0) -> optionalLong(r, 1)).toSeq.sorted
         }
         if got != expected
       } yield s"$path, $parts partitions: expected $expected got $got"
@@ -269,6 +287,7 @@ class DedupSpec extends AnyFunSuite {
       Test.Parameters.default.withMinSuccessfulTests(8).withInitialSeed(Seed(20261019L)), prop)
     assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
     assert(sawNoPairs, "the fixed seed must generate a case with no pairs")
+    assert(sawNullDoc, "the fixed seed must generate a case with a null doc_id")
   }
 
   test("contamination: train/test n-gram overlap with planted cases") {
@@ -307,25 +326,33 @@ class DedupSpec extends AnyFunSuite {
     assert(r.size == 1000 && r.values.toSet == Set(0L))
   }
 
-  test("dup clusters: edge sets up to threshold / 16 finish in memory, larger ones run the loop") {
-    // 48 bytes = 3 edges of two longs. A chain 0-1-2-3 has 3 edges; adding
-    // the chord 0-2 makes 4 and the same one component.
+  /** True when `df`'s plan is a driver path's local relation with no exchange. */
+  private def onDriver(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation] &&
+      new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) { case e: Exchange => e }.isEmpty
+
+  test("dup clusters: doc and pair rows up to threshold / 16 finish in memory, more run the loop") {
+    // 6 doc rows and the 3 pairs of the chain 0-1-2-3 are 9 rows of two
+    // longs, 144 bytes; the chord 0-2 makes 160 bytes and the same one
+    // component
     val nodes = (0L to 5L).map(i => (i, s"t$i")).toDF("doc_id", "text")
     val chain = Seq((0L, 1L), (1L, 2L), (2L, 3L))
     val expected = Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L, 4L -> 4L, 5L -> 5L)
-    withBroadcastThreshold("48") {
-      def run(pairs: Seq[(Long, Long)]): (Map[Long, Long], Int) = {
-        var labels = Map.empty[Long, Long]
-        val jobs = SparkTestBase.jobsStarted {
+    withBroadcastThreshold("144") {
+      def run(pairs: Seq[(Long, Long)]): (Map[Long, Long], Int, Boolean) = {
+        var labels: DataFrame = null
+        var got = Map.empty[Long, Long]
+        val jobs = jobsStarted {
           labels = Dedup.dupClusters(nodes, pairs.toDF("a_id", "b_id"))
-            .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+          got = labels.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
         }
-        (labels, jobs)
+        (got, jobs, onDriver(labels))
       }
-      val (inMemory, inMemoryJobs) = run(chain)
-      val (loop, loopJobs) = run(chain :+ (0L -> 2L))
+      val (inMemory, inMemoryJobs, inMemoryOnDriver) = run(chain)
+      val (loop, loopJobs, loopOnDriver) = run(chain :+ (0L -> 2L))
       assert(inMemory == expected && loop == expected)
-      assert(inMemoryJobs < loopJobs, s"in-memory $inMemoryJobs jobs, loop $loopJobs jobs")
+      assert(inMemoryOnDriver && !loopOnDriver)
+      assert(inMemoryJobs <= 1 && inMemoryJobs < loopJobs, s"in-memory $inMemoryJobs jobs, loop $loopJobs jobs")
     }
   }
 
@@ -492,6 +519,20 @@ class DedupSpec extends AnyFunSuite {
     assert(r.size == 3)
   }
 
+  test("ngramJaccardPairs: a doc_id listed twice pairs through its shorter set, on both paths") {
+    // doc 1's second row is doc 2's text. Its merged prefix is sized by its
+    // shorter set (5 shingles), not by both (25), whose prefix would hold
+    // none of the 5 shared shingles and miss the pair.
+    val long = (1 to 23).map(i => s"w$i").mkString(" ")
+    val short = "a b c d e f g h"
+    val docs = Seq((1L, long), (1L, short), (2L, short)).toDF("doc_id", "text")
+    for (threshold <- Seq(defaultBroadcastThreshold, "-1")) withBroadcastThreshold(threshold) {
+      val r = Dedup.ngramJaccardPairs(docs, n = 4, threshold = 0.8)
+        .collect().map(x => (x.getLong(0), x.getLong(1), x.getDouble(2))).toSeq
+      assert(r == Seq((1L, 2L, 1.0)), s"broadcast threshold $threshold")
+    }
+  }
+
   test("keepBestInCluster elects max quality, ties to min doc_id") {
     // clusters: {0,1,2} (qualities 5,9,9 -> best is doc 1), {3} singleton,
     // {4,5} (qualities 7,7 -> tie, best is doc 4)
@@ -529,11 +570,15 @@ class DedupSpec extends AnyFunSuite {
       s"no SortAggregate may remain in:\n$cutPlan")
     val labels = Seq((0L, 0L), (1L, 0L), (2L, 2L)).toDF("doc_id", "cluster_id")
     val quality = Seq((0L, 5L), (1L, 9L), (2L, 1L)).toDF("doc_id", "quality")
-    val bestPlan = Dedup.keepBestInCluster(labels, quality)
-      .queryExecution.executedPlan.toString
+    // the keep-best aggregates exist on its distributed path only, which -1
+    // selects; under the default threshold the election is a local relation
+    val bestPlan = withBroadcastThreshold("-1") {
+      Dedup.keepBestInCluster(labels, quality).queryExecution.executedPlan.toString
+    }
     assert(bestPlan.contains("HashAggregate"), s"expected HashAggregate in:\n$bestPlan")
     assert(!bestPlan.contains("SortAggregate"),
       s"no SortAggregate may remain in:\n$bestPlan")
+    assert(onDriver(Dedup.keepBestInCluster(labels, quality)))
   }
 
   test("keepBestInCluster keeps unscored docs: null quality never wins, all-null falls back") {
@@ -554,6 +599,97 @@ class DedupSpec extends AnyFunSuite {
     assert(r(2L) == ((None, false))) // missing row -> annotated, not elected
     assert(r(5L) == ((None, true))) // singleton cluster, unscored: kept
     assert(r(6L) == ((None, true)) && r(7L) == ((None, false))) // all-null fallback
+  }
+
+  private val labelSchema = StructType(Seq(
+    StructField("doc_id", LongType, nullable = true),
+    StructField("cluster_id", LongType, nullable = true)))
+
+  private val scoreSchema = StructType(Seq(
+    StructField("doc_id", LongType, nullable = true),
+    StructField("quality", DoubleType, nullable = true)))
+
+  // (doc_id, cluster_id) label rows and (doc_id, quality) rows: random
+  // clusters over docs 1..n with about one doc in five unscored and
+  // qualities drawn with ties from {NaN, -0.0, 0.0, 1.0, 2.5, null}; and in
+  // every case a null doc_id in both tables, a null cluster_id, a doc_id
+  // listed twice in each table, an all-unscored cluster, a cluster whose
+  // NaN beats 2.5, and one whose -0.0 ties 0.0 (the lower doc_id wins)
+  private val keepBestCases: Gen[(Seq[Row], Seq[Row])] = for {
+    n <- Gen.choose(5, 40)
+    seed <- Gen.long
+  } yield {
+    val rnd = new scala.util.Random(seed)
+    val qualities = Seq[java.lang.Double](Double.NaN, -0.0, 0.0, 1.0, 2.5, null)
+    def quality() = qualities(rnd.nextInt(qualities.size))
+    val labels = (1L to n).map(d => Row(d, 1L + rnd.nextInt(1 + n / 3))) ++ Seq(
+      Row(null, 1L), Row(2L, null), Row(3L, 2L),
+      Row(100L, 100L), Row(101L, 100L),
+      Row(200L, 200L), Row(201L, 200L),
+      Row(300L, 300L), Row(301L, 300L), Row(302L, 300L))
+    val scores = (1L to n).filter(_ => rnd.nextInt(5) != 0).map(d => Row(d, quality())) ++ Seq(
+      Row(null, 9.0), Row(4L, quality()), Row(4L, quality()),
+      Row(100L, null),
+      Row(200L, 2.5), Row(201L, Double.NaN),
+      Row(301L, -0.0), Row(302L, 0.0))
+    (rnd.shuffle(labels), rnd.shuffle(scores))
+  }
+
+  /** `df`'s rows as a multiset of strings, doubles by their bits. */
+  private def rowBag(df: DataFrame): Map[String, Int] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case d: Double => s"double ${java.lang.Double.doubleToLongBits(d)}"
+      case x => String.valueOf(x)
+    }.mkString(", ")).groupBy(identity).map { case (k, v) => k -> v.size }
+
+  test("keepBestInCluster: the driver election equals the distributed one on 1 and 7 partitions (property)") {
+    val prop = Prop.forAllNoShrink(keepBestCases) { case (labelRows, scoreRows) =>
+      val bad = for {
+        parts <- Seq(1, 7)
+        labels = spark.createDataFrame(java.util.Arrays.asList(labelRows: _*), labelSchema).repartition(parts)
+        scores = spark.createDataFrame(java.util.Arrays.asList(scoreRows: _*), scoreSchema).repartition(parts)
+        // the default threshold takes the driver path, -1 the distributed one
+        Seq(driver, distributed) = Seq(defaultBroadcastThreshold, "-1").map { bound =>
+          withBroadcastThreshold(bound) {
+            val kept = Dedup.keepBestInCluster(labels, scores)
+            (onDriver(kept), kept.schema, rowBag(kept))
+          }
+        }
+        if !driver._1 || distributed._1 || driver._2 != distributed._2 || driver._3 != distributed._3
+      } yield s"$parts partitions: driver path $driver, distributed path $distributed"
+      Prop(bad.isEmpty) :| bad.take(1).mkString("\n")
+    }
+    val res = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(8).withInitialSeed(Seed(20261022L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    // the fixed cases' winners, on the driver path
+    val (labelRows, scoreRows) = keepBestCases.pureApply(Gen.Parameters.default, Seed(20261022L))
+    val kept = Dedup.keepBestInCluster(
+        spark.createDataFrame(java.util.Arrays.asList(labelRows: _*), labelSchema),
+        spark.createDataFrame(java.util.Arrays.asList(scoreRows: _*), scoreSchema))
+      .filter(col("cluster_id") >= 100).filter(col("keep")).collect().map(_.getLong(0)).toSet
+    assert(kept == Set(100L, 201L, 301L), kept)
+  }
+
+  test("keepBestInCluster: label and quality rows up to threshold / 32 elect on the driver, more run the plan") {
+    // 3 label rows and 3 quality rows are 6 rows of 32 bytes, 192 bytes
+    val labels = Seq((0L, 0L), (1L, 0L), (2L, 2L)).toDF("doc_id", "cluster_id")
+    val quality = Seq((0L, 5L), (1L, 9L), (2L, 1L)).toDF("doc_id", "quality")
+    def run(bytes: Int): (Set[(Long, Boolean)], Int, Boolean) = withBroadcastThreshold(bytes.toString) {
+      var kept: DataFrame = null
+      var got = Set.empty[(Long, Boolean)]
+      val jobs = jobsStarted {
+        kept = Dedup.keepBestInCluster(labels, quality)
+        got = kept.collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("keep")).toSet
+      }
+      (got, jobs, onDriver(kept))
+    }
+    val expected = Set(0L -> false, 1L -> true, 2L -> true)
+    val (atBound, atBoundJobs, atBoundOnDriver) = run(192)
+    val (overBound, overBoundJobs, overBoundOnDriver) = run(191)
+    assert(atBound == expected && overBound == expected)
+    assert(atBoundOnDriver && !overBoundOnDriver)
+    assert(atBoundJobs <= 1 && atBoundJobs < overBoundJobs, s"driver $atBoundJobs jobs, plan $overBoundJobs jobs")
   }
 
   test("label-free LSH embedding dedup covers the label-blocked pairs") {
